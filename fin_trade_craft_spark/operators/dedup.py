@@ -204,24 +204,90 @@ def exact_jaccard_pairs(
     return out.filter(F.col("jaccard") >= min_jaccard)
 
 
-def connected_components(
-    pairs: DataFrame, max_iters: int = 50, algorithm: str = "star"
-) -> DataFrame:
+# Driver bytes per oriented edge: two 8-byte node ids.
+_EDGE_BYTES = 16
+
+
+def _driver_edge_bound(spark) -> int:
+    """Largest edge count solved on the driver: the session's
+    broadcast threshold (the size Spark already collects to the
+    driver to broadcast) over ``_EDGE_BYTES``. ``-1`` when broadcasts
+    are off, which turns the driver path off too."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return threshold // _EDGE_BYTES if threshold >= 0 else -1
+
+
+def _require_rounds(max_iters: int) -> None:
+    if max_iters < 1:
+        raise ValueError(f"connected_components needs max_iters >= 1, got {max_iters}")
+
+
+def _oriented_edges(pairs: DataFrame) -> DataFrame:
+    """The distinct (src ≥ dst) edge set, self-pairs kept, checkpointed
+    once: both component paths and the self-pair singletons read it."""
+    return (
+        pairs.dropna(subset=["d1", "d2"])
+        .select(F.greatest("d1", "d2").alias("src"), F.least("d1", "d2").alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components over a near-dup pair graph — turns
     pairwise matches into dedup CLUSTERS (cluster id = min doc id
-    reachable). Input: (d1, d2) edges. Output: (doc_id, cluster_id).
+    reachable). Input: (d1, d2) edges. Output: (doc_id, cluster_id);
+    a node whose only edges are self-pairs is its own cluster.
 
-    Default ``algorithm="star"`` is alternating large-star /
-    small-star contraction (:func:`connected_components_star`),
-    which converges in O(log n) rounds regardless of component
-    DIAMETER; ``"minlabel"`` keeps the r0x min-label propagation
-    (:func:`connected_components_minlabel`, rounds = diameter) as
-    the differential twin — both produce identical labels
-    (tests/test_dedup_clusters.py pins star ≡ minlabel ≡ a driver
-    union-find on adversarial shapes)."""
-    if algorithm == "star":
-        return connected_components_star(pairs, max_iters)
-    return connected_components_minlabel(pairs, max_iters)
+    The oriented edge set is checkpointed once, then at most
+    ``bound + 1`` rows of it are fetched in one job. A graph within
+    the bound (:func:`_driver_edge_bound`) is solved on the driver
+    (:func:`_components_on_driver`); a larger one goes to the star
+    contraction loop (:func:`connected_components_star`), whose every
+    round costs several jobs however small the graph."""
+    _require_rounds(max_iters)
+    edges = _oriented_edges(pairs)
+    spark = pairs.sparkSession
+    bound = _driver_edge_bound(spark)
+    if bound >= 0:
+        table = edges.limit(bound + 1).toArrow()
+        if table.num_rows <= bound:
+            return _components_on_driver(spark, table, edges.schema["src"].dataType)
+    return _star_rounds(edges, max_iters)
+
+
+def _components_on_driver(spark, table, id_type) -> DataFrame:
+    """Vectorized union-find over an Arrow (src, dst) edge table.
+    Nodes are indexed in id order, so the smaller root is the smaller
+    id: every round hooks each cross-tree edge's larger root onto the
+    smaller one (``np.minimum.at``), then pointer-jumps every node to
+    its root. Each tree merges with at least one neighbour per round,
+    so rounds are O(log n), and each root ends as its component's
+    minimum — the star path's min-id labels."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    src = table.column("src").to_numpy()
+    dst = table.column("dst").to_numpy()
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = idx[: len(src)], idx[len(src):]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return spark.createDataFrame(
+        pa.table({"doc_id": nodes, "cluster_id": nodes[parent]}),
+        StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)]),
+    )
 
 
 def connected_components_star(
@@ -229,16 +295,12 @@ def connected_components_star(
 ) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the scale-true default: each round is two
-    edge-linear passes (a per-node min aggregate + an edge join),
-    and the edge set contracts toward per-component STARS rooted at
-    the component's min node in O(log n) rounds. Min-label
-    propagation (the previous default, kept as the differential
-    twin) needs rounds = component DIAMETER — fine for shallow
-    near-dup clusters but a pathological chain component (templated
-    doc series A~B~C~…) makes it O(chain length) full-graph passes
-    (the r05 verdict's scale debt #2; the planted-chain test pins
-    star's round count at ≤ 2·⌈log₂ n⌉ where minlabel needs n−1).
+    SoCC'14) — the path for graphs too large for the driver: each
+    round is two edge-linear passes (a per-node min aggregate + an
+    edge join), and the edge set contracts toward per-component
+    STARS rooted at the component's min node in O(log n) rounds,
+    regardless of component DIAMETER (the planted-chain test pins
+    the round count at ≤ 2·⌈log₂ n⌉).
 
     Per round, on the undirected edge view of the current edge set:
 
@@ -271,21 +333,20 @@ def connected_components_star(
     the orientation invariant, and connectivity preservation makes
     each star a whole component. Both violations are probed in ONE
     ``limit(1)`` job per round (union of the two violation frames);
-    each round ``localCheckpoint``s to cut lineage, same as the
-    minlabel twin.
+    each round ``localCheckpoint``s to cut lineage.
 
     Skew note: a hub's edges group onto one key in the min
     aggregate — a partial-aggregating hash shuffle of (node, min)
     partials, NOT a fan-out; the join side re-emits each edge
     exactly once. No step materializes a neighborhood list."""
-    edges = (
-        pairs.filter(F.col("d1") != F.col("d2"))
-        .select(
-            F.greatest("d1", "d2").alias("src"), F.least("d1", "d2").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    _require_rounds(max_iters)
+    return _star_rounds(_oriented_edges(pairs), max_iters, stats)
+
+
+def _star_rounds(oriented: DataFrame, max_iters: int, stats: dict | None = None) -> DataFrame:
+    """The star loop of :func:`connected_components_star` over a
+    checkpointed :func:`_oriented_edges` frame."""
+    edges = oriented.filter(F.col("src") != F.col("dst"))
 
     def _large_star(e: DataFrame) -> DataFrame:
         und = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -320,8 +381,6 @@ def connected_components_star(
     # ONLY mislabels flat-but-multi-parent states as converged — the
     # r06 advisor's corruption repro — so both violations are probed
     # together.
-    if max_iters < 1:
-        raise ValueError(f"connected_components_star needs max_iters >= 1, got {max_iters}")
     rounds = 0
     not_fixed = 1
     for _ in range(max_iters):
@@ -375,77 +434,16 @@ def connected_components_star(
         "cluster_id", F.col("doc_id")
     )
     labels = children.unionByName(roots).distinct()
-    # nodes whose ONLY edges were self-pairs were dropped by the
-    # orientation filter; the minlabel twin labels them as
-    # singletons — match it (left-anti keeps the main path untouched
-    # when, as in every in-repo caller, no self-pairs exist)
+    # nodes whose ONLY edges are self-pairs are singletons (left-anti
+    # keeps the main path untouched when, as in every in-repo caller,
+    # no self-pairs exist)
     selfs = (
-        pairs.filter(F.col("d1") == F.col("d2"))
-        .select(F.col("d1").alias("doc_id"))
-        .distinct()
+        oriented.filter(F.col("src") == F.col("dst"))
+        .select(F.col("src").alias("doc_id"))
         .join(labels, "doc_id", "left_anti")
         .withColumn("cluster_id", F.col("doc_id"))
     )
     return labels.unionByName(selfs)
-
-
-def connected_components_minlabel(
-    pairs: DataFrame, max_iters: int = 50, stats: dict | None = None
-) -> DataFrame:
-    """Min-label propagation connected components — the
-    diameter-bound differential twin of
-    :func:`connected_components_star` (see its docstring for when
-    each wins; a component whose diameter exceeds ``max_iters``
-    would return UNCONVERGED labels here, which is why star is the
-    default). Each iteration every node takes the min of its own
-    label and its neighbors' labels; converged when no label
-    changes. Iterations = graph diameter — near-dup clusters are
-    shallow, so the loop is a handful of joins, each a plain
-    shuffle; ``localCheckpoint`` per round cuts the exponential
-    lineage. The driver-side part is ONE small count per iteration
-    (the convergence check), never data."""
-    edges = (
-        pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-        .union(pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def minhash_signatures(shingle_sets: DataFrame, id_col: str = "doc_id", num_perm: int = 8) -> DataFrame:

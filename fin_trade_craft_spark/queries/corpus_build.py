@@ -149,7 +149,7 @@ def corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per action (measured ~6s of the r09-interim 9s action at
     # sf0.1). eager=False keeps that cut but folds the five
     # construction materialization jobs into the first consumer (the
-    # stage-3 component loop's opening action): 78 → 73 jobs per warm
+    # stage-3 components' edge checkpoint): 78 → 73 jobs per warm
     # pass, same materialize-once guarantee (a lazy localCheckpoint
     # persists at its first computation; later actions read it — the
     # r09 pathology was the absence of any checkpoint, not laziness).
@@ -206,11 +206,9 @@ def corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # but over the restricted edge frame only: edge-sized work, no
     # kernel re-execution.
     sedges_full = _sem_state(spark, sf_dir)["edges"]
-    sedges = (
-        sedges_full.join(s2.select(F.col("doc_id").alias("d1")), "d1", "left_semi")
-        .join(s2.select(F.col("doc_id").alias("d2")), "d2", "left_semi")
-        .localCheckpoint(eager=False)
-    )
+    sedges = sedges_full.join(
+        s2.select(F.col("doc_id").alias("d1")), "d1", "left_semi"
+    ).join(s2.select(F.col("doc_id").alias("d2")), "d2", "left_semi")
     scc = D.connected_components(sedges)
     sem_drop = (
         scc.filter(F.col("doc_id") != F.col("cluster_id"))

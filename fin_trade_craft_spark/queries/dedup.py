@@ -59,7 +59,7 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # construction-time jobs (the plan lint's invariant); the component
 # frame is built on first request by a CC consumer, whose
 # construction is already on the lint's exemption list (the
-# star-contraction convergence probes are jobs by design). The memo
+# component edge checkpoint and fetch are jobs by design). The memo
 # frames are registered via pinning.mark_session_owned, so no query
 # result's GC ever releases them: the caches belong to the session,
 # not to any one query result.
@@ -103,10 +103,10 @@ def _lsh_state(spark: SparkSession, sf_dir: str) -> dict:
 
 def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized connected components over the full-corpus verified
-    pair graph — ONE star-contraction loop per (session, dataset)
-    instead of one per consumer. Construction launches jobs (the
-    per-round convergence probe); every caller is on the plan lint's
-    CONSTRUCTION_JOBS_ALLOWED list."""
+    pair graph — ONE component solve per (session, dataset) instead
+    of one per consumer. Construction launches jobs (the edge
+    checkpoint and its driver fetch); every caller is on the plan
+    lint's CONSTRUCTION_JOBS_ALLOWED list."""
     st = _lsh_state(spark, sf_dir)
     if st["cc"] is None:
         st["cc"] = D.connected_components(st["pairs"]).persist()

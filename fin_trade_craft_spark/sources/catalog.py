@@ -170,8 +170,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The schema is passed EXPLICITLY (from the driver-side footer
     cache, :func:`table_schema`) so constructing the scan launches no
     schema-inference job — plan building stays job-free, which the
-    plan lint and the construction-purity lint
-    (tests/test_construction_purity.py) rely on.
+    construction lint
+    (tests/test_plan_lint.py::test_construction_launches_no_jobs)
+    relies on.
 
     ``events.ts`` has been written by the driver as either parquet
     TIMESTAMP(NANOS) (which Spark's vectorized reader rejects — read

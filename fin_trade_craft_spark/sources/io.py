@@ -139,14 +139,15 @@ class TableIO:
     def replace_where(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         """Partition replace (S8): overwrite ONLY the partitions
         present in ``df`` — the delete-symbol-then-insert idiom.
-        Requires the table to be partitioned by ``partition_by``."""
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        old = self.spark.conf.get(conf, "static")
-        self.spark.conf.set(conf, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(self.path(table))
-        finally:
-            self.spark.conf.set(conf, old)
+        Requires the table to be partitioned by ``partition_by``. The
+        dynamic overwrite mode is a writer option, so the session conf
+        is never touched."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by)
+            .parquet(self.path(table))
+        )
 
     def _tmp_path(self, table: str) -> str:
         import uuid

@@ -43,8 +43,9 @@ def test_exact_tier_guards_refuse_corpus_sized_inputs(spark):
         F.col("id").alias("doc_id"),
         F.array(F.lit("a b c"), F.lit("b c d")).alias("shingles"),
     )
-    # construction is job-free (asserted with a clean-session protocol
-    # in test_construction_purity.py); the refuse fires on action
+    # construction is job-free (asserted by
+    # test_plan_lint.py::test_construction_launches_no_jobs); the
+    # refuse fires on action
     over_budget = exact_jaccard_pairs(big_sets)
     with pytest.raises(Exception, match="lsh_candidate_pairs"):
         over_budget.count()

@@ -80,10 +80,14 @@ def test_replace_where_touches_only_matching_partitions(spark, io):
     df = spark.createDataFrame([(1, 10, "x"), (1, 11, "x"), (2, 20, "x")], "sym int, d int, v string")
     io.overwrite(df, "t/p", partition_by=["sym"])
     repl = spark.createDataFrame([(1, 99, "y")], "sym int, d int, v string")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
     io.replace_where(repl, "t/p", partition_by=["sym"])
     got = sorted((r.sym, r.d, r.v) for r in io.read("t/p").collect())
     # sym=1 fully replaced, sym=2 untouched
     assert got == [(1, 99, "y"), (2, 20, "x")]
+    # the dynamic mode is a writer option: the session conf is unchanged
+    assert spark.conf.get(conf) == before
 
 
 def test_warehouse_summary_report(spark, io):

@@ -184,8 +184,8 @@ CONSTRUCTION_JOBS_ALLOWED = {
     "jl_distortion_audit": "query-matrix collect (probe set)",
     "ivf_pq_search": "trains both quantizers + query-matrix collect",
     "pq_tier_recall": "trains both quantizers + query-matrix collect",
-    "dedup_clusters": "star-contraction rounds probe convergence",
-    "leakage_safe_split": "star-contraction rounds probe convergence",
+    "dedup_clusters": "component edge checkpoint + driver edge fetch",
+    "leakage_safe_split": "component edge checkpoint + driver edge fetch",
     "bpe_convergent_merges": "per-round argmax convergence probe (1-row collect)",
     # --- r12: the temperature-mixture pow chain is computed driver-
     # side (JVM Math.pow diverges 1 ulp from the libm pow DuckDB and
@@ -194,7 +194,7 @@ CONSTRUCTION_JOBS_ALLOWED = {
     # one row per corpus source by contract.
     "source_mixture_weights": "per-source totals collect (pow chain on driver)",
     "mixture_epoch_expansion": "per-source totals collect (pow chain on driver)",
-    "corpus_build": "dedup-ladder capstone: two component loops + codebook training",
+    "corpus_build": "dedup-ladder capstone: two component edge checkpoints + driver edge fetches + codebook training",
     "corpus_build_ingest": "prior-manifest component loops + probe-kernel stage checkpoints",
     "corpus_build_ingest_stored": "one-time index publish (the initial build) + batch stage checkpoints + codebook load",
     "pagerank_copurchase": "per-iteration lineage cut (localCheckpoint)",
