@@ -7,9 +7,10 @@ features + 20 ``target_*`` columns.
 Execution shape (100 TB stance): ONE shuffle on ``symbol_id``
 serves everything — the EWM pandas island runs partition-batched
 (``operators.ewm.grouped_map``: repartition on symbol_id +
-``mapInPandas``, per-group loop in pandas) and every subsequent
-window reuses that clustering; all non-recurrent features are JVM
-window expressions inside whole-stage codegen. The reference instead loops
+``mapInPandas``, one grouped-pandas kernel per frame of whole
+symbols) and every subsequent window reuses that clustering; all
+non-recurrent features are JVM window expressions inside
+whole-stage codegen. The reference instead loops
 symbols in Python under multiprocessing (`:755-791`) — here that
 parallelism is task scheduling.
 
@@ -41,6 +42,17 @@ ATR_PERIODS = (10, 14)
 TARGET_HORIZONS = (5, 10, 20, 30, 40)
 
 
+def signal_partitions(spark) -> int:
+    """Width of the symbol-partitioned bar and feature frames: a
+    quarter of the session's parallelism. The pipeline fans out into
+    ~40 window stages over the persisted feature frame, whose
+    partitioning bypasses AQE coalescing; at fixture scale (150
+    symbols, ~4k bars) full-parallelism partitioning means 4x task
+    overhead for no gain (measured 45s → 13s). At production scale
+    the symbol_bucket layout (SCALING.md) governs this instead."""
+    return max(1, spark.sparkContext.defaultParallelism // 4)
+
+
 def _ewm_island_schema(df: DataFrame) -> StructType:
     feats = [f"ohlcv_ema_{n}" for n in EMA_PERIODS]
     feats += ["ohlcv_macd", "ohlcv_macd_signal", "ohlcv_macd_histogram"]
@@ -49,57 +61,18 @@ def _ewm_island_schema(df: DataFrame) -> StructType:
     return StructType(list(df.schema.fields) + [StructField(f, DoubleType()) for f in feats])
 
 
-def _ewm_island_group_fn(schema, order: str):
-    """The per-group definitional kernel (reference semantics: plain
-    ``Series.ewm`` per symbol, `:189-202`). Kept as the parity
-    reference for :func:`_ewm_island_batch_fn` — the production path
-    — and exercised by tests/test_ewm.py's batch≡per-group
-    differential."""
+def _ewm_island_kernel(schema, order: str):
+    """The island kernel: every EWM-family recurrence for all the
+    symbols of one frame, through pandas' GROUPED window C kernels.
+    ``groupby().ewm()`` evaluates the same cython ``ewma`` kernel per
+    group slice that ``Series.ewm`` runs per series, so the results
+    are bit-identical to the reference's per-symbol ``Series.ewm``
+    (`:189-202`; pinned by the tests/test_ewm.py differential) at
+    ~25 grouped C calls per frame instead of ~40 pandas calls per
+    symbol. Alignment contract: the frame is sorted by (key, order),
+    so groupby(sort=False) window results come back in frame order."""
 
-    def fn(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        close = pdf["close"].astype(float)
-        for n in EMA_PERIODS:
-            pdf[f"ohlcv_ema_{n}"] = close.ewm(span=n).mean()
-        macd = close.ewm(span=12).mean() - close.ewm(span=26).mean()
-        sig = macd.ewm(span=9).mean()
-        pdf["ohlcv_macd"] = macd
-        pdf["ohlcv_macd_signal"] = sig
-        pdf["ohlcv_macd_histogram"] = macd - sig
-        delta = close.diff()
-        for n in RSI_PERIODS:
-            avg_gain = delta.clip(lower=0).ewm(alpha=1.0 / n, min_periods=n).mean()
-            avg_loss = (-delta).clip(lower=0).ewm(alpha=1.0 / n, min_periods=n).mean()
-            pdf[f"ohlcv_rsi_{n}"] = 100.0 - 100.0 / (1.0 + avg_gain / avg_loss)
-        high, low = pdf["high"].astype(float), pdf["low"].astype(float)
-        prev_close = close.shift(1)
-        tr = pd.concat(
-            [high - low, (high - prev_close).abs(), (low - prev_close).abs()], axis=1
-        ).max(axis=1)
-        for n in ATR_PERIODS:
-            pdf[f"ohlcv_atr_{n}"] = tr.ewm(alpha=1.0 / n, min_periods=n).mean()
-        return pdf[[f.name for f in schema.fields]]
-
-    return fn
-
-
-def _ewm_island_batch_fn(schema, order: str):
-    """Whole-batch island kernel (r12, guide §4.2): identical math
-    through pandas' GROUPED window C kernels — ``groupby().ewm()``
-    evaluates the same cython ``ewma`` kernel per group slice that
-    ``Series.ewm`` runs per series, so results are bit-identical to
-    the per-group reference by construction (proven on real sf0.1
-    bars: 13/13 columns bitwise-equal, and pinned by the
-    tests/test_ewm.py differential). The win is overhead, not math:
-    the per-group loop paid ~40 pandas calls per 27-row group
-    (~9 ms/group, 13.4 s single-threaded at sf0.1); this path makes
-    ~25 grouped C calls per BATCH (0.4 s — 34x). Alignment contract:
-    the frame is pre-sorted by (key, order), so groupby(sort=False)
-    window results come back in frame order."""
-
-    def batch(pdf):
+    def kernel(pdf):
         import pandas as pd
 
         pdf = pdf.sort_values(
@@ -146,23 +119,17 @@ def _ewm_island_batch_fn(schema, order: str):
             pdf[f"ohlcv_atr_{n}"] = gewm("__tr", alpha=1.0 / n, min_periods=n)
         return pdf[[f.name for f in schema.fields]]
 
-    return batch
+    return kernel
 
 
 def _ewm_island(df: DataFrame, order: str) -> DataFrame:
-    """One pandas pass per symbol for every EWM-family recurrence
-    (SURVEY W2/W3/W4/W6) — EMA, MACD, Wilder RSI, ATR."""
+    """One pandas island for every EWM-family recurrence (SURVEY
+    W2/W3/W4/W6) — EMA, MACD, Wilder RSI, ATR."""
     schema = _ewm_island_schema(df)
 
     from ..operators.ewm import grouped_map
 
-    return grouped_map(
-        df,
-        "symbol_id",
-        _ewm_island_group_fn(schema, order),
-        schema,
-        batch_fn=_ewm_island_batch_fn(schema, order),
-    )
+    return grouped_map(df, "symbol_id", _ewm_island_kernel(schema, order), schema)
 
 
 def compute_indicators(ohlcv: DataFrame) -> DataFrame:
@@ -174,22 +141,14 @@ def compute_indicators(ohlcv: DataFrame) -> DataFrame:
     # mapInPandas reports UnknownPartitioning, so EnsureRequirements
     # would insert this exact exchange anyway (at
     # spark.sql.shuffle.partitions wide, or AQE-coalesced). Making it
-    # explicit pins the window-stage width to the documented
-    # signals-partitions conf (scale-adaptive: defaultParallelism/4
-    # locally, symbol_bucket layout at production scale — see
-    # market_bars) and keeps the width deterministic when a consumer
-    # executes this lineage with AQE disabled (all_signals' eager
-    # checkpoint, which needs AQE off so the checkpoint preserves
-    # this partitioning — see trading_signals.all_signals). The
-    # shuffle count is unchanged either way; only its width is pinned.
-    spark = ohlcv.sparkSession
-    n_parts = int(
-        spark.conf.get(
-            "spark.fin_trade_craft.signals.partitions",
-            str(max(1, spark.sparkContext.defaultParallelism // 4)),
-        )
-    )
-    df = df.repartition(n_parts, "symbol_id")
+    # explicit pins the window-stage width to signal_partitions (the
+    # width market_bars uses) and keeps the width deterministic when
+    # a consumer executes this lineage with AQE disabled (all_signals'
+    # eager checkpoint, which needs AQE off so the checkpoint
+    # preserves this partitioning — see trading_signals.all_signals).
+    # The shuffle count is unchanged either way; only its width is
+    # pinned.
+    df = df.repartition(signal_partitions(ohlcv.sparkSession), "symbol_id")
     close, volume = F.col("close"), F.col("volume")
 
     def frame(n):

@@ -3,7 +3,9 @@
 reference lines cited below). The reference evaluates each strategy
 with an O(n) Python loop per symbol; here every strategy is a
 window expression over the feature frame, evaluated for all symbols
-in one pass.
+in one pass. Nine lag-based / stateless strategies share one fused
+window pass (``_fused_lag_signals``); ``price_breakout`` and
+``rsi_divergence`` keep their own plans.
 
 Faithful semantics notes:
 - Each strategy first drops rows with nulls in ITS required columns
@@ -17,8 +19,6 @@ Faithful semantics notes:
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -45,105 +45,6 @@ def _emit(df: DataFrame, strategy: str, buy: Column, sell: Column, strength: Col
 
 def _dropna(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.na.drop(subset=cols)
-
-
-def ema_crossover(feat: DataFrame) -> DataFrame:
-    """`:221-267` — EMA8×EMA21 cross; strength=min(100,|Δ|/ema21·100)."""
-    d = _dropna(feat, ["ohlcv_ema_8", "ohlcv_ema_21"])
-    w = _w()
-    e8, e21 = F.col("ohlcv_ema_8"), F.col("ohlcv_ema_21")
-    p8, p21 = F.lag(e8).over(w), F.lag(e21).over(w)
-    buy = (p8 <= p21) & (e8 > e21)
-    sell = (p8 >= p21) & (e8 < e21)
-    strength = F.least(F.lit(100.0), F.abs(e8 - e21) / e21 * 100)
-    return _emit(d, "ema_crossover", buy, sell, strength)
-
-
-def rsi_mean_reversion(feat: DataFrame) -> DataFrame:
-    """`:269-313` — RSI14 crosses 30↑ / 70↓."""
-    d = _dropna(feat, ["ohlcv_rsi_14"])
-    w = _w()
-    rsi, prev = F.col("ohlcv_rsi_14"), F.lag("ohlcv_rsi_14").over(w)
-    buy = (prev <= 30) & (rsi > 30)
-    sell = (prev >= 70) & (rsi < 70)
-    strength = F.when(buy, rsi).otherwise(100 - rsi)
-    return _emit(d, "rsi_mean_reversion", buy, sell, strength)
-
-
-def rsi_crossing(feat: DataFrame) -> DataFrame:
-    """`:315-384` — zone-confirmed crossing (see operators.signals.
-    zone_confirmation_signals for the de-stating proof)."""
-    from ..operators.signals import zone_confirmation_signals
-
-    d = _dropna(feat, ["ohlcv_rsi_14"])
-    buy, sell = zone_confirmation_signals(F.col("ohlcv_rsi_14"), _w())
-    rsi = F.col("ohlcv_rsi_14")
-    strength = F.when(buy, rsi).otherwise(100 - rsi)
-    return _emit(d, "rsi_crossing", buy, sell, strength)
-
-
-def macd_histogram_reversal(feat: DataFrame) -> DataFrame:
-    """`:386-430` — histogram zero-cross; strength=min(100,|hist|·10)."""
-    d = _dropna(feat, ["ohlcv_macd_histogram"])
-    w = _w()
-    h, ph = F.col("ohlcv_macd_histogram"), F.lag("ohlcv_macd_histogram").over(w)
-    buy = (ph <= 0) & (h > 0)
-    sell = (ph >= 0) & (h < 0)
-    strength = F.least(F.lit(100.0), F.abs(h) * 10)
-    return _emit(d, "macd_histogram_reversal", buy, sell, strength)
-
-
-def bollinger_breakout(feat: DataFrame) -> DataFrame:
-    """`:432-481` — close breaks above upper / below lower band."""
-    d = _dropna(feat, ["close", "ohlcv_bb_upper", "ohlcv_bb_lower"])
-    w = _w()
-    c, u, lo = F.col("close"), F.col("ohlcv_bb_upper"), F.col("ohlcv_bb_lower")
-    pc, pu, pl = F.lag(c).over(w), F.lag(u).over(w), F.lag(lo).over(w)
-    buy = (pc <= pu) & (c > u)
-    sell = (pc >= pl) & (c < lo)
-    strength = F.when(buy, F.least(F.lit(100.0), (c - u) / u * 100)).otherwise(
-        F.least(F.lit(100.0), (lo - c) / lo * 100)
-    )
-    return _emit(d, "bollinger_breakout", buy, sell, strength)
-
-
-def volume_spike(feat: DataFrame) -> DataFrame:
-    """`:483-536` — volume > 2×SMA20 with ±2% price move. Zero-avg
-    rows can't fire (null-safe division) but still serve as the
-    prev row for the next bar, matching the reference's
-    ``continue``."""
-    d = _dropna(feat, ["close", "volume", "ohlcv_volume_sma_20"])
-    w = _w()
-    vr = F.col("volume") / F.col("ohlcv_volume_sma_20")
-    chg = (F.col("close") - F.lag("close").over(w)) / F.lag("close").over(w) * 100
-    buy = (vr > 2.0) & (chg > 2.0)
-    sell = (vr > 2.0) & (chg < -2.0)
-    strength = F.least(F.lit(100.0), vr * 10)
-    return _emit(d, "volume_spike", buy, sell, strength)
-
-
-def williams_extremes(feat: DataFrame) -> DataFrame:
-    """`:538-582` — %R crosses −80↑ / −20↓; strength=min(100,|%R+50|·2)."""
-    d = _dropna(feat, ["ohlcv_willr_14"])
-    w = _w()
-    r, pr = F.col("ohlcv_willr_14"), F.lag("ohlcv_willr_14").over(w)
-    buy = (pr <= -80) & (r > -80)
-    sell = (pr >= -20) & (r < -20)
-    strength = F.least(F.lit(100.0), F.abs(r + 50) * 2)
-    return _emit(d, "williams_extremes", buy, sell, strength)
-
-
-def ma_ribbon(feat: DataFrame) -> DataFrame:
-    """`:584-629` — stateless full alignment close>sma5>10>20>50."""
-    d = _dropna(feat, ["close", "ohlcv_sma_5", "ohlcv_sma_10", "ohlcv_sma_20", "ohlcv_sma_50"])
-    c = F.col("close")
-    s5, s10, s20, s50 = (F.col(f"ohlcv_sma_{n}") for n in (5, 10, 20, 50))
-    buy = (c > s5) & (s5 > s10) & (s10 > s20) & (s20 > s50)
-    sell = (c < s5) & (s5 < s10) & (s10 < s20) & (s20 < s50)
-    strength = F.when(buy, F.least(F.lit(100.0), (c - s50) / s50 * 100)).otherwise(
-        F.least(F.lit(100.0), (s50 - c) / s50 * 100)
-    )
-    return _emit(d, "ma_ribbon", buy, sell, strength)
 
 
 def price_breakout(feat: DataFrame) -> DataFrame:
@@ -223,33 +124,21 @@ def rsi_divergence(feat: DataFrame) -> DataFrame:
     return buys.unionByName(sells).select(*_OUT)
 
 
-def trend_following(feat: DataFrame) -> DataFrame:
-    """`:754-799` — stateless close>sma50 & ema8>ema21 & rsi>50."""
-    d = _dropna(feat, ["close", "ohlcv_sma_50", "ohlcv_ema_8", "ohlcv_ema_21", "ohlcv_rsi_14"])
-    c, s50 = F.col("close"), F.col("ohlcv_sma_50")
-    e8, e21, rsi = F.col("ohlcv_ema_8"), F.col("ohlcv_ema_21"), F.col("ohlcv_rsi_14")
-    buy = (c > s50) & (e8 > e21) & (rsi > 50)
-    sell = (c < s50) & (e8 < e21) & (rsi < 50)
-    strength = F.when(buy, F.least(F.lit(100.0), rsi)).otherwise(F.least(F.lit(100.0), 100 - rsi))
-    return _emit(d, "trend_following", buy, sell, strength)
-
-
 def _fused_lag_signals(feat: DataFrame) -> DataFrame:
     """The nine lag-based / stateless strategies in ONE window pass +
-    ONE generate (r13, guide §3.3 "very wide unions produce enormous
-    plans" / §2.4): the 11-way union planned each strategy as its own
+    ONE generate ("very wide unions produce enormous plans"): an
+    11-way union plans each strategy as its own
     filter→Window→project branch over the checkpointed frame — 9
     structurally identical WindowExecs and ~50 KB of physical plan,
     whose driver-side planning/codegen (~2 s) and per-task
-    deserialization were fin_signals_pipeline's largest remaining
-    cost after r12 removed the branch shuffles. Here the shared frame
+    deserialization dominated fin_signals_pipeline. Here the shared frame
     is scanned ONCE: every strategy's lag is a masked running
     last-value in a single Window node, and the per-strategy
     emit/filter algebra becomes array(struct×9) → inline → filter.
 
-    Equivalence to the per-strategy reference functions (which remain
-    below as the definitional/spec surface, pinned by
-    tests/test_signals_golden.py):
+    Equivalence to the per-strategy reference functions (the
+    definitional surface, kept in tests/test_domain_signals.py, one
+    ``_dropna`` + ``lag`` + ``_emit`` plan per strategy):
 
     - Each reference strategy first drops rows with nulls in ITS
       required columns, then takes ``lag(col)`` over the REMAINING
@@ -333,7 +222,7 @@ def _fused_lag_signals(feat: DataFrame) -> DataFrame:
         )
 
     # raw buy/sell/strength expressions copied verbatim from the
-    # reference strategy functions below (same names, same order)
+    # per-strategy reference functions (same names, same order)
     vr = vol / vs20
     chg = (c - pcv) / pcv * 100
     rib_buy = (c > s5) & (s5 > s10) & (s10 > s20) & (s20 > s50)
@@ -413,38 +302,6 @@ def _fused_lag_signals(feat: DataFrame) -> DataFrame:
     return out.filter(F.col("buy_signal") | F.col("sell_signal")).select(*_OUT)
 
 
-# The set of strategies served by the fused single-pass plan above;
-# the per-strategy functions stay as the definitional reference
-# (golden-tested) and for callers that want one strategy.
-_FUSED = frozenset(
-    {
-        "ema_crossover",
-        "rsi_mean_reversion",
-        "rsi_crossing",
-        "macd_histogram_reversal",
-        "bollinger_breakout",
-        "volume_spike",
-        "williams_extremes",
-        "ma_ribbon",
-        "trend_following",
-    }
-)
-
-STRATEGIES = {
-    "ema_crossover": ema_crossover,
-    "rsi_mean_reversion": rsi_mean_reversion,
-    "rsi_crossing": rsi_crossing,
-    "macd_histogram_reversal": macd_histogram_reversal,
-    "bollinger_breakout": bollinger_breakout,
-    "volume_spike": volume_spike,
-    "williams_extremes": williams_extremes,
-    "ma_ribbon": ma_ribbon,
-    "price_breakout": price_breakout,
-    "rsi_divergence": rsi_divergence,
-    "trend_following": trend_following,
-}
-
-
 def all_signals(feat: DataFrame) -> DataFrame:
     """Every strategy over one feature frame, unioned — the
     ``transforms.trading_signals`` table.
@@ -506,7 +363,7 @@ def all_signals(feat: DataFrame) -> DataFrame:
     # metadata satisfies each branch's window requirements exactly:
     # 0 Exchanges, 0 Sorts (plans/r12/fin_signals_pipeline_after.txt).
     # The width AQE would have tuned is pinned instead by the explicit
-    # signals-partitions repartition inside compute_indicators. Values
+    # signal_partitions repartition inside compute_indicators. Values
     # are unchanged by construction — same rows, same per-key order —
     # and the end-to-end fin_signals_pipeline value oracle pins it.
     spark = feat.sparkSession
@@ -517,10 +374,12 @@ def all_signals(feat: DataFrame) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     # The nine lag-based/stateless strategies run as ONE fused window
-    # pass + inline-explode (r13 — see _fused_lag_signals: the 11-way
-    # union's per-branch planning/codegen was the pipeline's largest
-    # remaining cost); only the two structurally distinct strategies
-    # (price_breakout's two-stage rolling windows, rsi_divergence's
-    # pivot lattice) remain union branches.
-    others = (fn(feat) for name, fn in STRATEGIES.items() if name not in _FUSED)
-    return reduce(lambda a, b: a.unionByName(b), others, _fused_lag_signals(feat))
+    # pass + inline-explode (see _fused_lag_signals: an 11-way union
+    # pays per-branch planning/codegen); only the two structurally
+    # distinct strategies (price_breakout's two-stage rolling windows,
+    # rsi_divergence's pivot lattice) remain union branches.
+    return (
+        _fused_lag_signals(feat)
+        .unionByName(price_breakout(feat))
+        .unionByName(rsi_divergence(feat))
+    )

@@ -1,5 +1,6 @@
 """EWM-family indicators — the grouped pandas-UDF island (SURVEY
-§2.5 W2/W4, W3-Wilder, W6-ATR; §4.2 item 1).
+§2.5 W2/W4, W3-Wilder; §4.2 item 1). The pipeline's ATR (W6) is
+computed in the same island by ``domain/indicators.py``.
 
 These are the only reference operators whose numeric recurrences
 don't map to built-in window aggregates: pandas ``ewm(span=n)``
@@ -12,11 +13,10 @@ by construction, Arrow-batched, embarrassingly parallel across
 keys — via :func:`grouped_map` (partition-batched, not
 per-group-batched; see its docstring for why).
 
-Scale notes: state never crosses group keys, so 21k symbols → 21k
-independent pandas frames spread over however many partitions the
-session runs; the island schemas are narrow (key, order, value,
-features) to keep Arrow transfer small; everything before/after
-stays in whole-stage codegen.
+Scale notes: state never crosses group keys, so 21k symbols spread
+over however many partitions the session runs; the island schemas
+are narrow (key, order, value, features) to keep Arrow transfer
+small; everything before/after stays in whole-stage codegen.
 
 No DuckDB oracle exists for these by design (the driver records a
 rows-only check): an exact SQL formulation needs either unstable
@@ -38,82 +38,47 @@ def _out_schema(df: DataFrame, keep: list[str], feats: list[str]) -> StructType:
     return StructType(fields)
 
 
-def grouped_map(
-    df,
-    keys,
-    fn,
-    schema,
-    num_partitions: int | None = None,
-    max_rows_per_frame: int | None = 1_000_000,
-    batch_fn=None,
-) -> DataFrame:
-    """Per-group pandas transform without per-group Arrow overhead.
+# Memory guard of grouped_map: a frame handed to the kernel is cut at
+# the last complete group once the buffer passes this many rows.
+MAX_ROWS_PER_FRAME = 1_000_000
 
-    ``groupBy(key).applyInPandas`` pays one Arrow flush + Python
-    call per GROUP — ruinous for many small groups (1500 symbol
-    groups of ~70 rows: 4.6s vs 0.7s at sf0.1). This runs the same
-    per-group ``fn`` but ships data per PARTITION: hash-repartition
-    on the keys (each group lands wholly in one partition), sort
-    within partitions on the keys (groups become contiguous), stream
-    the partition through ``mapInPandas``, and do the group loop in
-    pandas.
 
-    Memory guard: the r04 shape concatenated a WHOLE partition into
-    one pandas frame — a skewed entity partition could OOM a worker
-    at 100 TB. With ``max_rows_per_frame`` set (the default), the
-    buffer flushes every time it exceeds the cap, cutting at the
-    last COMPLETE group boundary (the trailing, possibly-unfinished
-    group stays buffered), so resident memory is bounded by
-    max_rows_per_frame + the largest single group. A single group
-    larger than the cap is kept whole — the per-group recurrences
-    (EWM, the trade ledger) are exactly the operators that need the
-    full series in one frame; that floor is inherent, and the knob
-    bounds everything else. ``max_rows_per_frame=None`` restores the
-    whole-partition shape (no within-partition sort).
+def grouped_map(df, keys, kernel, schema) -> DataFrame:
+    """Group-wise pandas transform, shipped per partition.
 
-    ``batch_fn`` (r12, guide §4.2): when set, it replaces the
-    per-group Python loop — it receives a pandas frame holding only
-    WHOLE groups (the same buffering/cut guarantees as ``fn``) and
-    must apply the per-group semantics itself via pandas' grouped
-    C kernels (``groupby().ewm()/diff()/shift()``, one cython call
-    for all groups instead of ~40 pandas calls per group). The
-    per-group loop costs ~9 ms/group on 27-row groups (pure pandas
-    overhead); the grouped-kernel path is 30x+ faster and
-    bit-identical because pandas evaluates the same window kernel
-    per group slice. ``fn`` is ignored when ``batch_fn`` is given;
-    ``batch_fn`` is responsible for any within-group ordering (the
-    buffered frame is key-clustered but not order-sorted)."""
+    ``groupBy(key).applyInPandas`` pays one Arrow flush and one
+    Python call per GROUP, which is ruinous for many small groups
+    (1500 symbol groups of ~70 rows: 4.6s vs 0.7s at sf0.1). Here the
+    rows are hash-repartitioned on ``keys`` (each group lands wholly
+    in one partition), sorted within partitions on ``keys`` (groups
+    become contiguous) and streamed through ``mapInPandas``.
+
+    ``kernel`` receives pandas frames that hold only WHOLE groups and
+    returns one frame in ``schema``. It applies the per-group
+    semantics itself, normally through pandas' grouped C kernels
+    (``groupby(sort=False, dropna=False).ewm()/diff()/shift()``):
+    those evaluate the same window kernel per group slice that
+    ``Series.ewm`` runs per series, so the results are bit-identical
+    to a per-group loop at a fraction of its overhead. Rows arrive
+    clustered by key but not ordered within a group, so the kernel
+    sorts by its own order columns.
+
+    Memory guard: the buffer is flushed once it passes
+    ``MAX_ROWS_PER_FRAME`` rows, cut at the last COMPLETE group (the
+    trailing, possibly unfinished group stays buffered), so resident
+    memory is bounded by the cap plus the largest single group. A
+    group larger than the cap is kept whole: the recurrences served
+    here (EWM, the trade ledger, the CUSUM and imbalance walks) need
+    the full series in one frame."""
     import numpy as np
 
     keys = [keys] if isinstance(keys, str) else list(keys)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    cap = MAX_ROWS_PER_FRAME
 
-    def run_groups(pdf):
-        import pandas as pd
-
-        if batch_fn is not None:
-            out = batch_fn(pdf)
-            if out is not None and not out.empty:
-                yield out
-            return
-        by = keys[0] if len(keys) == 1 else keys
-        # dropna=False: pandas groupby silently DROPS null-key rows
-        # by default — a null symbol/user would vanish from the
-        # output (and an all-null partition would crash the concat)
-        outs = [fn(g) for _, g in pdf.groupby(by, sort=False, dropna=False)]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    def mapper(batches):
-        import pandas as pd
-
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if pdf.empty:
-            return
-        yield from run_groups(pdf)
+    def run(pdf):
+        out = kernel(pdf)
+        if not out.empty:
+            yield out
 
     def chunked_mapper(batches):
         import pandas as pd
@@ -125,7 +90,7 @@ def grouped_map(
                 continue
             buf.append(b)
             nrows += len(b)
-            if nrows <= max_rows_per_frame:
+            if nrows <= cap:
                 continue
             pdf = pd.concat(buf, ignore_index=True)
             # rows are key-sorted: the (possibly unfinished) trailing
@@ -137,7 +102,7 @@ def grouped_map(
                 mask &= col.isna().to_numpy() if pd.isna(v) else (col == v).to_numpy()
             cut = int(np.argmax(mask))  # first row of the trailing group
             if cut > 0:
-                yield from run_groups(pdf.iloc[:cut].reset_index(drop=True))
+                yield from run(pdf.iloc[:cut].reset_index(drop=True))
                 buf = [pdf.iloc[cut:].reset_index(drop=True)]
                 nrows = len(buf[0])
             else:
@@ -146,12 +111,14 @@ def grouped_map(
         if buf:
             pdf = pd.concat(buf, ignore_index=True)
             if not pdf.empty:
-                yield from run_groups(pdf)
+                yield from run(pdf)
 
-    rp = df.repartition(n, *keys)
-    if max_rows_per_frame is None:
-        return rp.mapInPandas(mapper, schema)
-    return rp.sortWithinPartitions(*keys).mapInPandas(chunked_mapper, schema)
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.repartition(n, *keys)
+        .sortWithinPartitions(*keys)
+        .mapInPandas(chunked_mapper, schema)
+    )
 
 
 def ema_features(
@@ -168,22 +135,7 @@ def ema_features(
     feats = [f"ema_{n}" for n in spans] + [f"{value}_ema_{n}_ratio" for n in spans]
     schema = _out_schema(df, keep, feats)
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        out = pdf[keep].copy()
-        for n in spans:
-            ema = pdf[value].ewm(span=n).mean()
-            out[f"ema_{n}"] = ema
-            out[f"{value}_ema_{n}_ratio"] = pdf[value] / ema
-        return out
-
-    # Whole-batch twin of fn via pandas grouped-window C kernels
-    # (r12, guide §4.2): groupby().ewm() runs the same cython ewma
-    # kernel per group slice, so values are bit-identical; the win
-    # is dropping the ~per-group pandas overhead of the Python loop.
-    # The pytest parity suite (operator vs pandas.Series.ewm) pins
-    # the equivalence.
-    def batch(pdf):
+    def kernel(pdf):
         pdf = pdf.sort_values([key, *order], kind="mergesort").reset_index(drop=True)
         gb = pdf.groupby(key, sort=False, dropna=False)
         out = pdf[keep].copy()
@@ -193,7 +145,7 @@ def ema_features(
             out[f"{value}_ema_{n}_ratio"] = pdf[value] / ema
         return out
 
-    return grouped_map(df, key, fn, schema, batch_fn=batch)
+    return grouped_map(df, key, kernel, schema)
 
 
 def macd_features(
@@ -212,18 +164,7 @@ def macd_features(
     feats = ["macd", "macd_signal", "macd_hist"]
     schema = _out_schema(df, keep, feats)
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        out = pdf[keep].copy()
-        macd = pdf[value].ewm(span=fast).mean() - pdf[value].ewm(span=slow).mean()
-        sig = macd.ewm(span=signal).mean()
-        out["macd"] = macd
-        out["macd_signal"] = sig
-        out["macd_hist"] = macd - sig
-        return out
-
-    # grouped-kernel twin — see ema_features.batch for the rationale
-    def batch(pdf):
+    def kernel(pdf):
         pdf = pdf.sort_values([key, *order], kind="mergesort").reset_index(drop=True)
         gb = pdf.groupby(key, sort=False, dropna=False)
         out = pdf[keep].copy()
@@ -240,7 +181,7 @@ def macd_features(
         out["macd_hist"] = macd - sig
         return out
 
-    return grouped_map(df, key, fn, schema, batch_fn=batch)
+    return grouped_map(df, key, kernel, schema)
 
 
 def rsi_wilder(
@@ -258,20 +199,7 @@ def rsi_wilder(
     keep = keep if keep is not None else [key, *order, value]
     schema = _out_schema(df, keep, [f"rsi_{length}"])
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        out = pdf[keep].copy()
-        delta = pdf[value].diff()
-        gain = delta.clip(lower=0)
-        loss = (-delta).clip(lower=0)
-        avg_gain = gain.ewm(alpha=1.0 / length, min_periods=length).mean()
-        avg_loss = loss.ewm(alpha=1.0 / length, min_periods=length).mean()
-        rs = avg_gain / avg_loss
-        out[f"rsi_{length}"] = 100.0 - 100.0 / (1.0 + rs)
-        return out
-
-    # grouped-kernel twin — see ema_features.batch for the rationale
-    def batch(pdf):
+    def kernel(pdf):
         pdf = pdf.sort_values([key, *order], kind="mergesort").reset_index(drop=True)
         gb = pdf.groupby(key, sort=False, dropna=False)
         out = pdf[keep].copy()
@@ -286,67 +214,4 @@ def rsi_wilder(
         out[f"rsi_{length}"] = 100.0 - 100.0 / (1.0 + rs)
         return out
 
-    return grouped_map(df, key, fn, schema, batch_fn=batch)
-
-
-def atr_features(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    high: str,
-    low: str,
-    close: str,
-    lengths: tuple[int, ...] = (10, 14),
-    keep: list[str] | None = None,
-) -> DataFrame:
-    """ATR(n) + ATR%% (W6: TR = max(h−l, |h−prev_c|, |l−prev_c|),
-    Wilder RMA smoothing; ta.atr semantics)."""
-    keep = keep if keep is not None else [key, *order, high, low, close]
-    feats = [f"atr_{n}" for n in lengths] + [f"atr_{n}_pct" for n in lengths]
-    schema = _out_schema(df, keep, feats)
-
-    def fn(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        out = pdf[keep].copy()
-        prev_close = pdf[close].shift(1)
-        tr = pd.concat(
-            [
-                pdf[high] - pdf[low],
-                (pdf[high] - prev_close).abs(),
-                (pdf[low] - prev_close).abs(),
-            ],
-            axis=1,
-        ).max(axis=1)
-        for n in lengths:
-            atr = tr.ewm(alpha=1.0 / n, min_periods=n).mean()
-            out[f"atr_{n}"] = atr
-            out[f"atr_{n}_pct"] = 100.0 * atr / pdf[close]
-        return out
-
-    # grouped-kernel twin — see ema_features.batch for the rationale
-    def batch(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values([key, *order], kind="mergesort").reset_index(drop=True)
-        gb = pdf.groupby(key, sort=False, dropna=False)
-        out = pdf[keep].copy()
-        prev_close = gb[close].shift(1).reset_index(drop=True)
-        work = pdf[[key]].copy()
-        work["__tr"] = pd.concat(
-            [
-                pdf[high] - pdf[low],
-                (pdf[high] - prev_close).abs(),
-                (pdf[low] - prev_close).abs(),
-            ],
-            axis=1,
-        ).max(axis=1)
-        gw = work.groupby(key, sort=False, dropna=False)
-        for n in lengths:
-            atr = gw["__tr"].ewm(alpha=1.0 / n, min_periods=n).mean().reset_index(drop=True)
-            out[f"atr_{n}"] = atr
-            out[f"atr_{n}_pct"] = 100.0 * atr / pdf[close]
-        return out
-
-    return grouped_map(df, key, fn, schema, batch_fn=batch)
+    return grouped_map(df, key, kernel, schema)

@@ -83,21 +83,9 @@ def market_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         "close",
         F.col("volume").cast("long").alias("volume"),
     )
-    # Partition-count sizing: the pipeline fans out into ~40 window
-    # stages over the persisted feature frame, and the persisted
-    # partitioning bypasses AQE coalescing — at fixture scale (150
-    # symbols, ~4k bars) full-parallelism partitioning means 4×
-    # task overhead for no gain (measured 45s → 13s). Derived from
-    # session parallelism (override via conf) rather than a literal;
-    # at production scale the symbol_bucket layout (SCALING.md)
-    # governs this instead.
-    n_parts = int(
-        spark.conf.get(
-            "spark.fin_trade_craft.signals.partitions",
-            str(max(1, spark.sparkContext.defaultParallelism // 4)),
-        )
-    )
-    return bars.repartition(n_parts, "symbol_id")
+    from ..domain.indicators import signal_partitions
+
+    return bars.repartition(signal_partitions(spark), "symbol_id")
 
 
 def fin_signals_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ewm import grouped_map
 from ..sources.catalog import load_table
 
 # Iglewicz-Hoaglin modified z-score: 0.6745 * (x - med) / MAD, flag > 3.5
@@ -874,20 +875,19 @@ def cusum_event_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reset makes this a genuine sequential recurrence (no closed
     form: the running-minimum trick for max(0, ·) folds dies once a
     threshold reset depends on earlier fires). It runs over INTEGER
-    CENTS in ONE pass per partition: hash-repartition on the series
-    key, sort within partitions on (key, date), and walk the whole
-    partition's numpy arrays with the state resetting at each series
-    boundary — no per-group pandas splitting (the original
-    grouped_map form spent much of its sf5 wall on 75k groupby
-    slices; the boundary-reset walk measures ~40% faster warm at
-    sf5 with IDENTICAL output). Exact arithmetic, so the DuckDB
+    CENTS as a pandas island (``operators.ewm.grouped_map``) whose
+    kernel walks a frame of whole series as numpy arrays, resetting
+    the state at each series boundary — no per-group pandas
+    splitting (a groupby slice per series spent much of its sf5 wall
+    on 75k slices; the boundary-reset walk measures ~40% faster warm
+    at sf5 with IDENTICAL output). Exact arithmetic, so the DuckDB
     recursive-CTE replay (one state row per bar, entity-parallel)
     matches bit-for-bit; the ``+`` side is checked before the ``-``
     side in both (simultaneous crossings are impossible from a valid
     state, the order is pinned anyway).
 
     Scale shape: the fold is per-key sequential by nature, but the
-    island ships whole hash partitions, state is two ints per
+    island ships frames of whole series, state is two ints per
     series, and output ∝ fires. At 100 TB the cost is one shuffle
     of bar-sized rows on the series key."""
     import pandas as pd
@@ -918,11 +918,9 @@ def cusum_event_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = CUSUM_H_CENTS
 
-    def mapper(batches):
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
+    def kernel(pdf):
+        # na_position="first": Spark's ascending order
+        pdf = pdf.sort_values(["user_id", "date"], kind="stable", na_position="first")
         uids = pdf["user_id"].to_numpy()
         ccs = pdf["cc"].to_numpy()
         dates = pdf["date"].to_numpy()
@@ -947,7 +945,7 @@ def cusum_event_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out_dir.append(-1)
                 out_stat.append(-sm / 100.0)
                 sm = 0
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "user_id": pd.Series(out_u, dtype="int64"),
                 "date": pd.Series(out_d, dtype="datetime64[us]"),
@@ -956,9 +954,7 @@ def cusum_event_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    n = spark.sparkContext.defaultParallelism
-    rp = bars.repartition(n, "user_id").sortWithinPartitions("user_id", "date")
-    return rp.mapInPandas(mapper, schema).orderBy("user_id", "date")
+    return grouped_map(bars, "user_id", kernel, schema).orderBy("user_id", "date")
 
 
 # WITH RECURSIVE must head the whole CTE list (DuckDB binds the

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum
+from ..operators.ewm import grouped_map
 from ..sources.catalog import load_table
 
 # Dollar-bar threshold: a new bar begins each time the per-user
@@ -1043,9 +1044,10 @@ def tick_imbalance_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction is sign(θ).
 
     Sequential by construction (bar boundaries and the threshold
-    both depend on every earlier fire), so it runs in the CUSUM
-    island's whole-partition walk — one shuffle on the series key,
-    integer state (θ, E, n, seq) — and the DuckDB oracle replays it
+    both depend on every earlier fire), so it runs as a pandas
+    island (``operators.ewm.grouped_map``) whose kernel walks a frame
+    of whole series — one shuffle on the series key, integer state
+    (θ, E, n, seq) — and the DuckDB oracle replays it
     with a per-signed-tick recursive CTE (depth = max signed ticks
     per series, entity-parallel breadth)."""
     import pandas as pd
@@ -1095,11 +1097,8 @@ def tick_imbalance_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_init, e_min = TIB_E_INIT, TIB_E_MIN
 
-    def mapper(batches):
-        parts = [x for x in batches if len(x)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
+    def kernel(pdf):
+        pdf = pdf.sort_values(["user_id", "srn"], kind="stable")
         uids = pdf["user_id"].to_numpy()
         evs = pdf["event_id"].to_numpy()
         bs = pdf["b"].to_numpy()
@@ -1126,7 +1125,7 @@ def tick_imbalance_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
                 e_cur = max(e_min, (e_cur + n_in) // 2)
                 theta, n_in = 0, 0
                 seq += 1
-        yield pd.DataFrame(
+        return pd.DataFrame(
             out,
             columns=[f.name for f in schema.fields],
         ).astype(
@@ -1140,9 +1139,7 @@ def tick_imbalance_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    n_part = spark.sparkContext.defaultParallelism
-    rp = signed.repartition(n_part, "user_id").sortWithinPartitions("user_id", "srn")
-    return rp.mapInPandas(mapper, schema).orderBy("user_id", "bar_seq")
+    return grouped_map(signed, "user_id", kernel, schema).orderBy("user_id", "bar_seq")
 
 
 ORACLE_TICK_IMBALANCE_BARS = f"""

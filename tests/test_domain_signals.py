@@ -2,7 +2,11 @@
 vs a faithful pandas re-simulation of the reference's per-symbol
 loops (`transform_trading_signals.py` semantics) on a seeded OHLCV
 fixture. The pandas side recomputes indicators independently with
-pandas primitives, so this also cross-checks compute_indicators."""
+pandas primitives, so this also cross-checks compute_indicators.
+
+The nine per-strategy Spark functions below are the definitional
+reference for the fused plan (``_fused_lag_signals``) that serves
+those strategies in the package."""
 
 from __future__ import annotations
 
@@ -17,8 +21,141 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
 from fin_trade_craft_spark.domain import trading_signals as TS  # noqa: E402
 from fin_trade_craft_spark.domain.indicators import compute_indicators  # noqa: E402
+from fin_trade_craft_spark.domain.trading_signals import _dropna, _emit, _w  # noqa: E402
+from fin_trade_craft_spark.operators.signals import zone_confirmation_signals  # noqa: E402
+
+
+# --- per-strategy reference functions (one dropna + lag + emit plan
+# each, reference lines cited per strategy)
+
+def ema_crossover(feat: DataFrame) -> DataFrame:
+    """`:221-267` — EMA8×EMA21 cross; strength=min(100,|Δ|/ema21·100)."""
+    d = _dropna(feat, ["ohlcv_ema_8", "ohlcv_ema_21"])
+    w = _w()
+    e8, e21 = F.col("ohlcv_ema_8"), F.col("ohlcv_ema_21")
+    p8, p21 = F.lag(e8).over(w), F.lag(e21).over(w)
+    buy = (p8 <= p21) & (e8 > e21)
+    sell = (p8 >= p21) & (e8 < e21)
+    strength = F.least(F.lit(100.0), F.abs(e8 - e21) / e21 * 100)
+    return _emit(d, "ema_crossover", buy, sell, strength)
+
+
+def rsi_mean_reversion(feat: DataFrame) -> DataFrame:
+    """`:269-313` — RSI14 crosses 30↑ / 70↓."""
+    d = _dropna(feat, ["ohlcv_rsi_14"])
+    w = _w()
+    rsi, prev = F.col("ohlcv_rsi_14"), F.lag("ohlcv_rsi_14").over(w)
+    buy = (prev <= 30) & (rsi > 30)
+    sell = (prev >= 70) & (rsi < 70)
+    strength = F.when(buy, rsi).otherwise(100 - rsi)
+    return _emit(d, "rsi_mean_reversion", buy, sell, strength)
+
+
+def rsi_crossing(feat: DataFrame) -> DataFrame:
+    """`:315-384` — zone-confirmed crossing (see operators.signals.
+    zone_confirmation_signals for the de-stating proof)."""
+    d = _dropna(feat, ["ohlcv_rsi_14"])
+    buy, sell = zone_confirmation_signals(F.col("ohlcv_rsi_14"), _w())
+    rsi = F.col("ohlcv_rsi_14")
+    strength = F.when(buy, rsi).otherwise(100 - rsi)
+    return _emit(d, "rsi_crossing", buy, sell, strength)
+
+
+def macd_histogram_reversal(feat: DataFrame) -> DataFrame:
+    """`:386-430` — histogram zero-cross; strength=min(100,|hist|·10)."""
+    d = _dropna(feat, ["ohlcv_macd_histogram"])
+    w = _w()
+    h, ph = F.col("ohlcv_macd_histogram"), F.lag("ohlcv_macd_histogram").over(w)
+    buy = (ph <= 0) & (h > 0)
+    sell = (ph >= 0) & (h < 0)
+    strength = F.least(F.lit(100.0), F.abs(h) * 10)
+    return _emit(d, "macd_histogram_reversal", buy, sell, strength)
+
+
+def bollinger_breakout(feat: DataFrame) -> DataFrame:
+    """`:432-481` — close breaks above upper / below lower band."""
+    d = _dropna(feat, ["close", "ohlcv_bb_upper", "ohlcv_bb_lower"])
+    w = _w()
+    c, u, lo = F.col("close"), F.col("ohlcv_bb_upper"), F.col("ohlcv_bb_lower")
+    pc, pu, pl = F.lag(c).over(w), F.lag(u).over(w), F.lag(lo).over(w)
+    buy = (pc <= pu) & (c > u)
+    sell = (pc >= pl) & (c < lo)
+    strength = F.when(buy, F.least(F.lit(100.0), (c - u) / u * 100)).otherwise(
+        F.least(F.lit(100.0), (lo - c) / lo * 100)
+    )
+    return _emit(d, "bollinger_breakout", buy, sell, strength)
+
+
+def volume_spike(feat: DataFrame) -> DataFrame:
+    """`:483-536` — volume > 2×SMA20 with ±2% price move. Zero-avg
+    rows can't fire (null-safe division) but still serve as the
+    prev row for the next bar, matching the reference's
+    ``continue``."""
+    d = _dropna(feat, ["close", "volume", "ohlcv_volume_sma_20"])
+    w = _w()
+    vr = F.col("volume") / F.col("ohlcv_volume_sma_20")
+    chg = (F.col("close") - F.lag("close").over(w)) / F.lag("close").over(w) * 100
+    buy = (vr > 2.0) & (chg > 2.0)
+    sell = (vr > 2.0) & (chg < -2.0)
+    strength = F.least(F.lit(100.0), vr * 10)
+    return _emit(d, "volume_spike", buy, sell, strength)
+
+
+def williams_extremes(feat: DataFrame) -> DataFrame:
+    """`:538-582` — %R crosses −80↑ / −20↓; strength=min(100,|%R+50|·2)."""
+    d = _dropna(feat, ["ohlcv_willr_14"])
+    w = _w()
+    r, pr = F.col("ohlcv_willr_14"), F.lag("ohlcv_willr_14").over(w)
+    buy = (pr <= -80) & (r > -80)
+    sell = (pr >= -20) & (r < -20)
+    strength = F.least(F.lit(100.0), F.abs(r + 50) * 2)
+    return _emit(d, "williams_extremes", buy, sell, strength)
+
+
+def ma_ribbon(feat: DataFrame) -> DataFrame:
+    """`:584-629` — stateless full alignment close>sma5>10>20>50."""
+    d = _dropna(feat, ["close", "ohlcv_sma_5", "ohlcv_sma_10", "ohlcv_sma_20", "ohlcv_sma_50"])
+    c = F.col("close")
+    s5, s10, s20, s50 = (F.col(f"ohlcv_sma_{n}") for n in (5, 10, 20, 50))
+    buy = (c > s5) & (s5 > s10) & (s10 > s20) & (s20 > s50)
+    sell = (c < s5) & (s5 < s10) & (s10 < s20) & (s20 < s50)
+    strength = F.when(buy, F.least(F.lit(100.0), (c - s50) / s50 * 100)).otherwise(
+        F.least(F.lit(100.0), (s50 - c) / s50 * 100)
+    )
+    return _emit(d, "ma_ribbon", buy, sell, strength)
+
+
+def trend_following(feat: DataFrame) -> DataFrame:
+    """`:754-799` — stateless close>sma50 & ema8>ema21 & rsi>50."""
+    d = _dropna(feat, ["close", "ohlcv_sma_50", "ohlcv_ema_8", "ohlcv_ema_21", "ohlcv_rsi_14"])
+    c, s50 = F.col("close"), F.col("ohlcv_sma_50")
+    e8, e21, rsi = F.col("ohlcv_ema_8"), F.col("ohlcv_ema_21"), F.col("ohlcv_rsi_14")
+    buy = (c > s50) & (e8 > e21) & (rsi > 50)
+    sell = (c < s50) & (e8 < e21) & (rsi < 50)
+    strength = F.when(buy, F.least(F.lit(100.0), rsi)).otherwise(F.least(F.lit(100.0), 100 - rsi))
+    return _emit(d, "trend_following", buy, sell, strength)
+
+
+PER_STRATEGY = {
+    f.__name__: f
+    for f in (
+        ema_crossover,
+        rsi_mean_reversion,
+        rsi_crossing,
+        macd_histogram_reversal,
+        bollinger_breakout,
+        volume_spike,
+        williams_extremes,
+        ma_ribbon,
+        trend_following,
+    )
+}
+STRATEGY_NAMES = {*PER_STRATEGY, "price_breakout", "rsi_divergence"}
 
 
 def _fixture_pdf(n_symbols=3, n_days=300, seed=42) -> pd.DataFrame:
@@ -249,12 +386,12 @@ def test_all_strategies_match_reference_loops(fixture_features, spark):
     )
     # every strategy must actually fire on the fixture
     fired = {t[2] for t in want}
-    assert fired == set(TS.STRATEGIES), f"strategies not exercised: {set(TS.STRATEGIES) - fired}"
+    assert fired == STRATEGY_NAMES, f"strategies not exercised: {STRATEGY_NAMES - fired}"
 
 
 def test_fused_lag_signals_matches_per_strategy_union(spark):
-    """r13: the nine lag-based/stateless strategies run fused (one
-    window pass + inline) — prove bit-exact row equality against the
+    """The nine lag-based/stateless strategies run fused (one window
+    pass + inline) — prove bit-exact row equality against the
     per-strategy reference functions on an adversarial frame: warmup
     nulls, interior mask gaps (the masked-lag must skip them exactly
     like each strategy's dropna+lag), zero divisors, both-signal
@@ -315,7 +452,7 @@ def test_fused_lag_signals_matches_per_strategy_union(spark):
     fused = TS._fused_lag_signals(feat).collect()
     union9 = reduce(
         lambda a, b: a.unionByName(b),
-        (TS.STRATEGIES[n](feat) for n in sorted(TS._FUSED)),
+        (PER_STRATEGY[n](feat) for n in sorted(PER_STRATEGY)),
     ).collect()
 
     def key(r):
@@ -329,4 +466,4 @@ def test_fused_lag_signals_matches_per_strategy_union(spark):
         f"first_diff={next((a, b) for a, b in zip(got, want) if a != b) if len(got) == len(want) else 'len'}"
     )
     assert len(got) > 100  # the fixture actually fires signals
-    assert {t[2] for t in got} == set(TS._FUSED)  # every fused strategy fires
+    assert {t[2] for t in got} == set(PER_STRATEGY)  # every fused strategy fires

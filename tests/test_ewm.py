@@ -8,6 +8,7 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -67,27 +68,6 @@ def test_rsi_wilder_matches_pandas(spark):
     assert (got - want).abs().max() < 1e-9
 
 
-def test_atr_matches_pandas(spark):
-    import random
-
-    rng = random.Random(3)
-    rows = []
-    c = 100.0
-    for i in range(80):
-        c *= 1 + rng.uniform(-0.02, 0.02)
-        h, lo = c * (1 + rng.uniform(0, 0.01)), c * (1 - rng.uniform(0, 0.01))
-        rows.append((1, i, round(h, 2), round(lo, 2), round(c, 2)))
-    df = spark.createDataFrame(rows, "sym long, bar long, high double, low double, close double")
-    out = ewm.atr_features(df, "sym", ["bar"], "high", "low", "close", (14,)).orderBy("bar").toPandas()
-    pdf = pd.DataFrame(rows, columns=["sym", "bar", "high", "low", "close"])
-    prev = pdf["close"].shift(1)
-    tr = pd.concat(
-        [pdf["high"] - pdf["low"], (pdf["high"] - prev).abs(), (pdf["low"] - prev).abs()], axis=1
-    ).max(axis=1)
-    want = tr.ewm(alpha=1 / 14, min_periods=14).mean()
-    assert (out["atr_14"] - want).abs().max() < 1e-9
-
-
 def test_multi_key_groups_are_independent(spark):
     vals_a, vals_b = _series(1), _series(2)
     rows = [(1, i, v) for i, v in enumerate(vals_a)] + [(2, i, v) for i, v in enumerate(vals_b)]
@@ -99,42 +79,80 @@ def test_multi_key_groups_are_independent(spark):
         assert (got - want).abs().max() < 1e-9
 
 
-def test_grouped_map_chunk_guard_parity(spark):
-    """The memory-guarded chunk path (max_rows_per_frame) must be
-    invisible to results: flushing at group boundaries mid-partition
-    yields exactly the unchunked output, each fn call still sees its
-    WHOLE group (asserted inside fn), and a single group larger than
-    the cap stays intact."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+def _chunk_case(case):
+    """(keys, rows, schema) for the chunk-guard test."""
+    if case == "one_key":
+        # 8 groups x 12 rows, plus one giant 40-row group (id 99)
+        rows = [(g, i, float(g * 100 + i)) for g in range(8) for i in range(12)]
+        rows += [(99, i, float(i)) for i in range(40)]
+        return ["k"], rows, "k long, seq long, v double"
+    # two-column key with null values in either column and in both;
+    # (None, None) is the giant group
+    rows = []
+    for ai, a in enumerate([None, 1, 2, 3]):
+        for bi, b in enumerate([None, 10, 20]):
+            n = 20 if (a, b) == (None, None) else 2 + (3 * ai + bi) % 5
+            rows += [(a, b, i, float(ai * 100 + bi * 10 + i)) for i in range(n)]
+    return ["a", "b"], rows, "a long, b long, seq long, v double"
 
-    from fin_trade_craft_spark.operators.ewm import grouped_map
 
-    # 8 groups x 12 rows, plus one giant 40-row group (id 99)
-    rows = [(g, i, float(g * 100 + i)) for g in range(8) for i in range(12)]
-    rows += [(99, i, float(i)) for i in range(40)]
-    df = spark.createDataFrame(rows, "k long, seq long, v double")
+@pytest.mark.parametrize("case", ["one_key", "two_key_nulls"])
+def test_grouped_map_chunk_guard_parity(spark, monkeypatch, case):
+    """The memory guard must be invisible to results: with
+    MAX_ROWS_PER_FRAME lowered to 7 and one-row Arrow batches the
+    buffer passes the cap at many group boundaries — null-key groups
+    included in the two-column case — yet every kernel frame holds
+    only WHOLE groups and at most the cap's rows unless it is one
+    larger group (both asserted inside the kernel), and the output
+    equals the default cap's."""
+    import random
+    from collections import Counter
 
-    expected_sizes = {g: 12 for g in range(8)} | {99: 40}
+    keys, rows, schema = _chunk_case(case)
+    nk = len(keys)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = int(pdf["k"].iloc[0])
-        # every call must receive the FULL group, chunked or not
-        assert len(pdf) == expected_sizes[k], (k, len(pdf))
-        pdf = pdf.sort_values("seq")
-        out = pdf[["k", "seq"]].copy()
-        out["ewm"] = pdf["v"].ewm(span=5).mean()
-        return out
+    def norm(t):
+        return tuple(None if pd.isna(x) else int(x) for x in t)
 
-    schema = "k long, seq long, ewm double"
-    unchunked = grouped_map(df, "k", fn, schema, max_rows_per_frame=None).toPandas()
-    chunked = grouped_map(df, "k", fn, schema, max_rows_per_frame=7).toPandas()
-    key = ["k", "seq"]
+    sizes = Counter(norm(r[:nk]) for r in rows)
+
+    def make_kernel(cap):
+        def kernel(pdf):
+            seen = Counter(map(norm, pdf[keys].itertuples(index=False, name=None)))
+            for key, n in seen.items():
+                assert n == sizes[key], (key, n, sizes[key])
+            assert len(pdf) <= max(cap, max(seen.values())), (len(pdf), cap)
+            pdf = pdf.sort_values([*keys, "seq"], kind="stable").reset_index(drop=True)
+            out = pdf[[*keys, "seq"]].copy()
+            out["cum"] = pdf.groupby(keys, sort=False, dropna=False)["v"].cumsum()
+            out["frame"] = random.getrandbits(62)
+            return out
+
+        return kernel
+
+    df = spark.createDataFrame(rows, schema)
+    out_schema = ", ".join([*(f"{k} long" for k in keys), "seq long", "cum double", "frame long"])
+
+    def run():
+        return ewm.grouped_map(df, keys, make_kernel(ewm.MAX_ROWS_PER_FRAME), out_schema)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        default = run().toPandas()
+        monkeypatch.setattr(ewm, "MAX_ROWS_PER_FRAME", 7)
+        capped = run().toPandas()
+    finally:
+        spark.conf.set(conf, prev)
+
+    assert capped["frame"].nunique() > default["frame"].nunique()
+    by = [*keys, "seq"]
     pd.testing.assert_frame_equal(
-        unchunked.sort_values(key).reset_index(drop=True),
-        chunked.sort_values(key).reset_index(drop=True),
+        default.drop(columns="frame").sort_values(by).reset_index(drop=True),
+        capped.drop(columns="frame").sort_values(by).reset_index(drop=True),
     )
-    assert len(chunked) == len(rows)
+    assert len(capped) == len(rows)
 
 
 def test_wilder_rma_warmup_seam_contract():
@@ -242,12 +260,44 @@ def test_ewm_oracle_step_matches_pandas_on_mid_series_nulls():
         ), f"{col} diverged on NULL series"
 
 
+def _ewm_island_group_fn(schema, order: str):
+    """The per-group definitional kernel of the indicator island
+    (reference semantics: plain ``Series.ewm`` per symbol,
+    `transform_time_series_daily_adjusted.py:189-202`)."""
+    from fin_trade_craft_spark.domain import indicators as I
+
+    def fn(pdf):
+        pdf = pdf.sort_values(order).reset_index(drop=True)
+        close = pdf["close"].astype(float)
+        for n in I.EMA_PERIODS:
+            pdf[f"ohlcv_ema_{n}"] = close.ewm(span=n).mean()
+        macd = close.ewm(span=12).mean() - close.ewm(span=26).mean()
+        sig = macd.ewm(span=9).mean()
+        pdf["ohlcv_macd"] = macd
+        pdf["ohlcv_macd_signal"] = sig
+        pdf["ohlcv_macd_histogram"] = macd - sig
+        delta = close.diff()
+        for n in I.RSI_PERIODS:
+            avg_gain = delta.clip(lower=0).ewm(alpha=1.0 / n, min_periods=n).mean()
+            avg_loss = (-delta).clip(lower=0).ewm(alpha=1.0 / n, min_periods=n).mean()
+            pdf[f"ohlcv_rsi_{n}"] = 100.0 - 100.0 / (1.0 + avg_gain / avg_loss)
+        high, low = pdf["high"].astype(float), pdf["low"].astype(float)
+        prev_close = close.shift(1)
+        tr = pd.concat(
+            [high - low, (high - prev_close).abs(), (low - prev_close).abs()], axis=1
+        ).max(axis=1)
+        for n in I.ATR_PERIODS:
+            pdf[f"ohlcv_atr_{n}"] = tr.ewm(alpha=1.0 / n, min_periods=n).mean()
+        return pdf[[f.name for f in schema.fields]]
+
+    return fn
+
+
 def test_ewm_island_batch_kernel_matches_per_group_reference():
-    """The production island path (_ewm_island_batch_fn: pandas
-    grouped-window C kernels, one call for all groups) must be
-    bit-identical to the definitional per-group kernel
-    (_ewm_island_group_fn: plain Series.ewm per symbol — the
-    reference's exact semantics). Adversarial shapes: multi-symbol,
+    """The island kernel (_ewm_island_kernel: pandas grouped-window
+    C kernels, one call for all groups) must be bit-identical to the
+    definitional per-group kernel (_ewm_island_group_fn: plain
+    Series.ewm per symbol — the reference's exact semantics). Adversarial shapes: multi-symbol,
     single-row group, constant series (exercises the ewma kernel's
     weighted_avg != cur skip branch), two-row group inside RSI/ATR
     warmup, and unsorted input rows."""
@@ -302,13 +352,13 @@ def test_ewm_island_batch_kernel_matches_per_group_reference():
             ]
         ]
 
-    ref_fn = I._ewm_island_group_fn(_S, "date")
+    ref_fn = _ewm_island_group_fn(_S, "date")
     ref = pd.concat(
         [ref_fn(g) for _, g in pdf.groupby("symbol_id", sort=False, dropna=False)],
         ignore_index=True,
     ).sort_values(["symbol_id", "date"], kind="stable").reset_index(drop=True)
     got = (
-        I._ewm_island_batch_fn(_S, "date")(pdf)
+        I._ewm_island_kernel(_S, "date")(pdf)
         .sort_values(["symbol_id", "date"], kind="stable")
         .reset_index(drop=True)
     )
@@ -323,9 +373,9 @@ def test_ewm_island_batch_kernel_matches_per_group_reference():
 
 
 def test_grouped_kernel_batch_paths_bitwise_vs_per_group(spark):
-    """The r12 batch_fn twins (grouped-window C kernels) of
-    ema/macd/rsi/atr must be BIT-identical to the per-group pandas
-    reference — same fixtures class as the island differential:
+    """The grouped-window C kernels of ema/macd/rsi must be
+    BIT-identical to the per-group pandas reference — same fixtures
+    class as the island differential:
     random walk, constant series (ewma update-skip branch), single
     row, warmup-length group."""
     import numpy as np
@@ -396,19 +446,3 @@ def test_grouped_kernel_batch_paths_bitwise_vs_per_group(spark):
 
     got = ewm.rsi_wilder(df, "sym", ["bar"], "close", 14).toPandas()
     check(got, ref_per_group(pdf, b_rsi), ["rsi_14"])
-
-    # atr
-    def b_atr(g):
-        out = g[["sym", "bar", "high", "low", "close"]].copy()
-        pc = g["close"].shift(1)
-        tr = pd.concat(
-            [g["high"] - g["low"], (g["high"] - pc).abs(), (g["low"] - pc).abs()], axis=1
-        ).max(axis=1)
-        for n in (10, 14):
-            a = tr.ewm(alpha=1.0 / n, min_periods=n).mean()
-            out[f"atr_{n}"] = a
-            out[f"atr_{n}_pct"] = 100.0 * a / g["close"]
-        return out
-
-    got = ewm.atr_features(df, "sym", ["bar"], "high", "low", "close").toPandas()
-    check(got, ref_per_group(pdf, b_atr), ["atr_10", "atr_14", "atr_14_pct"])
