@@ -38,10 +38,6 @@ def with_shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def exploded_shingles(shingle_sets: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return shingle_sets.select(id_col, F.explode("shingles").alias("shingle"))
-
-
 # Covers the driver fixtures (documents ≤5k, embeddings ≤20k incl.
 # the sf1 embedding replica). The sf1 DOCUMENTS replica (50k) is
 # deliberately refused — that is the guard doing its job on a

@@ -44,11 +44,6 @@ def _guard(expr: Column, col: Column, w: WindowSpec, n: int, min_periods: int | 
     return F.when(cnt >= mp, expr)
 
 
-def rolling_sum(col: Column, w: WindowSpec, n: int, scale: int = 2, min_periods: int | None = None) -> Column:
-    s = F.sum(_dec(col, 12, scale)).over(_frame(w, n)).cast("double")
-    return _guard(s, col, w, n, min_periods)
-
-
 def rolling_mean(col: Column, w: WindowSpec, n: int, scale: int = 2, min_periods: int | None = None) -> Column:
     """SMA with pandas min_periods semantics (W1)."""
     s = F.sum(_dec(col, 12, scale)).over(_frame(w, n)).cast("double")
@@ -133,15 +128,6 @@ def centered_extrema_flags(col: Column, w: WindowSpec, half: int = 2) -> tuple[C
     is_low = full & (col == F.min(col).over(cw))
     is_high = full & (col == F.max(col).over(cw))
     return is_low, is_high
-
-
-def running_sum(col: Column, w: WindowSpec, scale: int = 2) -> Column:
-    """Cumulative sum, exact (W7/W8: OBV / equity curve)."""
-    return F.sum(_dec(col, 12, scale)).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("double")
-
-
-def running_max(col: Column, w: WindowSpec) -> Column:
-    return F.max(col).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
 
 def drawdown(cum: Column, runmax: Column) -> Column:

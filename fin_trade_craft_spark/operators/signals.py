@@ -23,12 +23,6 @@ def crossover(fast: Column, slow: Column, w: WindowSpec) -> tuple[Column, Column
     return up, down
 
 
-def threshold_cross(col: Column, thresh: float, w: WindowSpec) -> tuple[Column, Column]:
-    """Cross up through / down through a constant threshold."""
-    prev = F.lag(col).over(w)
-    return (prev <= thresh) & (col > thresh), (prev >= thresh) & (col < thresh)
-
-
 def rsi_simple(value: Column, w: WindowSpec, n: int = 14, scale: int = 2) -> Column:
     """Simple-moving-average RSI — the reference's econ/commodity
     variant (`transform_economic_indicators.py:278-297`), NOT

@@ -1,25 +1,31 @@
-"""Embedding similarity search (LLM-pipeline ANN operators).
+"""Exact vector arithmetic and the shared top-k scan.
 
-Baseline: brute-force cosine top-k — broadcast the (small) query
-set against the corpus; per-pair dot products run as JVM
-higher-order functions (``zip_with`` + ``aggregate``) with an exact
-DECIMAL accumulator, so scores are order-independent and
-bit-reproducible at any parallelism.
+Every similarity score in the package uses one fixed-point scheme:
+each double product is rounded to an integer number of 1e-12 units,
+floor(x·y·1e12 + 0.5), and the products are summed as exact int64.
+The result does not depend on summation order, partitioning or
+engine, so the DuckDB oracles hash-match it bit for bit. The scheme
+has two forms here:
 
-Scale path: IVF — assign vectors to coarse centroids (k-means-style,
-here the provided ``label`` partitions or computed centroids), probe
-only the nearest partitions. Candidate set shrinks from N to
-N/k_partitions × n_probe; same top-k tail.
+- Spark expressions: ``dot_exact``, ``norm2_exact`` and ``cosine``;
+- numpy: ``fixed_dot`` (the twin of ``dot_exact`` over the last
+  axis), plus ``sq_dist`` for exact integer squared L2 to a centroid
+  matrix and ``stack_rows`` to turn an Arrow list column into a
+  matrix.
 
-A Pandas-UDF (numpy matmul) variant exists for throughput when
-bit-reproducibility is not required; the decimal path is the
-correctness reference.
+``topk_scan`` is the one partition-local top-k scan: the probe
+matrix rides in the kernel closure, each Arrow batch of the corpus
+emits only its local top-k per probe, and one per-probe window ranks
+the union. ``knn_bruteforce`` and the L2/PQ scans in
+``queries/similarity.py`` run on it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .ranks import top_k_per_group
 
 # Float accumulation scheme: round each double product to an
 # integer number of 1e-12 units via floor(x*1e12 + 0.5) — pure IEEE
@@ -58,22 +64,103 @@ def cosine(dot: Column, n2a: Column, n2b: Column) -> Column:
     return dot / (F.sqrt(n2a) * F.sqrt(n2b))
 
 
+def fixed_dot(A, B):
+    """numpy twin of ``dot_exact`` over the last axis (``A`` and
+    ``B`` broadcast): per-product floor(x·y·1e12 + 0.5) summed as
+    exact int64, then one division. ``fixed_dot(E, E)`` is the twin
+    of ``norm2_exact``."""
+    import numpy as np
+
+    return np.floor(A * B * 1e12 + 0.5).astype(np.int64).sum(axis=-1) / 1e12
+
+
+def sq_dist(X, C):
+    """Exact integer squared L2 from every row of ``X`` (n×d int64)
+    to every row of ``C`` (k×d int64), as an n×k int64 matrix.
+    ``np.argmin`` over axis 1 takes the first minimum, so a
+    cid-sorted ``C`` breaks ties by the smaller cid."""
+    return (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
+
+
+def stack_rows(col, dtype):
+    """One matrix row per vector of an array column (a pandas Series
+    or any sequence). Vectors of different lengths raise ValueError."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=dtype) for v in col])
+
+
+def probe_matrix(df: DataFrame, id_col: str, vec_col: str, dtype):
+    """Collect the probe set (small by contract) as (ids int64[n],
+    matrix n×d); the matrix is None when the set is empty."""
+    import numpy as np
+
+    rows = df.select(id_col, vec_col).collect()
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    return qids, (stack_rows([r[1] for r in rows], dtype) if rows else None)
+
+
+def topk_scan(
+    corpus: DataFrame,
+    qids,
+    score,
+    k: int,
+    out: str,
+    out_type: str,
+    desc: bool = True,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Top-``k`` corpus rows per probe: (qid, nid, ``out``, rank).
+
+    ``score(pdf)`` maps one Arrow batch of ``corpus`` to an
+    (n_probes × n_rows) score matrix and a keep mask of the same
+    shape, or None to keep every row. A probe never matches its own
+    id. Each batch emits only its local top-k per probe, ordered by
+    score (descending when ``desc``) and then by the smaller id; the
+    top-k of a union is the top-k of the local top-ks under that
+    same total order, so one per-probe window over k·|probes| rows
+    per batch finishes the ranking. The corpus is never shuffled."""
+    import numpy as np
+    import pandas as pd
+
+    def scan(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            s, keep = score(pdf)
+            out_q, out_n, out_s = [], [], []
+            for t in range(len(qids)):
+                mask = ids != qids[t]
+                if keep is not None:
+                    mask &= keep[t]
+                nid, st = ids[mask], s[t, mask]
+                order = np.lexsort((nid, -st if desc else st))[:k]
+                out_q.extend([qids[t]] * len(order))
+                out_n.extend(nid[order])
+                out_s.extend(st[order])
+            yield pd.DataFrame({"qid": out_q, "nid": out_n, out: out_s})
+
+    local = corpus.mapInPandas(scan, f"qid long, nid long, {out} {out_type}")
+    first = F.desc(out) if desc else F.asc(out)
+    return top_k_per_group(local, ["qid"], [first, F.asc("nid")], k, rank_col="rank")
+
+
 def cosine_pairs_kernel(
     pairs: DataFrame, e1: str = "e1", e2: str = "e2", out: str = "cos_sim"
 ) -> DataFrame:
     """Arrow-batched numpy twin of
     ``cosine(dot_exact(e1,e2), norm2_exact(e1), norm2_exact(e2))``
-    for PAIR frames: identical fixed-point arithmetic (per-product
-    floor(x·1e12+0.5) → exact int64 sums → one double division), so
-    results are bit-equal to the HOF-expression path — but one
+    for PAIR frames: the same fixed-point arithmetic (``fixed_dot``),
+    so results are bit-equal to the expression path, but one
     vectorized numpy pass per batch instead of three interpreted
     64-element lambda folds per ROW, which dominates verify-stage
     wall on large candidate sets. Passes every non-vector column
     through; replaces the two vector columns with ``out``.
 
-    Stated edges of the bit-equality claim (ADVICE r05):
+    Stated edges of the bit-equality claim:
 
-    - **Zero-norm vectors**: cosine is 0/0. The HOF-expression path
+    - **Zero-norm vectors**: cosine is 0/0. The expression path
       yields a double NaN; this kernel also computes NaN, but Arrow's
       nan_as_null maps it to SQL NULL on the way back — NULL here vs
       NaN there. Threshold filters (``>= θ``) agree in both cases
@@ -81,9 +168,8 @@ def cosine_pairs_kernel(
       in-repo consumer is unaffected; don't rely on the distinction
       elsewhere.
     - **Vector length**: all vectors in a frame must share one
-      dimensionality. Mixed lengths would stack into a ragged object
-      array whose ``A * B`` crashes obscurely — np.stack below turns
-      that into an explicit per-batch error instead."""
+      dimensionality; mixed lengths raise an explicit per-batch
+      error."""
     import numpy as np
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -94,30 +180,27 @@ def cosine_pairs_kernel(
     )
 
     def fn(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             # NULL vectors -> NaN, which Arrow's nan_as_null maps
-            # back to SQL NULL — exactly the HOF-expression path's
+            # back to SQL NULL — exactly the expression path's
             # output (and stacking a None would make the batch
             # ragged / crash)
             valid = (pdf[e1].notna() & pdf[e2].notna()).to_numpy()
             cos = np.full(len(pdf), np.nan)
             if valid.any():
                 try:
-                    A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[e1][valid]])
-                    B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[e2][valid]])
+                    A = stack_rows(pdf[e1][valid], np.float64)
+                    B = stack_rows(pdf[e2][valid], np.float64)
                 except ValueError as e:
                     raise ValueError(
                         "cosine_pairs_kernel requires a uniform vector length "
                         f"within the frame ({e1}/{e2}): {e}"
                     ) from None
-                dots = np.floor(A * B * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-                n2a = np.floor(A * A * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-                n2b = np.floor(B * B * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-                cos[valid] = dots / (np.sqrt(n2a) * np.sqrt(n2b))
+                cos[valid] = fixed_dot(A, B) / (
+                    np.sqrt(fixed_dot(A, A)) * np.sqrt(fixed_dot(B, B))
+                )
             o = pdf[keep].copy()
             o[out] = cos
             yield o
@@ -133,139 +216,33 @@ def knn_bruteforce(
     k: int = 5,
 ) -> DataFrame:
     """Top-k cosine neighbors for each query vector (self excluded),
-    with EXACT scaled-integer scoring (bit-reproducible, oracle-
-    hashable — this is the correctness-reference path; the float
-    twin below trades that for matmul throughput).
-
-    The query matrix rides to every task in the kernel closure
-    (queries are benchmark-sized by contract) — the corpus is never
-    shuffled, each Arrow batch scores its slice in vectorized numpy
-    using the same per-product floor(x*1e12+0.5) → int64-sum
-    arithmetic as ``dot_exact`` (bit-identical: IEEE doubles and
-    exact integer adds), and emits only its LOCAL top-k per query.
-    The global window then ranks k·|queries| rows per batch, not the
-    corpus — top-k of a union is the top-k of local top-ks under the
-    same deterministic (cos desc, nid asc) order. (r02 shape was a
-    broadcast crossJoin with per-pair interpreted zip_with/aggregate
-    lambdas — same values, ~3× the wall time.)
+    with exact fixed-point scoring — bit-reproducible and
+    oracle-hashable. Runs on ``topk_scan``: the query matrix rides in
+    the kernel closure (queries are benchmark-sized by contract) and
+    each corpus batch scores its slice with ``fixed_dot``.
 
     Degenerate (zero-norm) embeddings: cosine is undefined (0/0), so
     zero-norm CORPUS vectors are excluded from every candidate set
-    and a zero-norm QUERY returns no neighbors. Without the explicit
-    filter the two stages would disagree — np.lexsort places NaN
-    last (silently dropped from local top-k) while Spark's
-    ``F.desc`` ranks NaN first in the global window."""
+    and a zero-norm QUERY returns no neighbors. Without the keep mask
+    a NaN score would survive any local top-k with fewer than k
+    candidates and reach the window (as NULL, after Arrow), so the
+    result would depend on how the corpus splits into batches."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import Window
+    qids, Q = probe_matrix(queries, id_col, vec_col, np.float64)
+    if Q is None:
+        schema = "qid long, rank int, nid long, cos_sim double"
+        return corpus.sparkSession.createDataFrame([], schema)
+    n2q = fixed_dot(Q, Q)
 
-    q_rows = queries.select(id_col, vec_col).collect()  # small by contract
-    if not q_rows:
-        # empty query set → empty result (np.asarray([]) would be 1-D
-        # and crash the axis-1 sums below)
-        spark = corpus.sparkSession
-        return spark.createDataFrame([], "qid long, rank int, nid long, cos_sim double")
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in q_rows], dtype=np.float64)
-    n2q = np.floor(Q * Q * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
+    def score(pdf):
+        C = stack_rows(pdf[vec_col], np.float64)
+        n2c = fixed_dot(C, C)
+        dots = np.stack([fixed_dot(C, q) for q in Q])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dots / (np.sqrt(n2q)[:, None] * np.sqrt(n2c))
+        return cos, (n2q[:, None] > 0.0) & (n2c > 0.0)
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            Cm = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]], dtype=np.float64
-            )
-            n2c = np.floor(Cm * Cm * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                if n2q[j] == 0.0:
-                    continue  # zero-norm query: cosine undefined, no neighbors
-                dots = np.floor(Cm * Q[j] * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dots / (np.sqrt(n2q[j]) * np.sqrt(n2c))
-                mask = (ids != qids[j]) & (n2c > 0.0)
-                s, nid = cos[mask], ids[mask]
-                order = np.lexsort((nid, -s))[:k]
-                out_q.extend([qids[j]] * len(order))
-                out_n.extend(nid[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "cos_sim": out_s})
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "qid long, nid long, cos_sim double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "cos_sim")
-    )
-
-
-def knn_bruteforce_numpy(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Throughput variant of ``knn_bruteforce``: Arrow-batched
-    ``mapInPandas`` with one numpy matmul per batch instead of
-    per-pair JVM lambda accumulation. ~IEEE-double accurate but NOT
-    bit-reproducible across summation orders (BLAS folds in
-    whatever order it likes) — use the decimal path when results
-    must hash-match an oracle; use this when scoring throughput is
-    the budget.
-
-    Scale shape: identical to the exact path — the query matrix
-    rides to every task in the UDF closure (queries are
-    benchmark-sized by contract), the corpus is never shuffled, and
-    each batch emits only its LOCAL top-k per query, so the final
-    global top-k window sees k·|queries| rows per batch, not the
-    corpus."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    q_rows = queries.select(id_col, vec_col).collect()  # small by contract
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qmat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        qmat = np.where(qnorm > 0, qmat / qnorm, np.nan)
-    q_ok = qnorm[:, 0] > 0
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cmat = np.where(cnorm > 0, cmat / cnorm, np.nan)
-            sims = cmat @ qmat.T  # (n_corpus_batch, n_queries)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                if not q_ok[j]:
-                    continue  # zero-norm query: cosine undefined, no neighbors
-                mask = (ids != qids[j]) & (cnorm[:, 0] > 0)
-                s, nid = sims[mask, j], ids[mask]
-                # local top-k, ties broken by nid asc (matches the
-                # exact path's deterministic ordering)
-                order = np.lexsort((nid, -s))[:k]
-                out_q.extend([qids[j]] * len(order))
-                out_n.extend(nid[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "cos_sim": out_s})
-
-    c = corpus.select(id_col, vec_col)
-    scored = c.mapInPandas(score, "qid long, nid long, cos_sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "cos_sim")
-    )
+    return topk_scan(
+        corpus.select(id_col, vec_col), qids, score, k, "cos_sim", "double", id_col=id_col
+    ).select("qid", "rank", "nid", "cos_sim")

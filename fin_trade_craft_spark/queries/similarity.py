@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
+from ..operators.ranks import top_k_per_group
 from ..sources.catalog import load_table, table_row_count
 
 N_QUERIES = 10  # vec_id < 10 are the probe vectors
@@ -276,6 +277,82 @@ def _fingerprint(emb: DataFrame, sf_dir: str | None = None):
     ).collect()[0]
 
 
+def _lloyd(q: DataFrame, k: int, s: int, m: int):
+    """The deterministic Lloyd build shared by the coarse quantizer
+    (m = 1) and the product quantizer (m = PQ_M subspaces, trained
+    independently) over a (vec_id, qv) frame of 1e-6 integer vectors.
+    Seeds: per hash-mod class ``_H16 % k``, the vector with the
+    smallest md5(vec_id); its m subvectors seed the m subspaces.
+    Sample: salted hash ≡ 0 (mod s). KM_ITERS rounds; assignment
+    takes the first minimum over cid-sorted centroids (tie → min
+    cid); each round's update is the exact floor of the member mean,
+    and a (subspace, centroid) with no members keeps its previous
+    value. Member sums are computed distributed: each Arrow batch
+    emits partial (sub, cid, j) sums, so a round shuffles
+    O(batches · m · k · dims/m) rows, never the sample. Returns
+    (cids int64[k'], C int64[m, k', dims/m]), k' being the number of
+    non-empty seed classes."""
+    import numpy as np
+
+    seeds = (
+        q.select(
+            "qv",
+            F.expr(f"{_H16_SPARK} % {k}").alias("grp"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
+        )
+        .groupBy("grp")
+        .agg(F.min_by("qv", "h").alias("qv"))
+        .collect()
+    )
+    cent = {int(r["grp"]): np.array(r["qv"], dtype=np.int64) for r in seeds}
+    cids = np.array(sorted(cent), dtype=np.int64)
+    sd = len(cent[int(cids[0])]) // m
+    # C[sub, j, :] is centroid cids[j] restricted to subspace sub
+    C = np.stack([cent[int(c)] for c in cids]).reshape(len(cids), m, sd)
+    C = C.transpose(1, 0, 2).copy()
+    cid_ix = {int(c): j for j, c in enumerate(cids)}
+    sample = (
+        q.filter(F.expr(f"{_H16S_SPARK} % {s} = 0"))
+        .select("qv")
+        .localCheckpoint(eager=True)  # reused every Lloyd round
+    )
+    for _ in range(KM_ITERS):
+
+        def round_fn(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                X = S.stack_rows(pdf["qv"], np.int64).reshape(len(pdf), m, sd)
+                sub_o, cid_o, j_o, sum_o, cnt_o = [], [], [], [], []
+                for sub in range(m):
+                    Xm = X[:, sub, :]
+                    a = np.argmin(S.sq_dist(Xm, C[sub]), axis=1)
+                    for jj in np.unique(a):
+                        mask = a == jj
+                        sub_o.extend([sub] * sd)
+                        cid_o.extend([int(cids[jj])] * sd)
+                        j_o.extend(range(sd))
+                        sum_o.extend(Xm[mask].sum(axis=0).tolist())
+                        cnt_o.extend([int(mask.sum())] * sd)
+                yield pd.DataFrame(
+                    {"sub": sub_o, "cid": cid_o, "j": j_o, "psum": sum_o, "pcnt": cnt_o}
+                )
+
+        upd = (
+            sample.mapInPandas(round_fn, "sub long, cid long, j long, psum long, pcnt long")
+            .groupBy("sub", "cid", "j")
+            .agg(F.sum("psum").alias("sq"), F.sum("pcnt").alias("cnt"))
+            .collect()
+        )
+        for r in upd:
+            # exact floor of the member mean (Python // is floor div on
+            # ints — identical to the oracle's posmod-subtract // form)
+            C[int(r["sub"]), cid_ix[int(r["cid"])], int(r["j"])] = r["sq"] // r["cnt"]
+    return cids, C
+
+
 def _train_kmeans(
     spark: SparkSession, sf_dir: str, where=None, k_override: int | None = None, fp=None
 ):
@@ -288,8 +365,6 @@ def _train_kmeans(
     ``k_override`` replaces the corpus-derived k (used by the
     hierarchical quantizer's coarse level — NOT by any oracle'd
     query, whose k must replay from COUNT(*) alone)."""
-    import numpy as np
-
     emb = _emb(spark, sf_dir)
     if where is not None:
         emb = emb.filter(where)
@@ -306,60 +381,8 @@ def _train_kmeans(
         p["s"] = max(1, p["n"] // (KM_SAMPLE_PER_CENTROID * p["k"]))
         p["nprobe"] = max(2, -(-p["k"] // 8))
     q = emb.select("vec_id", F.expr(_QV_EXPR).alias("qv"))
-    seeds = (
-        q.select(
-            "qv",
-            F.expr(f"{_H16_SPARK} % {p['k']}").alias("grp"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .groupBy("grp")
-        .agg(F.min_by("qv", "h").alias("qv"))
-        .collect()
-    )
-    cent = {int(r["grp"]): np.array(r["qv"], dtype=np.int64) for r in seeds}
-    cids = sorted(cent)
-    sample = (
-        q.filter(F.expr(f"{_H16S_SPARK} % {p['s']} = 0"))
-        .select("qv")
-        .localCheckpoint(eager=True)  # reused every Lloyd round
-    )
-    for _ in range(KM_ITERS):
-        C = np.stack([cent[c] for c in cids])
-        carr = np.array(cids, dtype=np.int64)
-
-        def round_fn(batches, C=C, carr=carr):
-            import pandas as pd
-
-            n2c = (C * C).sum(axis=1)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
-                d2 = (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + n2c[None, :]
-                a = np.argmin(d2, axis=1)  # first min = min cid (C is cid-sorted)
-                cid_o, i_o, sum_o, cnt_o = [], [], [], []
-                dims = X.shape[1]
-                for j in np.unique(a):
-                    mask = a == j
-                    cid_o.extend([int(carr[j])] * dims)
-                    i_o.extend(range(dims))
-                    sum_o.extend(X[mask].sum(axis=0).tolist())
-                    cnt_o.extend([int(mask.sum())] * dims)
-                yield pd.DataFrame(
-                    {"cid": cid_o, "i": i_o, "psum": sum_o, "pcnt": cnt_o}
-                )
-
-        upd = (
-            sample.mapInPandas(round_fn, "cid long, i long, psum long, pcnt long")
-            .groupBy("cid", "i")
-            .agg(F.sum("psum").alias("sq"), F.sum("pcnt").alias("cnt"))
-            .collect()
-        )
-        for r in upd:
-            # exact floor of the member mean (Python // is floor div on
-            # ints — identical to the oracle's posmod-subtract // form)
-            cent[int(r["cid"])][int(r["i"])] = r["sq"] // r["cnt"]
-    out = (np.array(cids, dtype=np.int64), np.stack([cent[c] for c in cids]), p)
+    cids, C = _lloyd(q, p["k"], p["s"], 1)
+    out = (cids, C[0], p)
     _KMEANS_MEMO.put(memo_key, out, dataset=memo_key[0])
     return out
 
@@ -405,13 +428,10 @@ def cells_from_codebook(codebook: DataFrame, vecs: DataFrame) -> DataFrame:
     def fn(batches):
         import pandas as pd
 
-        n2c = (C * C).sum(axis=1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
-            d2 = (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + n2c[None, :]
-            a = np.argmin(d2, axis=1)
+            a = np.argmin(S.sq_dist(S.stack_rows(pdf["qv"], np.int64), C), axis=1)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "cell": cids[a]}
             )
@@ -436,12 +456,10 @@ def _cell_scores(
     def fn(batches):
         import pandas as pd
 
-        n2c = (C * C).sum(axis=1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
-            d2 = (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + n2c[None, :]
+            d2 = S.sq_dist(S.stack_rows(pdf["qv"], np.int64), C)
             n = len(pdf)
             # rank cells per vector: dist2 asc, then cid asc (cids
             # ascending makes stable argsort the exact tie-break)
@@ -678,8 +696,6 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory contract (closure ~√k×dims, assignment ~2√k per corpus
     vector) is untouched; the candidate-join tail is
     tier-identical."""
-    from pyspark.sql import Window
-
     emb = _emb(spark, sf_dir)
     # tier decision from the catalog row count (footer metadata) —
     # no construction-time scan; the trainers compute/memoize their
@@ -746,10 +762,8 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("qid", "bucket")
             .agg(F.sum((F.col("q") - F.col("rv")) * (F.col("q") - F.col("rv"))).alias("d2"))
         )
-        wf = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("bucket"))
         probes = (
-            fine_d2.withColumn("frn", F.row_number().over(wf))
-            .filter(F.col("frn") <= nprobe)
+            top_k_per_group(fine_d2, ["qid"], [F.asc("d2"), F.asc("bucket")], nprobe)
             .select("qid", "bucket")
             .join(
                 emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("e1")),
@@ -782,12 +796,9 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probes.join(corpus, "bucket").filter(F.col("qid") != F.col("nid"))
     cos = S.cosine(S.dot_exact("e1", "e2"), S.norm2_exact("e1"), S.norm2_exact("e2"))
     scored = cand.select("qid", "nid", cos.alias("cos_sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= IVF_K)
-        .select("qid", "rank", "nid", "cos_sim")
-    )
+    return top_k_per_group(
+        scored, ["qid"], [F.desc("cos_sim"), F.asc("nid")], IVF_K, rank_col="rank"
+    ).select("qid", "rank", "nid", "cos_sim")
 
 
 ORACLE_IVF_SEARCH = f"""
@@ -997,10 +1008,7 @@ def srp_lsh_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            e = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
-                dtype=np.float64,
-            )
+            e = S.stack_rows(pdf["embedding"], np.float64)
             scaled = np.floor(e * 1e12 + 0.5).astype(np.int64)  # ≡ F.floor(cast double)
             bits = (scaled @ signs) > 0  # (n, bits) bool
             sig_strs = ["".join("1" if b else "0" for b in row) for row in bits]
@@ -1229,8 +1237,6 @@ def sq8_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Scale shape: the 10-row query side broadcasts and the
     corpus streams map-only through quantize+score (never shuffled);
     the two top-k windows act on M-bounded per-query rows."""
-    from pyspark.sql import Window
-
     emb = _emb(spark, sf_dir)
     scale = F.expr(
         "aggregate(cvec, CAST(0.0 AS DOUBLE),"
@@ -1252,40 +1258,17 @@ def sq8_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     pairs = corpus.crossJoin(F.broadcast(q)).filter(F.col("qid") != F.col("nid"))
-    fx = "CAST(floor(({expr}) * 1e12 + 0.5) AS BIGINT)"
-    approx = F.expr(
-        "CAST(aggregate(zip_with(qvec, cdeq, (x, y) -> "
-        + fx.format(expr="CAST(x AS DOUBLE) * y")
-        + "), CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE) / 1e12"
+    cand = pairs.select(
+        "qid", "nid", "qvec", "cvec", S.dot_exact("qvec", "cdeq").alias("approx_dot")
     )
-    cand = pairs.select("qid", "nid", "qvec", "cvec", approx.alias("approx_dot"))
-    wa = Window.partitionBy("qid").orderBy(F.desc("approx_dot"), F.asc("nid"))
-    cand = cand.withColumn("arank", F.row_number().over(wa)).filter(F.col("arank") <= SQ8_M)
-    dot = F.expr(
-        "CAST(aggregate(zip_with(qvec, cvec, (x, y) -> "
-        + fx.format(expr="CAST(x AS DOUBLE) * CAST(y AS DOUBLE)")
-        + "), CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE) / 1e12"
+    cand = top_k_per_group(
+        cand, ["qid"], [F.desc("approx_dot"), F.asc("nid")], SQ8_M, rank_col="arank"
     )
-
-    def n2(col: str) -> F.Column:
-        return F.expr(
-            f"CAST(aggregate(transform({col}, x -> "
-            + fx.format(expr="CAST(x AS DOUBLE) * CAST(x AS DOUBLE)")
-            + "), CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE) / 1e12"
-        )
-
-    scored = cand.select(
-        "qid",
-        "nid",
-        "approx_dot",
-        (dot / (F.sqrt(n2("qvec")) * F.sqrt(n2("cvec")))).alias("cos_sim"),
-    )
-    we = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "rank", "nid", "cos_sim", "approx_dot")
-    )
+    cos = S.cosine(S.dot_exact("qvec", "cvec"), S.norm2_exact("qvec"), S.norm2_exact("cvec"))
+    scored = cand.select("qid", "nid", "approx_dot", cos.alias("cos_sim"))
+    return top_k_per_group(
+        scored, ["qid"], [F.desc("cos_sim"), F.asc("nid")], 5, rank_col="rank"
+    ).select("qid", "rank", "nid", "cos_sim", "approx_dot")
 
 
 ORACLE_SQ8_RERANK_SEARCH = f"""
@@ -1358,7 +1341,7 @@ SELECT qid, rank, nid, cos_sim, approx_dot FROM (
 
 PQ_M = 8          # subspaces (dims must divide evenly)
 PQ_K = 16         # centroids per subspace → 4-bit codes
-PQ_ITERS = KM_ITERS
+PQ_ITERS = KM_ITERS  # the oracle unroll; _lloyd runs KM_ITERS rounds for both trainers
 PQ_TOPK = 10
 PQ_SHORTLIST = 50  # ADC candidates kept per query before exact rerank
 
@@ -1366,17 +1349,13 @@ _PQ_MEMO = SessionMemo("pq")
 
 
 def _train_pq(spark: SparkSession, sf_dir: str):
-    """Deterministic per-subspace k-means; returns (cids int64[k'],
-    C int64[PQ_M, k', sub_dims], sub_dims). Seed groups are the
-    coarse trainer's hash-mod classes (one seed VECTOR per class —
-    its m subvectors seed the m subspaces), the Lloyd sample is the
-    shared ``s:``-salted hash stream with s = n // (32·PQ_K), and
-    updates are exact floor-of-mean — every choice replayable in SQL
-    (ORACLE_PQ_* unroll the rounds). Memoized on the content
-    fingerprint like _KMEANS_MEMO: training once per dataset is the
-    production pattern (the codebook is an index-build artifact)."""
-    import numpy as np
-
+    """The product-quantizer codebook: ``_lloyd`` with m = PQ_M
+    subspaces and k = PQ_K, sample stride s = n // (32·PQ_K);
+    returns (cids int64[k'], C int64[PQ_M, k', sub_dims], sub_dims).
+    Every choice is replayable in SQL (ORACLE_PQ_* unroll the
+    rounds). Memoized on the content fingerprint like _KMEANS_MEMO:
+    training once per dataset is the production pattern (the
+    codebook is an index-build artifact)."""
     emb = _emb(spark, sf_dir)
     fp = _fingerprint(emb, sf_dir)
     memo_key = (sf_dir, fp["n"], fp["ids"], fp["c0"])
@@ -1386,76 +1365,10 @@ def _train_pq(spark: SparkSession, sf_dir: str):
     dims = _embedding_dims(sf_dir)
     if dims % PQ_M:
         raise ValueError(f"dims={dims} not divisible by PQ_M={PQ_M}")
-    sd = dims // PQ_M
     s = max(1, fp["n"] // (KM_SAMPLE_PER_CENTROID * PQ_K))
     q = emb.select("vec_id", F.expr(_QV_EXPR).alias("qv"))
-    seeds = (
-        q.select(
-            "qv",
-            F.expr(f"{_H16_SPARK} % {PQ_K}").alias("grp"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .groupBy("grp")
-        .agg(F.min_by("qv", "h").alias("qv"))
-        .collect()
-    )
-    cent = {int(r["grp"]): np.array(r["qv"], dtype=np.int64) for r in seeds}
-    cids = sorted(cent)
-    k = len(cids)
-    # C[sub, j_of_k, dim_in_sub]
-    C = np.stack([cent[c] for c in cids]).reshape(k, PQ_M, sd).transpose(1, 0, 2).copy()
-    carr = np.array(cids, dtype=np.int64)
-    sample = (
-        q.filter(F.expr(f"{_H16S_SPARK} % {s} = 0"))
-        .select("qv")
-        .localCheckpoint(eager=True)  # reused every Lloyd round
-    )
-    for _ in range(PQ_ITERS):
-        Cr = C
-
-        def round_fn(batches, Cr=Cr, carr=carr):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.asarray(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-                ).reshape(len(pdf), PQ_M, sd)
-                sub_o, cid_o, j_o, sum_o, cnt_o = [], [], [], [], []
-                for m in range(PQ_M):
-                    Xm, Cm = X[:, m, :], Cr[m]
-                    d2 = (
-                        (Xm * Xm).sum(axis=1)[:, None]
-                        - 2 * (Xm @ Cm.T)
-                        + (Cm * Cm).sum(axis=1)[None, :]
-                    )
-                    a = np.argmin(d2, axis=1)  # first min = min cid
-                    for jj in np.unique(a):
-                        mask = a == jj
-                        sub_o.extend([m] * sd)
-                        cid_o.extend([int(carr[jj])] * sd)
-                        j_o.extend(range(sd))
-                        sum_o.extend(Xm[mask].sum(axis=0).tolist())
-                        cnt_o.extend([int(mask.sum())] * sd)
-                yield pd.DataFrame(
-                    {"sub": sub_o, "cid": cid_o, "j": j_o, "psum": sum_o, "pcnt": cnt_o}
-                )
-
-        upd = (
-            sample.mapInPandas(round_fn, "sub long, cid long, j long, psum long, pcnt long")
-            .groupBy("sub", "cid", "j")
-            .agg(F.sum("psum").alias("sq"), F.sum("pcnt").alias("cnt"))
-            .collect()
-        )
-        C = C.copy()
-        cid_ix = {int(c): jj for jj, c in enumerate(carr)}
-        for r in upd:
-            # exact floor of the member mean (int // — identical to
-            # the oracle's posmod-subtract // form); absent
-            # (sub, cid) cells keep their previous centroid
-            C[int(r["sub"]), cid_ix[int(r["cid"])], int(r["j"])] = r["sq"] // r["cnt"]
-    out = (carr, C, sd)
+    cids, C = _lloyd(q, PQ_K, s, PQ_M)
+    out = (cids, C, dims // PQ_M)
     _PQ_MEMO.put(memo_key, out, dataset=memo_key[0])
     return out
 
@@ -1492,18 +1405,15 @@ def _pq_adc_ranked(
     Scale shape: one map-only Arrow pass over the corpus does
     [assign +] encode + ADC + LOCAL top-n (both codebooks ride in
     the closure); the global window ranks n·|queries| rows per
-    batch, never the corpus — the knn_bruteforce contract, but
-    scanning PQ_M-byte codes instead of 4·dims-byte vectors."""
+    batch, never the corpus — ``S.topk_scan``, scanning PQ_M-byte
+    codes instead of 4·dims-byte vectors."""
     import numpy as np
-    import pandas as pd
 
     cids, C, sd = _train_pq(spark, sf_dir)
     emb = _emb(spark, sf_dir)
     q = emb.select("vec_id", F.expr(_QV_EXPR).alias("qv"))
-    q_rows = q.filter(F.col("vec_id") < N_QUERIES).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Qm = np.asarray([np.asarray(r[1], dtype=np.int64) for r in q_rows])
-    Q = Qm.reshape(len(q_rows), PQ_M, sd)
+    qids, Qm = S.probe_matrix(q.filter(F.col("vec_id") < N_QUERIES), "vec_id", "qv", np.int64)
+    Q = Qm.reshape(len(qids), PQ_M, sd)
     # LUT[t, m, jj] = Σ_j (Q[t,m,j] − C[m,jj,j])² — exact int64
     lut = np.einsum("tmj,tmj->tm", Q, Q)[:, :, None] - 2 * np.einsum(
         "tmj,mkj->tmk", Q, C
@@ -1512,59 +1422,24 @@ def _pq_adc_ranked(
         kcids, KC, kp = _train_kmeans(spark, sf_dir)
         nprobe = min(kp["nprobe"], len(kcids))
         # query probe cells (driver-side: |queries|×k distances —
-        # the same closure-bounded matrix the assignment kernel
-        # ships); sorted arrays so the kernel filter is np.isin
-        d2q = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            - 2 * (Qm @ KC.T)
-            + (KC * KC).sum(axis=1)[None, :]
+        # the same closure-bounded matrix the assignment kernel ships)
+        probe_order = np.argsort(S.sq_dist(Qm, KC), axis=1, kind="stable")[:, :nprobe]
+        probe_cells = kcids[probe_order]
+
+    def score(pdf):
+        Xf = S.stack_rows(pdf["qv"], np.int64)
+        X = Xf.reshape(len(pdf), PQ_M, sd)
+        codes = np.stack(
+            [np.argmin(S.sq_dist(X[:, m, :], C[m]), axis=1) for m in range(PQ_M)], axis=1
         )
-        probe_order = np.argsort(d2q, axis=1, kind="stable")[:, :nprobe]
-        probe_cells = [np.sort(kcids[probe_order[t]]) for t in range(len(qids))]
+        adc = lut[:, np.arange(PQ_M)[None, :], codes].sum(axis=2)
+        if not ivf:
+            return adc, None
+        # coarse cell per vector: only queries probing it score it
+        cell = kcids[np.argmin(S.sq_dist(Xf, KC), axis=1)]
+        return adc, np.stack([np.isin(cell, probe_cells[t]) for t in range(len(qids))])
 
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            Xf = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
-            if ivf:
-                # coarse cell per vector (argmin; KC rows are
-                # cid-sorted so first min = min cid)
-                dc = (
-                    (Xf * Xf).sum(axis=1)[:, None]
-                    - 2 * (Xf @ KC.T)
-                    + (KC * KC).sum(axis=1)[None, :]
-                )
-                cell = kcids[np.argmin(dc, axis=1)]
-            X = Xf.reshape(len(pdf), PQ_M, sd)
-            codes = np.empty((len(pdf), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                Xm, Cm = X[:, m, :], C[m]
-                d2 = (
-                    (Xm * Xm).sum(axis=1)[:, None]
-                    - 2 * (Xm @ Cm.T)
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
-            out_q, out_n, out_d = [], [], []
-            for t in range(len(qids)):
-                keep = ids != qids[t]
-                if ivf:
-                    keep &= np.isin(cell, probe_cells[t])
-                if not keep.any():
-                    continue
-                adc = lut[t, np.arange(PQ_M)[None, :], codes[keep]].sum(axis=1)
-                a_ids = ids[keep]
-                order = np.lexsort((a_ids, adc))[:topn]
-                out_q.extend([int(qids[t])] * len(order))
-                out_n.extend(a_ids[order].tolist())
-                out_d.extend(adc[order].tolist())
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "adc_dist2": out_d})
-
-    local = q.mapInPandas(scan, "qid long, nid long, adc_dist2 long")
-    w = Window.partitionBy("qid").orderBy(F.asc("adc_dist2"), F.asc("nid"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= topn)
+    return S.topk_scan(q, qids, score, topn, "adc_dist2", "long", desc=False)
 
 
 def _exact_rerank(spark: SparkSession, sf_dir: str, short: DataFrame) -> DataFrame:
@@ -1591,12 +1466,9 @@ def _exact_rerank(spark: SparkSession, sf_dir: str, short: DataFrame) -> DataFra
             ),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.asc("l2_dist2"), F.asc("nid"))
-    return (
-        ex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= PQ_TOPK)
-        .select("qid", "rank", "nid", "adc_dist2", "l2_dist2")
-    )
+    return top_k_per_group(
+        ex, ["qid"], [F.asc("l2_dist2"), F.asc("nid")], PQ_TOPK, rank_col="rank"
+    ).select("qid", "rank", "nid", "adc_dist2", "l2_dist2")
 
 
 def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1870,41 +1742,17 @@ def _l2_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Exact integer squared-L2 top-k per probe query (ties → min
     nid, self excluded) — the TRUTH side for the PQ tiers, which
     rank by L2 (the cosine knn kernel is the truth for the cosine
-    tiers). Same shape as knn_bruteforce: query matrix in the
-    closure, corpus never shuffled, local top-k per batch."""
+    tiers). Runs on ``S.topk_scan`` like knn_bruteforce."""
     import numpy as np
-    import pandas as pd
 
     emb = _emb(spark, sf_dir)
     q = emb.select("vec_id", F.expr(_QV_EXPR).alias("qv"))
-    q_rows = q.filter(F.col("vec_id") < N_QUERIES).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Qm = np.asarray([np.asarray(r[1], dtype=np.int64) for r in q_rows])
+    qids, Qm = S.probe_matrix(q.filter(F.col("vec_id") < N_QUERIES), "vec_id", "qv", np.int64)
 
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
-            out_q, out_n, out_d = [], [], []
-            for t in range(len(qids)):
-                d2 = ((X - Qm[t]) ** 2).sum(axis=1)
-                keep = ids != qids[t]
-                a_ids, a_d2 = ids[keep], d2[keep]
-                order = np.lexsort((a_ids, a_d2))[:k]
-                out_q.extend([int(qids[t])] * len(order))
-                out_n.extend(a_ids[order].tolist())
-                out_d.extend(a_d2[order].tolist())
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "l2_dist2": out_d})
+    def score(pdf):
+        return S.sq_dist(Qm, S.stack_rows(pdf["qv"], np.int64)), None
 
-    local = q.mapInPandas(scan, "qid long, nid long, l2_dist2 long")
-    w = Window.partitionBy("qid").orderBy(F.asc("l2_dist2"), F.asc("nid"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid")
-    )
+    return S.topk_scan(q, qids, score, k, "l2_dist2", "long", desc=False).select("qid", "nid")
 
 
 def pq_tier_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2036,9 +1884,7 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = _jl_signs(dims)
     emb = _emb(spark, sf_dir)
     q = emb.select("vec_id", F.expr(_QV_EXPR).alias("qv"))
-    q_rows = q.filter(F.col("vec_id") < N_QUERIES).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Qraw = np.asarray([np.asarray(r[1], dtype=np.int64) for r in q_rows])
+    qids, Qraw = S.probe_matrix(q.filter(F.col("vec_id") < N_QUERIES), "vec_id", "qv", np.int64)
     Qp = Qraw @ signs
 
     def scan(batches):
@@ -2046,12 +1892,12 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+            X = S.stack_rows(pdf["qv"], np.int64)
             P = X @ signs  # (n, JL_DIMS) exact int64
+            PD, OD = S.sq_dist(Qp, P), S.sq_dist(Qraw, X)
             rows = []
             for t in range(len(qids)):
-                pd2 = ((P - Qp[t]) ** 2).sum(axis=1)
-                od2 = ((X - Qraw[t]) ** 2).sum(axis=1)
+                pd2, od2 = PD[t], OD[t]
                 keep = (ids != qids[t]) & (od2 > 0)
                 if not keep.any():
                     continue
@@ -2156,14 +2002,11 @@ def cell_pair_edges(v: DataFrame, theta: float) -> DataFrame:
             return pd.DataFrame({"d1": [], "d2": []}).astype({"d1": "int64", "d2": "int64"})
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
-        E = np.asarray(
-            [np.asarray(x, dtype=np.float64) for x in pdf["embedding"].to_numpy()[order]]
-        )
-        n2 = np.floor(E * E * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
+        E = S.stack_rows(pdf["embedding"].to_numpy()[order], np.float64)
+        n2 = S.fixed_dot(E, E)
         d1s, d2s = [], []
         for i in range(n - 1):
-            dots = np.floor(E[i] * E[i + 1 :] * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-            cos = dots / (np.sqrt(n2[i]) * np.sqrt(n2[i + 1 :]))
+            cos = S.fixed_dot(E[i], E[i + 1 :]) / (np.sqrt(n2[i]) * np.sqrt(n2[i + 1 :]))
             hit = np.nonzero(cos >= theta)[0]
             d1s.extend([ids[i]] * len(hit))
             d2s.extend(ids[i + 1 + hit])
@@ -2474,9 +2317,7 @@ def hierarchical_cells(spark: SparkSession, sf_dir: str, where=None, fp=None) ->
         k2 = max(1, -(-m_train // target))
         if k2 == 1 or m_train == 0:
             return pd.DataFrame({"vec_id": ids, "c1": c1, "c2": np.zeros(m, dtype=np.int64)})
-        X = np.asarray(
-            [np.asarray(x, dtype=np.int64) for x in pdf["qv"].to_numpy()[order]]
-        )
+        X = S.stack_rows(pdf["qv"].to_numpy()[order], np.int64)
         # seeds: argmin md5 hex within each hash-mod group OVER THE
         # TRAINING ROWS — the SAME rule as the distributed level-1
         # build
@@ -2492,17 +2333,14 @@ def hierarchical_cells(spark: SparkSession, sf_dir: str, where=None, fp=None) ->
         # rounds, exact floor-of-mean updates — mirroring _train_kmeans
         s = max(1, m_train // (KM_SAMPLE_PER_CENTROID * k2))
         samp = np.array([h16("s:", v) % s == 0 for v in ids]) & train
-        S = X[samp] if samp.any() else X[train]
+        Xs = X[samp] if samp.any() else X[train]
         for _ in range(KM_ITERS):
-            C = np.stack([cent[c] for c in cids])
-            d2 = (S * S).sum(1)[:, None] - 2 * (S @ C.T) + (C * C).sum(1)[None, :]
-            a = np.argmin(d2, axis=1)
+            a = np.argmin(S.sq_dist(Xs, np.stack([cent[c] for c in cids])), axis=1)
             for j in np.unique(a):
                 mask = a == j
-                cent[cids[j]] = np.floor_divide(S[mask].sum(0), int(mask.sum()))
+                cent[cids[j]] = np.floor_divide(Xs[mask].sum(0), int(mask.sum()))
         C = np.stack([cent[c] for c in cids])
-        d2 = (X * X).sum(1)[:, None] - 2 * (X @ C.T) + (C * C).sum(1)[None, :]
-        assign = np.asarray(cids, dtype=np.int64)[np.argmin(d2, axis=1)]
+        assign = np.asarray(cids, dtype=np.int64)[np.argmin(S.sq_dist(X, C), axis=1)]
         return pd.DataFrame({"vec_id": ids, "c1": c1, "c2": assign})
 
     cells = v.groupBy("c1").applyInPandas(cell_kmeans, "vec_id long, c1 long, c2 long")
@@ -2589,7 +2427,7 @@ hsamp0 AS MATERIALIZED (
   WHERE {_H16S_SQL.replace("vec_id", "t.vec_id")} % m.s = 0
 ),
 hsamp AS MATERIALIZED (
-  -- empty-sample cells fall back to ALL train rows (kernel: S = X[samp] if samp.any() else X[train])
+  -- empty-sample cells fall back to ALL train rows (kernel: Xs = X[samp] if samp.any() else X[train])
   SELECT c1, vec_id FROM hsamp0
   UNION ALL
   SELECT t.c1, t.vec_id FROM htrain t JOIN hmulti m USING (c1)
@@ -2749,21 +2587,15 @@ def cell_probe_new_vs_prior(v: DataFrame, theta: float) -> DataFrame:
             return pd.DataFrame(
                 {"vec_id": [], "cell": [], "n_dup_matches": []}
             ).astype({"vec_id": "int64", "cell": "int64", "n_dup_matches": "int64"})
-        E = np.asarray(
-            [np.asarray(x, dtype=np.float64) for x in pdf["embedding"].to_numpy()[order]]
-        )
-        n2 = np.floor(E * E * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
+        E = S.stack_rows(pdf["embedding"].to_numpy()[order], np.float64)
+        n2 = S.fixed_dot(E, E)
         out_id, out_n = [], []
         for idx in np.nonzero(odd)[0]:
             cand = (~odd) | (ids < ids[idx])
             cand[idx] = False
             n_match = 0
             if cand.any():
-                dots = (
-                    np.floor(E[idx] * E[cand] * 1e12 + 0.5).astype(np.int64).sum(axis=1)
-                    / 1e12
-                )
-                cos = dots / (np.sqrt(n2[idx]) * np.sqrt(n2[cand]))
+                cos = S.fixed_dot(E[idx], E[cand]) / (np.sqrt(n2[idx]) * np.sqrt(n2[cand]))
                 n_match = int((cos >= theta).sum())
             out_id.append(int(ids[idx]))
             out_n.append(n_match)
@@ -2915,13 +2747,13 @@ def hybrid_rrf_on(
         + F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col("sem_rank")), F.lit(0.0)),
         9,
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rrf_score", rrf)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("qid", "rank", "doc_id", "rrf_score", "lex_rank", "sem_rank")
-    )
+    return top_k_per_group(
+        fused.withColumn("rrf_score", rrf),
+        ["qid"],
+        [F.desc("rrf_score"), F.asc("doc_id")],
+        top_k,
+        rank_col="rank",
+    ).select("qid", "rank", "doc_id", "rrf_score", "lex_rank", "sem_rank")
 
 
 CLUSTER_LABEL_TOP_K = 5
@@ -3169,14 +3001,11 @@ def mmr_on(
         n = len(pdf)
         ids = pdf["doc_id"].to_numpy()
         rel = pdf["rel"].to_numpy(dtype=np.float64)
-        E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+        E = S.stack_rows(pdf["embedding"], np.float64)
         # exact pairwise cosines: same fixed-point arithmetic as
         # cosine_pairs_kernel / the oracle's scaled SUM
-        n2 = np.floor(E * E * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-        sim = np.empty((n, n))
-        for i in range(n):
-            dots = np.floor(E[i] * E * 1e12 + 0.5).astype(np.int64).sum(axis=1) / 1e12
-            sim[i] = dots / (np.sqrt(n2[i]) * np.sqrt(n2))
+        n2 = S.fixed_dot(E, E)
+        sim = S.fixed_dot(E[:, None, :], E[None, :, :]) / (np.sqrt(n2)[:, None] * np.sqrt(n2))
         remaining = np.ones(n, dtype=bool)
         # max-cosine-to-selected; -inf = empty set (step 1's penalty
         # is 0 by definition, but a NEGATIVE max over a non-empty set

@@ -103,12 +103,10 @@ class ZoneSignalProcessor(StatefulProcessor):
     same output schema as ``zone_signals_stateful``; the processor
     is differentially tested against the golden series by driving
     its StatefulProcessor contract directly with an in-memory
-    ValueState (tests/test_streaming_stateful.py). Runtime note:
-    transformWithState's Python driver-worker needs a working
-    ``google.protobuf``; where that dependency is absent (this
-    container ships none and installs are off-limits) the runtime
-    wire-up cannot execute and ``zone_signals_stateful`` is the
-    production path — the processor itself stays fully covered."""
+    ValueState (tests/test_streaming_stateful.py). No stream is
+    wired to it: ``transformWithStateInPandas`` needs
+    ``google.protobuf`` in the Python worker, so
+    ``zone_signals_stateful`` is the production path."""
 
     def init(self, handle) -> None:
         self.state = handle.getValueState("zone", STATE_SCHEMA)
@@ -127,15 +125,3 @@ class ZoneSignalProcessor(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-def zone_signals_tws(bars: DataFrame) -> DataFrame:
-    """bars (stream): (symbol_id long, bar long, rsi double) → fired
-    signals via ``transformWithStateInPandas`` (Spark 4 stateful
-    API). Append mode, processing-time (no timers used)."""
-    return bars.groupBy("symbol_id").transformWithStateInPandas(
-        statefulProcessor=ZoneSignalProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

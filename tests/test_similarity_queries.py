@@ -35,16 +35,62 @@ def test_ann_recall_bounds(spark):
     assert (pdf["n_hits"] <= pdf["k"]).all()
 
 
+def knn_bruteforce_numpy(corpus, queries, id_col="vec_id", vec_col="embedding", k=5):
+    """Float reference for ``knn_bruteforce``: one numpy matmul per
+    Arrow batch over L2-normalized vectors, local top-k per query,
+    then the same global window. ~IEEE-double accurate but NOT
+    bit-reproducible (BLAS folds in whatever order it likes)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    q_rows = queries.select(id_col, vec_col).collect()
+    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    qmat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        qmat = np.where(qnorm > 0, qmat / qnorm, np.nan)
+    q_ok = qnorm[:, 0] > 0
+
+    def score(batches):
+        for pdf in batches:
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            cmat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cmat = np.where(cnorm > 0, cmat / cnorm, np.nan)
+            sims = cmat @ qmat.T  # (n_corpus_batch, n_queries)
+            out_q, out_n, out_s = [], [], []
+            for j in range(len(qids)):
+                if not q_ok[j]:
+                    continue  # zero-norm query: cosine undefined, no neighbors
+                mask = (ids != qids[j]) & (cnorm[:, 0] > 0)
+                s, nid = sims[mask, j], ids[mask]
+                order = np.lexsort((nid, -s))[:k]
+                out_q.extend([qids[j]] * len(order))
+                out_n.extend(nid[order])
+                out_s.extend(s[order])
+            yield pd.DataFrame({"qid": out_q, "nid": out_n, "cos_sim": out_s})
+
+    c = corpus.select(id_col, vec_col)
+    scored = c.mapInPandas(score, "qid long, nid long, cos_sim double")
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "nid", "cos_sim")
+    )
+
+
 def test_knn_numpy_matches_exact_path(spark):
-    """The throughput (numpy matmul) kNN must return the same
-    neighbor sets as the exact decimal path, with scores equal to
-    float tolerance (bit-equality is exactly what it trades away)."""
+    """The float (numpy matmul) kNN reference must return the same
+    neighbor sets as the exact fixed-point path, with scores equal
+    to float tolerance (bit-equality is exactly what it trades
+    away)."""
     import pandas as pd
 
-    from fin_trade_craft_spark.operators.similarity import (
-        knn_bruteforce,
-        knn_bruteforce_numpy,
-    )
+    from fin_trade_craft_spark.operators.similarity import knn_bruteforce
     from fin_trade_craft_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -58,6 +104,93 @@ def test_knn_numpy_matches_exact_path(spark):
         exact[["qid", "rank", "nid"]], fast[["qid", "rank", "nid"]]
     )
     assert (exact["cos_sim"] - fast["cos_sim"]).abs().max() < 1e-9
+
+
+def test_topk_scan_contract_across_arrow_batches(spark):
+    """The shared top-k scan's contract with two-row Arrow batches,
+    so ties and winners are split across batches: tied scores
+    resolve to the smaller nid, a zero-norm corpus vector never
+    appears, a zero-norm query returns no rows, an empty probe set
+    returns the empty 4-column frame, and ``desc=False`` ranks an
+    integer score ascending. Checked against a pandas brute force."""
+    import numpy as np
+    import pandas as pd
+
+    from fin_trade_craft_spark.operators import similarity as S
+
+    # ids 2, 3 and 5 tie exactly for probe 1 (same direction); id 4
+    # is zero-norm; probe 9 is zero-norm. One partition in this row
+    # order makes the batches [5, 2], [3, 4], [1, 6], [7, 8], [9]:
+    # the batch [5, 2] must keep 2 when only one row survives it.
+    vecs = {
+        5: [3.0, 0.0, 0.0],
+        2: [2.0, 0.0, 0.0],
+        3: [0.5, 0.0, 0.0],
+        4: [0.0, 0.0, 0.0],
+        1: [1.0, 0.0, 0.0],
+        6: [1.0, 1.0, 0.0],
+        7: [0.0, 1.0, 0.0],
+        8: [-1.0, 0.5, 0.0],
+        9: [0.0, 0.0, 0.0],
+    }
+    rows = [(i, v) for i, v in vecs.items()]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        k = len(vecs)  # every candidate: a NULL score would surface
+        got = (
+            S.knn_bruteforce(emb, emb.filter("vec_id IN (1, 7, 9)"), k=k)
+            .toPandas()
+            .sort_values(["qid", "rank"])
+            .reset_index(drop=True)
+        )
+        # pandas brute force: cosine over non-zero pairs, self excluded
+        ref = []
+        for qid in (1, 7, 9):
+            q = np.array(vecs[qid])
+            if not q.any():
+                continue
+            cand = []
+            for nid, v in vecs.items():
+                c = np.array(v)
+                if nid == qid or not c.any():
+                    continue
+                cand.append((nid, float(q @ c / (np.linalg.norm(q) * np.linalg.norm(c)))))
+            cand.sort(key=lambda t: (-t[1], t[0]))
+            ref += [(qid, r + 1, nid, cs) for r, (nid, cs) in enumerate(cand[:k])]
+        ref = pd.DataFrame(ref, columns=["qid", "rank", "nid", "cos_sim"])
+        key = ["qid", "rank", "nid"]
+        assert got[key].values.tolist() == ref[key].values.tolist()
+        assert np.allclose(got["cos_sim"], ref["cos_sim"], atol=1e-9)
+        assert got[got["qid"] == 1]["nid"].tolist()[:3] == [2, 3, 5]  # exact tie → smaller nid
+        top1 = S.knn_bruteforce(emb, emb.filter("vec_id = 1"), k=1).collect()
+        assert [(r.rank, r.nid) for r in top1] == [(1, 2)]
+        assert 4 not in set(got["nid"]) and 9 not in set(got["qid"])
+
+        empty = S.knn_bruteforce(emb, emb.filter("vec_id < 0"), k=k)
+        assert empty.columns == ["qid", "rank", "nid", "cos_sim"]
+        assert empty.count() == 0
+
+        # integer score ranked ascending: |vec_id − probe| with ties
+        # (probe 5: ids 4 and 6 tie at 1, ids 3 and 7 at 2)
+        qids = np.array([5, 1], dtype=np.int64)
+
+        def score(pdf):
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            return np.abs(ids[None, :] - qids[:, None]), None
+
+        asc = (
+            S.topk_scan(emb, qids, score, 4, "d", "long", desc=False)
+            .toPandas()
+            .sort_values(["qid", "rank"])
+        )
+        assert asc[asc["qid"] == 5]["nid"].tolist() == [4, 6, 3, 7]
+        assert asc[asc["qid"] == 5]["d"].tolist() == [1, 1, 2, 2]
+        assert asc[asc["qid"] == 1]["nid"].tolist() == [2, 3, 4, 5]
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_srp_band_width_adapts():
