@@ -229,20 +229,15 @@ def main() -> None:
     # single shared JVM, first-touch whole-stage-codegen compilation
     # and GC pauses add 2-10s spikes that vary run-to-run (measured:
     # the same query swinging 1.6s ↔ 9s across bench invocations).
-    # min-of-2 reports the steady-state cost of the PLAN. What
-    # "steady state" means differs by cache discipline, and that is
-    # DELIBERATE (r8 review): queries wrapped in pin_on_first_action
-    # release their caches when `del df` drops the wrapper, so both
-    # attempts are cold and the min is a COLD steady state; queries
-    # with bare persist() leave their CacheManager entries alive
-    # (entries are plan-keyed and survive the DataFrame), so attempt
-    # 2 reads the filled index and the min is a WARM-index steady
-    # state — the production serving pattern for exactly those
-    # queries (built indexes and signature tables are reused, the
-    # same reason the graph family's cross-query edge reuse and the
-    # k-means codebook memo are left intact). localCheckpoint-era
-    # rounds (≤ r6) were uniformly cold; per-query comparisons
-    # across that boundary carry this caveat.
+    # min-of-2 reports the steady-state cost of the PLAN. Every
+    # cached frame has an owner (operators/memo.py): frames a query
+    # owns are released when `del df` drops its result, so attempt 2
+    # is as cold as attempt 1; frames a session memo owns (the LSH
+    # and semantic dedup state, k-means codebooks, the enriched
+    # documents, the graph family's undirected edge frame) stay
+    # cached, so attempt 2 of their consumers is WARM — the
+    # production serving pattern for built indexes and signature
+    # tables.
     # r09 verdict task 3: the session memos made single-number
     # benches order-dependent for the dedup family (a memo-family
     # query's attempt 1 may ride state a sibling built earlier in
@@ -266,17 +261,12 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
             # Release the previous attempt's materialized state
             # promptly: localCheckpoint RDDs are unpersisted via
-            # py4j finalizers, which only run when Python GC does —
-            # without this, leaked executor storage from earlier
-            # queries inflates later ones. persist()-ed frames DO
-            # outlive this (session CacheManager holds them by
-            # canonical plan — ADVICE r07); that is deliberate
-            # here: a blanket clearCache() between attempts was
-            # measured to DESTROY legitimate cross-query plan-cache
-            # reuse (the graph family shares its edge lineage:
-            # triangle_stats 0.73s → 20.9s with clearing) and
-            # queries wrapped in pin_on_first_action release their
-            # own pins via __del__ when `del df` drops them.
+            # py4j finalizers and pinned results release their
+            # caches in __del__, both of which run only when Python
+            # GC does — without this, leaked executor storage from
+            # earlier queries inflates later ones. No clearCache():
+            # it would also drop the session memos' frames, which
+            # later queries are meant to reuse.
             del df
             gc.collect()
         timings[name] = round(best, 3)

@@ -142,12 +142,10 @@ def compute_indicators(ohlcv: DataFrame) -> DataFrame:
     # would insert this exact exchange anyway (at
     # spark.sql.shuffle.partitions wide, or AQE-coalesced). Making it
     # explicit pins the window-stage width to signal_partitions (the
-    # width market_bars uses) and keeps the width deterministic when
-    # a consumer executes this lineage with AQE disabled (all_signals'
-    # eager checkpoint, which needs AQE off so the checkpoint
-    # preserves this partitioning — see trading_signals.all_signals).
-    # The shuffle count is unchanged either way; only its width is
-    # pinned.
+    # width market_bars uses), and all_signals' cached feature frame
+    # keeps this partitioning for its strategy windows (see
+    # trading_signals.all_signals). The shuffle count is unchanged
+    # either way; only its width is pinned.
     df = df.repartition(signal_partitions(ohlcv.sparkSession), "symbol_id")
     close, volume = F.col("close"), F.col("volume")
 

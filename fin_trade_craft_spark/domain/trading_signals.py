@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.memo import pin_on_first_action
+
 _OUT = ["symbol", "symbol_id", "date", "buy_signal", "sell_signal", "trade_strategy", "signal_strength"]
 
 
@@ -306,16 +308,17 @@ def all_signals(feat: DataFrame) -> DataFrame:
     """Every strategy over one feature frame, unioned — the
     ``transforms.trading_signals`` table.
 
-    The feature frame is materialized (eager localCheckpoint) before
-    the 11-way fan-out: a lazy ``persist`` still lets the 11 union
-    branches race to compute the indicator lineage (including the
-    EWM pandas island) before the cache fills, and every branch
-    carries the full plan through analysis/AQE — measured 13.8s vs
-    8.0s on the sf0.1 bench. The reference materializes the same
-    boundary implicitly (features live in a Postgres table); on a
-    cluster where executor loss matters, swap for a temp-table write
-    (``TableIO.overwrite`` + re-read) — same plan shape, replicated
-    storage.
+    The feature frame is persisted and filled eagerly (one
+    ``count()``) before the fan-out: left lazy, the union branches
+    race to compute the indicator lineage (including the EWM pandas
+    island) before the cache fills — measured 13.8s vs 8.0s on the
+    sf0.1 bench. The result is pinned on the feature frame with
+    ``fill=False``: dropping it releases the cache, so a caller must
+    keep it referenced until its write has run (operators/memo.py).
+    The reference materializes the same boundary implicitly (features
+    live in a Postgres table); on a cluster where executor loss
+    matters, swap for a temp-table write (``TableIO.overwrite`` +
+    re-read) — same plan shape, replicated storage.
     """
     # Project to exactly the columns the 11 strategies read BEFORE
     # materializing (r12, guide §5 "project early"): the checkpoint
@@ -349,37 +352,24 @@ def all_signals(feat: DataFrame) -> DataFrame:
         "ohlcv_volume_sma_20",
         "ohlcv_willr_14",
     )
-    # Execute the checkpoint with AQE disabled (r12, guide §2.4
-    # "remove shuffles outright"): Dataset.localCheckpoint preserves
-    # the physical plan's outputPartitioning/outputOrdering in the
-    # resulting LogicalRDD, but under AQE the executed plan is an
-    # AdaptiveSparkPlanExec whose outputPartitioning reports
-    # UnknownPartitioning — so the checkpoint forgot that the feature
-    # frame is hash-partitioned by symbol_id and sorted by (symbol_id,
-    # date), and EVERY windowed strategy branch re-shuffled AND
-    # re-sorted the frame (measured: 10 Exchanges + 10 Sorts in the
-    # 11-way union; at scale that is 10 redundant full-frame shuffles
-    # per run). With AQE off for this one execution the preserved
-    # metadata satisfies each branch's window requirements exactly:
-    # 0 Exchanges, 0 Sorts (plans/r12/fin_signals_pipeline_after.txt).
-    # The width AQE would have tuned is pinned instead by the explicit
-    # signal_partitions repartition inside compute_indicators. Values
-    # are unchanged by construction — same rows, same per-key order —
-    # and the end-to-end fin_signals_pipeline value oracle pins it.
-    spark = feat.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        feat = feat.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    # A cached frame keeps its plan's output partitioning and
+    # ordering under AQE: the feature frame is hash-partitioned by
+    # symbol_id and sorted by (symbol_id, date), which satisfies
+    # every windowed strategy branch — 0 Exchanges, 0 Sorts above the
+    # cache scan. (An eager localCheckpoint under AQE forgets both,
+    # and the branches re-shuffle and re-sort it.) The width is
+    # pinned by the explicit signal_partitions repartition inside
+    # compute_indicators.
+    feat = feat.persist()
+    feat.count()
     # The nine lag-based/stateless strategies run as ONE fused window
     # pass + inline-explode (see _fused_lag_signals: an 11-way union
     # pays per-branch planning/codegen); only the two structurally
     # distinct strategies (price_breakout's two-stage rolling windows,
     # rsi_divergence's pivot lattice) remain union branches.
-    return (
+    signals = (
         _fused_lag_signals(feat)
         .unionByName(price_breakout(feat))
         .unionByName(rsi_divergence(feat))
     )
+    return pin_on_first_action(signals, [feat], fill=False)

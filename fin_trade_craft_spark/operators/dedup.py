@@ -104,6 +104,7 @@ def exact_jaccard_pairs(
     min_jaccard: float = 0.5,
     candidates: DataFrame | None = None,
     max_rows: int = EXACT_TIER_MAX_ROWS,
+    pins: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs ≥ threshold.
 
@@ -113,7 +114,9 @@ def exact_jaccard_pairs(
     linear in candidates, the 100 TB shape. Without it, all pairs
     sharing ≥1 shingle are scored via a shingle self-join —
     quadratic in colliding docs; exact-verification/fixture tier
-    only.
+    only. That tier persists its exploded shingle frame and appends
+    it to ``pins``, the caller's pin list, which it therefore
+    requires.
 
     Shape matters more than the math here: set sizes ride along on
     the exploded frame (one pass over the tokenize→shingle chain
@@ -156,6 +159,8 @@ def exact_jaccard_pairs(
             F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
         )
         return out.filter(F.col("jaccard") >= min_jaccard)
+    if pins is None:
+        raise TypeError("the candidate-free tier persists a frame: pass the caller's pins list")
     # The candidate-free branch is the FIXTURE/VERIFIER tier: its
     # shingle self-join is quadratic in colliding docs — refuse
     # corpus-sized inputs instead of silently launching an n² stage
@@ -182,6 +187,7 @@ def exact_jaccard_pairs(
         # with exchanges runs its upstream stages at toRdd time).
         .persist()
     )
+    pins.append(base)
     a = base.select(F.col(id_col).alias("d1"), F.col("n_sh").alias("n1"), "sh")
     b = base.select(F.col(id_col).alias("d2"), F.col("n_sh").alias("n2"), "sh")
     inter = (
@@ -625,7 +631,12 @@ def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 
 
 def simhash_hamming_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", n_bits: int = 64, n_bands: int = 4, max_hamming: int = 6
+    sigs: DataFrame,
+    pins: list[DataFrame],
+    id_col: str = "doc_id",
+    n_bits: int = 64,
+    n_bands: int = 4,
+    max_hamming: int = 6,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance ≤ ``max_hamming`` over
     SimHash signatures, found WITHOUT an all-pairs scan: band the
@@ -636,13 +647,15 @@ def simhash_hamming_pairs(
     n_bands · (bits differing can't hit every band); with 64 bits /
     4 bands the guarantee holds for distance ≤ 3 and is a
     high-recall heuristic up to 6 (a miss needs the ≥4 flipped bits
-    to spread across all 4 bands)."""
+    to spread across all 4 bands). The persisted signature frame is
+    appended to ``pins``, the caller's pin list."""
     band_w = n_bits // n_bands
     # Materialize: the signature plan (n_bits aggregates over every
     # token) feeds both sides of the band self-join — don't run it
     # twice. At cluster scale this is a temp-table write instead.
     # persist() keeps construction job-free.
     sigs = sigs.persist()
+    pins.append(sigs)
     bands = F.array(
         *[
             F.concat_ws("|", F.lit(str(b)), F.substring("simhash", b * band_w + 1, band_w))
@@ -662,12 +675,13 @@ def simhash_hamming_pairs(
         f"aggregate(sequence(1, {n_bits}), 0,"
         " (acc, i) -> acc + IF(substr(s1, i, 1) <> substr(s2, i, 1), 1, 0))"
     ).cast("bigint")
-    # NOT pinned: unlike the minhash chain (three DISTINCT consumers
-    # of the shingle cache — pin measured 0.92 vs 1.28s median), the
-    # band SELF-join's two sides are the identical subplan and Spark
-    # plans a ReusedExchange — the signature kernel already runs
-    # once, and a pin's count() is a pure extra pass (A/B at sf0.1,
-    # 4 reps: pinned 2.64s vs 1.75s median).
+    # No fill (callers pin with fill=False): unlike the minhash chain
+    # (three DISTINCT consumers of the shingle cache — fill measured
+    # 0.92 vs 1.28s median), the band SELF-join's two sides are the
+    # identical subplan and Spark plans a ReusedExchange — the
+    # signature kernel already runs once, and a fill's count() is a
+    # pure extra pass (A/B at sf0.1, 4 reps: filled 2.64s vs 1.75s
+    # median).
     return (
         cands.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)

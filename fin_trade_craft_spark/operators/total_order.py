@@ -34,12 +34,13 @@ consumer tree funnels through exactly ONE broadcast build whose
 innermost stage is the first computation of that cache; the probe
 side cannot launch until the build completes, so the cache fills
 once and everything downstream — offsets, totals, output rows —
-reads the same stored partitions. (Plain exchange reuse is NOT
-relied on: each range exchange samples its own boundaries — the
-cached frame is the guarantee the r0x eager localCheckpoint
-provided, minus the construction-time job.) The cache carries the
-same footprint the localCheckpoint did; MEMORY_AND_DISK spills
-rather than evicts under pressure.
+reads the same stored partitions. Plain exchange reuse is NOT relied
+on: each range exchange samples its own boundaries, so the cache is
+what makes offsets and rows agree. Each operator therefore appends
+the persisted frame to the caller's ``pins`` list (a required
+argument), and the caller owns its release (operators/memo.py): the
+result must stay referenced until its last action has run.
+MEMORY_AND_DISK spills rather than evicts under pressure.
 
 Use these for GLOBAL (or few-huge-group) cross-sectional ranks —
 e.g. the daily screener's market-wide percentiles, per-language
@@ -55,19 +56,17 @@ from pyspark.sql import functions as F
 _PID = "__pid"
 
 
-def _range_partitioned(df: DataFrame, order_cols: list) -> DataFrame:
+def _range_partitioned(df: DataFrame, order_cols: list, pins: list[DataFrame]) -> DataFrame:
     """Range-partition on the order columns and pin each row's
-    partition id. Lazily persisted — and race-free WITHOUT an eager
-    pin, because every consumer tree built here funnels through ONE
-    broadcast build whose innermost stage is the first (and only)
-    computation of this cache; the probe side can't launch until
-    that build completes (see _prefix_and_total)."""
+    partition id. Lazily persisted and appended to ``pins`` — and
+    race-free WITHOUT a fill, because every consumer tree built here
+    funnels through ONE broadcast build whose innermost stage is the
+    first (and only) computation of this cache; the probe side can't
+    launch until that build completes (see _prefix_and_total)."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.repartitionByRange(n, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
-    )
+    rp = df.repartitionByRange(n, *order_cols).withColumn(_PID, F.spark_partition_id()).persist()
+    pins.append(rp)
+    return rp
 
 
 def _per_partition_agg(rp: DataFrame, group_cols: list[str], agg: Column) -> DataFrame:
@@ -163,6 +162,8 @@ def global_row_number(
     out: str = "rn",
     group_cols: list[str] | None = None,
     _with_totals: bool = False,
+    *,
+    pins: list[DataFrame],
 ):
     """Global (or per-group) ROW_NUMBER over a total order, no
     single-partition stage, no construction-time job. ``order_cols``
@@ -176,7 +177,7 @@ def global_row_number(
     counts as the offsets — via the single merged broadcast frame,
     never a second build racing the first (see _prefix_and_total)."""
     group_cols = group_cols or []
-    rp = _range_partitioned(df, [*group_cols, *order_cols])
+    rp = _range_partitioned(df, [*group_cols, *order_cols], pins)
     cnt = _per_partition_agg(rp, group_cols, F.count(F.lit(1)))
     if _with_totals:
         off = _prefix_and_total(cnt, group_cols)
@@ -198,13 +199,15 @@ def global_percent_rank(
     value_col: str,
     out: str,
     group_cols: list[str] | None = None,
+    *,
+    pins: list[DataFrame],
 ) -> DataFrame:
     """PERCENT_RANK() OVER (ORDER BY value_col) at scale:
     (min-rank-of-ties − 1) / (n − 1), exactly Spark/ANSI semantics.
     Ties need no explicit tiebreak — equal values share one range
     partition and collapse via min()."""
     group_cols = group_cols or []
-    base = global_row_number(df, [value_col], "__rn", group_cols, _with_totals=True)
+    base = global_row_number(df, [value_col], "__rn", group_cols, _with_totals=True, pins=pins)
     # ties collapse to min rank via a window keyed on the VALUE
     # (partitioned — never an empty partition spec); group totals
     # __n ride the same broadcast as the offsets
@@ -225,6 +228,8 @@ def global_ntile(
     order_cols: list,
     out: str = "tile",
     group_cols: list[str] | None = None,
+    *,
+    pins: list[DataFrame],
 ) -> DataFrame:
     """NTILE(n) OVER ([PARTITION BY group] ORDER BY order_cols) at
     scale. ``order_cols`` must be a total order (unique tiebreak) —
@@ -232,7 +237,7 @@ def global_ntile(
     Exact NTILE fill semantics: the first (n mod k) tiles get
     ⌈n/k⌉ rows, the rest ⌊n/k⌋."""
     group_cols = group_cols or []
-    base = global_row_number(df, order_cols, "__rn", group_cols, _with_totals=True)
+    base = global_row_number(df, order_cols, "__rn", group_cols, _with_totals=True, pins=pins)
     # qv = floor(n/k) rows per small tile; the first r = n mod k
     # tiles get qv+1 rows (ANSI NTILE fill). Pure integer DIV — a
     # double division could round up across a tile boundary at
@@ -252,6 +257,8 @@ def global_prefix_sum(
     order_cols: list,
     value_col: str,
     out: str = "run_sum",
+    *,
+    pins: list[DataFrame],
 ) -> DataFrame:
     """INCLUSIVE running SUM of ``value_col`` over a global total
     order — the distributed scan-sum primitive (systematic/PPS
@@ -264,7 +271,7 @@ def global_prefix_sum(
     ``value_col`` (BIGINT accumulation — use the fixed-point
     discipline of functions/exact.py first if the weights are
     doubles)."""
-    rp = _range_partitioned(df, order_cols)
+    rp = _range_partitioned(df, order_cols, pins)
     cnt = _per_partition_agg(rp, [], F.sum(F.col(value_col)))
     off = _exclusive_prefix(cnt, [], F.sum("__v2"), F.lit(0).cast("long"))
     w = Window.partitionBy(_PID).orderBy(*order_cols)
@@ -281,6 +288,8 @@ def range_prefix_scan_max(
     order_cols: list,
     value_col: str,
     out: str = "run_max",
+    *,
+    pins: list[DataFrame],
 ) -> DataFrame:
     """Exclusive running MAX of ``value_col`` over a global total
     order (the sort-scan primitive behind skyline/Pareto queries),
@@ -290,7 +299,7 @@ def range_prefix_scan_max(
     and MAX ignores it in the combine). Rows where no predecessor
     exists get NULL — same as a window frame of
     (unbounded preceding, -1)."""
-    rp = _range_partitioned(df, order_cols)
+    rp = _range_partitioned(df, order_cols, pins)
     cnt = _per_partition_agg(rp, [], F.max(F.col(value_col)))
     # max ignores NULLs; a first partition (no predecessors) gets NULL
     off = _exclusive_prefix(cnt, [], F.max("__v2"), F.lit(None)).withColumnRenamed(

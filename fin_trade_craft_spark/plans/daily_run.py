@@ -170,10 +170,18 @@ def run_daily_market(
             io.upsert(feats, T_FEATURES, ["symbol_id", "date"])
             st.done(io.read(T_FEATURES).count())
         with _staged(rep, "signals") as st:
+            # keep the pinned result referenced until the upsert has
+            # run: dropping it releases the feature cache the plan
+            # reads, and the release must happen inside this run
             sig = all_signals(io.read(T_FEATURES).join(
                 F.broadcast(work_ids), "symbol_id", "semi"
-            )).withColumn("processed_at", F.current_timestamp())
-            io.upsert(sig, T_SIGNALS, ["symbol_id", "date", "trade_strategy"])
+            ))
+            io.upsert(
+                sig.withColumn("processed_at", F.current_timestamp()),
+                T_SIGNALS,
+                ["symbol_id", "date", "trade_strategy"],
+            )
+            del sig
             st.done(io.read(T_SIGNALS).count())
 
     # ---- stage 5: screener (market-wide rank — always recomputes) ----

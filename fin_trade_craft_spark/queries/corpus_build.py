@@ -111,7 +111,6 @@ def _enrich_projection(docs: DataFrame) -> DataFrame:
 def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..operators.pinning import mark_session_owned
     from ..sources.catalog import path_stamp
 
     key = (
@@ -126,7 +125,6 @@ def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     df = _enrich_projection(docs).persist()
-    mark_session_owned(df)
     _ENRICHED_MEMO.put(key, df, dataset=key[1])
     return df
 

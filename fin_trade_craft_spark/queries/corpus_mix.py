@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..operators.memo import pin_on_first_action
 from ..operators.total_order import global_ntile, global_prefix_sum
 from ..sources.catalog import load_table
 
@@ -460,15 +461,15 @@ def length_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # BIGINT len()/aggregates without per-column casts
         F.size(T.tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
-    # Race-free without a pin: global_ntile funnels through ONE
+    # Race-free without a fill: global_ntile funnels through ONE
     # broadcast build whose innermost stage computes the cached
     # range exchange (= the tokenize-everything pass) exactly once
-    # before the probe launches (r07 bench regressed 0.91→1.99s when
-    # TWO builds — offsets and totals — raced that lineage).
+    # before the probe launches; the pin only releases it.
+    pins: list[DataFrame] = []
     staged = global_ntile(
-        d, 4, [F.col("n_tokens"), F.col("doc_id")], "stage", group_cols=["lang"]
+        d, 4, [F.col("n_tokens"), F.col("doc_id")], "stage", group_cols=["lang"], pins=pins
     )
-    return (
+    out = (
         staged.groupBy("lang", "stage")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -478,6 +479,7 @@ def length_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "stage")
     )
+    return pin_on_first_action(out, pins, fill=False)
 
 
 ORACLE_LENGTH_CURRICULUM_BUCKETS = f"""
@@ -788,15 +790,17 @@ def pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("w")
     )
-    cum = global_prefix_sum(d, ["doc_id"], "w", out="cum")
+    pins: list[DataFrame] = []
+    cum = global_prefix_sum(d, ["doc_id"], "w", out="cum", pins=pins)
     total = d.agg(F.sum("w").alias("tw"))
     k = int(PPS_SAMPLE_K)
     n_hits = F.expr(f"cum * {k} DIV tw - (cum - w) * {k} DIV tw")
-    return (
+    out = (
         cum.join(F.broadcast(total))
         .select("doc_id", "source", "w", "cum", n_hits.alias("n_hits"))
         .filter(F.col("n_hits") >= 1)
     )
+    return pin_on_first_action(out, pins, fill=False)
 
 
 ORACLE_PPS_SYSTEMATIC_SAMPLE = f"""

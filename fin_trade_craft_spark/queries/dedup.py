@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..operators import dedup as D
-from ..operators.pinning import mark_session_owned, pin_on_first_action
+from ..operators.memo import SessionMemo, pin_on_first_action
 from ..sources.catalog import load_table
 
 _NORM = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
@@ -60,11 +60,8 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frame is built on first request by a CC consumer, whose
 # construction is already on the lint's exemption list (the
 # component edge checkpoint and fetch are jobs by design). The memo
-# frames are registered via pinning.mark_session_owned, so no query
-# result's GC ever releases them: the caches belong to the session,
-# not to any one query result.
-from ..operators.memo import SessionMemo
-
+# owns these frames: a query result that pins them fills them but
+# never releases them (operators/memo.py).
 _LSH_MEMO = SessionMemo("lsh")
 
 
@@ -96,7 +93,6 @@ def _lsh_state(spark: SparkSession, sf_dir: str) -> dict:
         ).persist()
         pairs = scored.filter(F.col("jaccard") >= 0.5)
         st = {"sets": sets, "scored": scored, "pairs": pairs, "cc": None}
-        mark_session_owned(sets, scored)
         _LSH_MEMO.put(key, st, dataset=key[1])
     return st
 
@@ -110,7 +106,6 @@ def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = _lsh_state(spark, sf_dir)
     if st["cc"] is None:
         st["cc"] = D.connected_components(st["pairs"]).persist()
-        mark_session_owned(st["cc"])
     return st["cc"]
 
 
@@ -136,7 +131,9 @@ FROM h JOIN g USING (content_md5)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (threshold 0.5)."""
     sets = D.with_shingle_sets(_docs_wide(spark, sf_dir))
-    return D.exact_jaccard_pairs(sets, min_jaccard=0.5).select("d1", "d2", "inter", "n1", "n2", "jaccard")
+    pins: list[DataFrame] = []
+    pairs = D.exact_jaccard_pairs(sets, min_jaccard=0.5, pins=pins)
+    return pin_on_first_action(pairs.select("d1", "d2", "inter", "n1", "n2", "jaccard"), pins, fill=False)
 
 
 ORACLE_DEDUP_NGRAM_JACCARD = f"""
@@ -207,8 +204,9 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_recall's brute-force side); the candidate side is the
     production banding; the comparison joins two pair sets on
     (d1, d2)."""
-    sets = D.with_shingle_sets(_docs_wide(spark, sf_dir)).persist()
-    truth = D.exact_jaccard_pairs(sets, min_jaccard=0.5).select("d1", "d2", "jaccard")
+    sets = _lsh_state(spark, sf_dir)["sets"]
+    pins: list[DataFrame] = []
+    truth = D.exact_jaccard_pairs(sets, min_jaccard=0.5, pins=pins).select("d1", "d2", "jaccard")
     sigs = D.minhash_signatures(sets, num_perm=8)
     cands = D.lsh_candidate_pairs(sigs, num_perm=8, rows_per_band=2).withColumn(
         "hit", F.lit(1)
@@ -219,7 +217,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("jaccard") >= 0.7, "0.7-0.9")
         .otherwise("0.5-0.7")
     )
-    return (
+    out = (
         j.groupBy(band.alias("j_band"))
         .agg(
             F.count(F.lit(1)).alias("n_true_pairs"),
@@ -235,6 +233,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("j_band")
     )
+    return pin_on_first_action(out, pins, fill=False)
 
 
 _MH_COLS = ",\n".join(
@@ -477,9 +476,8 @@ def leakage_safe_split_on(docs: DataFrame, _state=None) -> DataFrame:
     # (same race dedup_jaccard_verified documents); the component
     # loop is a construction-time action by design (dedup_clusters'
     # exemption) and fills the cache first anyway — the pin makes
-    # that explicit rather than incidental. (Session-memoized state
-    # is exempt from the wrapper's GC-release via mark_session_owned;
-    # test-built pins release as before.)
+    # that explicit rather than incidental. (The wrapper never
+    # releases memo-held state; test-built pins release with it.)
     return pin_on_first_action(out, [sets])
 
 
@@ -721,7 +719,9 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join — the Hamming-radius dedup tier: no all-pairs scan,
     candidates come from an equi-join on 16-bit signature bands."""
     sigs = D.simhash_bits(_docs_wide(spark, sf_dir), n_bits=64)
-    return D.simhash_hamming_pairs(sigs, n_bits=64, n_bands=4, max_hamming=6)
+    pins: list[DataFrame] = []
+    pairs = D.simhash_hamming_pairs(sigs, pins, n_bits=64, n_bands=4, max_hamming=6)
+    return pin_on_first_action(pairs, pins, fill=False)
 
 
 def _simhash64_sql_bits() -> str:
@@ -774,7 +774,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     band equi-join and appends its own signatures; the historical
     corpus is never re-tokenized or re-hashed, and the probe cost is
     proportional to the BATCH, not the corpus."""
-    sets = D.with_shingle_sets(_docs_wide(spark, sf_dir)).persist()
+    sets = _lsh_state(spark, sf_dir)["sets"]
     # materialize: the signature build feeds BOTH sides of the band
     # self-join — without this the md5 hashing runs twice
     sigs = D.minhash_signatures(sets, num_perm=8).persist()
@@ -801,7 +801,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
     new_docs = _docs(spark, sf_dir).filter(F.col("doc_id") % 2 == 1).select("doc_id")
-    return (
+    out = (
         new_docs.join(matches, new_docs.doc_id == matches.d2, "left")
         .select(
             "doc_id",
@@ -810,6 +810,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
+    return pin_on_first_action(out, [sigs], fill=False)
 
 
 ORACLE_INCREMENTAL_DEDUP_INGEST = f"""

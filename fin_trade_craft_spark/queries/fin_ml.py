@@ -546,7 +546,7 @@ def label_uniqueness_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(F.col("ts"), F.lit(0.0), lambda acc, x: acc + x).alias("inv_sum"),
         )
     )
-    from ..operators.pinning import pin_on_first_action
+    from ..operators.memo import pin_on_first_action
 
     result = (
         lbl.join(folded, ["user_id", "rn"])

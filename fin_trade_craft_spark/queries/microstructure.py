@@ -350,7 +350,7 @@ def cross_sectional_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inner join ⇒ only co-traded days count)."""
     from .fin_domain import ohlcv_resample
 
-    from ..operators.pinning import pin_on_first_action
+    from ..operators.memo import pin_on_first_action
 
     bars = ohlcv_resample(spark, sf_dir).select(
         "user_id", "date", F.col("close").cast("decimal(18,2)").alias("close_d")

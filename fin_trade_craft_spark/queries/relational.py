@@ -1550,6 +1550,7 @@ def pareto_front_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition WindowExec anywhere (the r04 shape had one;
     the plan lint now bans it); every sort partition is ~|parts|/P
     rows."""
+    from ..operators.memo import pin_on_first_action
     from ..operators.total_order import range_prefix_scan_max
 
     p = _t(spark, sf_dir, "part")
@@ -1557,18 +1558,18 @@ def pareto_front_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.groupBy("p_retailprice", "p_size")
         .agg(F.min("p_partkey").alias("p_partkey"))
     )
+    pins: list[DataFrame] = []
     scanned = range_prefix_scan_max(
         dedup,
         [F.asc("p_retailprice"), F.desc("p_size"), F.asc("p_partkey")],
         "p_size",
         "runmax_size",
+        pins=pins,
     ).select("p_partkey", "p_retailprice", "p_size", "runmax_size")
-    return (
-        scanned.filter(
-            F.col("runmax_size").isNull() | (F.col("p_size") > F.col("runmax_size"))
-        )
-        .select("p_partkey", "p_retailprice", "p_size")
-    )
+    front = scanned.filter(
+        F.col("runmax_size").isNull() | (F.col("p_size") > F.col("runmax_size"))
+    ).select("p_partkey", "p_retailprice", "p_size")
+    return pin_on_first_action(front, pins, fill=False)
 
 
 ORACLE_PARETO_FRONT_PARTS = """

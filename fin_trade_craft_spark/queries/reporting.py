@@ -26,14 +26,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum
+from ..operators.memo import pin_on_first_action
 from ..operators.total_order import global_percent_rank
 from ..sources.catalog import load_table
 
 
-def _screener_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _screener_top25(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """Composite-scored top-25 screener table, WITH the customer key
     (``pick_key``) — the handle the chart-input extraction joins bars
-    back on. ``daily_screener`` is this minus the key.
+    back on. ``daily_screener`` is this minus the key. The rank's
+    range-partitioned frame is appended to ``pins``; the caller pins
+    it on the frame it returns.
 
     Scale notes: the three market-wide percent ranks are GLOBAL
     cross-sectional ranks (reference semantics) but run through
@@ -81,7 +84,7 @@ def _screener_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 'aov', avg_order_value) AS (metric, value)"
         ),
     )
-    ranked = global_percent_rank(long, "value", "pr", group_cols=["metric"])
+    ranked = global_percent_rank(long, "value", "pr", group_cols=["metric"], pins=pins)
     scored = (
         ranked.groupBy(*carry)
         .pivot("metric", ["ts", "vol", "aov"])
@@ -131,7 +134,11 @@ def _screener_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
 def daily_screener(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The screener's public reference contract (no key column —
     the reference's table_screener.py displays names only)."""
-    return _screener_top25(spark, sf_dir).drop("pick_key")
+    pins: list[DataFrame] = []
+    top = _screener_top25(spark, sf_dir, pins).drop("pick_key")
+    # no fill: the rank's single broadcast funnel fills the range cache
+    # once (operators/total_order); the pin is there for the release
+    return pin_on_first_action(top, pins, fill=False)
 
 
 ORACLE_DAILY_SCREENER = """
@@ -456,10 +463,9 @@ def top25_chart_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join's broadcast build and the final header join) —
     # persist + pin so the screener's rank pipeline runs once, not
     # twice (the r07 shared-branch discipline; the frame is 25 rows).
-    from ..operators.pinning import pin_on_first_action
-
+    pins: list[DataFrame] = []
     picks = (
-        _screener_top25(spark, sf_dir)
+        _screener_top25(spark, sf_dir, pins)
         .select(
             "pick_key",
             "symbol",
@@ -530,7 +536,7 @@ def top25_chart_input(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("symbol", "pick_key", "date")
         .drop("pick_key")
     )
-    return pin_on_first_action(result, [picks])
+    return pin_on_first_action(result, [*pins, picks])
 
 
 ORACLE_TOP25_CHART_INPUT = f"""

@@ -239,7 +239,7 @@ def kmeans_params(n: int) -> dict:
 # exact integer sum of ids and first components), so a dataset
 # regenerated in place under the same path — even at the same
 # cardinality — misses the cache.
-from ..operators.memo import SessionMemo
+from ..operators.memo import SessionMemo, pin_on_first_action, take_pins
 
 _KMEANS_MEMO = SessionMemo("kmeans")
 
@@ -710,6 +710,7 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bucketing, the cellmap, and the representative build — one
         # materialization at first action, none at construction
         hc = hierarchical_cells(spark, sf_dir, fp=fp).persist()
+        pins = [hc]
         corpus = (
             hc.select("vec_id", F.col("cell_id").alias("bucket"))
             .join(emb, "vec_id")
@@ -779,6 +780,7 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         scores = _cell_scores(
             spark, sf_dir, max_rank=nprobe, trained=trained
         ).persist()
+        pins = [scores]
         corpus = (
             scores.filter(F.col("rn") == 1)
             .select("vec_id", F.col("cid").alias("bucket"))
@@ -796,9 +798,10 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probes.join(corpus, "bucket").filter(F.col("qid") != F.col("nid"))
     cos = S.cosine(S.dot_exact("e1", "e2"), S.norm2_exact("e1"), S.norm2_exact("e2"))
     scored = cand.select("qid", "nid", cos.alias("cos_sim"))
-    return top_k_per_group(
+    top = top_k_per_group(
         scored, ["qid"], [F.desc("cos_sim"), F.asc("nid")], IVF_K, rank_col="rank"
     ).select("qid", "rank", "nid", "cos_sim")
+    return pin_on_first_action(top, pins, fill=False)
 
 
 ORACLE_IVF_SEARCH = f"""
@@ -1041,14 +1044,15 @@ def srp_lsh_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the HOF-expression form (same fixed-point sums), but one
     # numpy pass per batch instead of three interpreted 64-element
     # folds per candidate pair (the verify stage dominated sf1 wall)
-    # NOT pinned: the band self-join's two sides are the identical
+    # No fill: the band self-join's two sides are the identical
     # subplan — Spark plans a ReusedExchange over the persisted
-    # signature frame, so the kernel already runs once; a pin's
-    # count() is a pure extra pass (A/B at sf0.1, 4 reps: pinned
+    # signature frame, so the kernel already runs once; a fill's
+    # count() is a pure extra pass (A/B at sf0.1, 4 reps: filled
     # 1.69s vs 0.98s median — same verdict as the simhash band
     # join, opposite of the minhash chain whose three consumers are
-    # distinct plans).
-    return S.cosine_pairs_kernel(pairs).filter(F.col("cos_sim") >= 0.35)
+    # distinct plans). The pin is there for the release.
+    dupes = S.cosine_pairs_kernel(pairs).filter(F.col("cos_sim") >= 0.35)
+    return pin_on_first_action(dupes, [sigs], fill=False)
 
 
 ORACLE_SRP_LSH_NEAR_DUPES = """
@@ -1110,8 +1114,9 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     each already scale-shaped (IVF probes buckets, brute force is
     the deliberate exact baseline)."""
     exact = knn_bruteforce(spark, sf_dir).select("qid", "nid")
-    approx = ivf_search(spark, sf_dir).select("qid", "nid", F.lit(1).alias("hit"))
-    return (
+    ivf = ivf_search(spark, sf_dir)
+    approx = ivf.select("qid", "nid", F.lit(1).alias("hit"))
+    recall = (
         exact.join(F.broadcast(approx), ["qid", "nid"], "left")
         .groupBy("qid")
         .agg(
@@ -1125,6 +1130,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_hits").cast("double") / F.col("k").cast("double")).alias("recall_at_k"),
         )
     )
+    return pin_on_first_action(recall, take_pins(ivf), fill=False)
 
 
 ORACLE_ANN_RECALL = f"""
@@ -2025,15 +2031,14 @@ def cell_pair_edges(v: DataFrame, theta: float) -> DataFrame:
 # conf (it changes the cell contract) and the embeddings footer
 # stamp (regenerated data misses). Frames are lazily persisted —
 # a memo miss adds no construction jobs beyond the codebook
-# training every consumer already declares; frames are registered
-# session-owned so no query result's GC evicts them.
+# training every consumer already declares; the memo owns them, so
+# no query result's GC evicts them.
 _SEM_MEMO = SessionMemo("sem")
 
 
 def _sem_state(spark: SparkSession, sf_dir: str) -> dict:
     import os
 
-    from ..operators.pinning import mark_session_owned
     from ..sources.catalog import path_stamp
 
     key = (
@@ -2048,7 +2053,6 @@ def _sem_state(spark: SparkSession, sf_dir: str) -> dict:
         emb = _emb(spark, sf_dir).select("vec_id", "embedding")
         v = emb.join(cells, "vec_id").persist()
         edges = cell_pair_edges(v, SEMDEDUP_THETA).persist()
-        mark_session_owned(v, edges)
         st = {"v": v, "edges": edges, "cc": None}
         _SEM_MEMO.put(key, st, dataset=key[1])
     return st
@@ -2058,7 +2062,6 @@ def _sem_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized connected components over the full-corpus semantic
     edge set (labels keyed ``vec_id``)."""
     from ..operators.dedup import connected_components
-    from ..operators.pinning import mark_session_owned
 
     st = _sem_state(spark, sf_dir)
     if st["cc"] is None:
@@ -2067,7 +2070,6 @@ def _sem_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumnRenamed("doc_id", "vec_id")
             .persist()
         )
-        mark_session_owned(st["cc"])
     return st["cc"]
 
 
@@ -2547,7 +2549,6 @@ _EVEN_CELLS_MEMO = SessionMemo("even_cells")
 def _even_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..operators.pinning import mark_session_owned
     from ..sources.catalog import path_stamp
 
     key = (
@@ -2559,7 +2560,6 @@ def _even_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _EVEN_CELLS_MEMO.get(key, dataset=key[1])
     if df is None:
         df = _cell_assignments(spark, sf_dir, where=F.col("vec_id") % 2 == 0).persist()
-        mark_session_owned(df)
         _EVEN_CELLS_MEMO.put(key, df, dataset=key[1])
     return df
 

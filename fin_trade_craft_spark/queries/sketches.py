@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.memo import pin_on_first_action
 from ..operators.total_order import global_row_number
 from ..sources.catalog import load_table
 
@@ -42,7 +43,11 @@ Q_DELTA = 0.02  # quantile bound: estimate within ranks of q ± 2%
 
 
 def _discrete_quantiles(
-    base: DataFrame, group_col: str, value_col: str, qs: list[tuple[float, str]]
+    base: DataFrame,
+    group_col: str,
+    value_col: str,
+    qs: list[tuple[float, str]],
+    pins: list[DataFrame],
 ) -> DataFrame:
     """Per-group DISCRETE quantiles (value at rank ⌈q·n⌉) plus the
     ±Q_DELTA rank-window bounds, via operators/total_order ranking —
@@ -51,7 +56,7 @@ def _discrete_quantiles(
     task. One broadcast of the per-group counts; value-at-rank
     selections all ride one aggregate."""
     nn = base.filter(F.col(value_col).isNotNull()).select(group_col, value_col)
-    ranked = global_row_number(nn, [F.col(value_col)], "rn", group_cols=[group_col])
+    ranked = global_row_number(nn, [F.col(value_col)], "rn", group_cols=[group_col], pins=pins)
     cnt = ranked.groupBy(group_col).agg(F.max("rn").alias("__nv"))
     j = ranked.join(F.broadcast(cnt), group_col)
     aggs = []
@@ -86,11 +91,14 @@ def approx_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("user_id", rsd=RSD).alias("__au"),
         F.percentile_approx("value", [0.5, 0.9, 0.99], PCT_ACC).alias("__q"),
     )
-    qsel = _discrete_quantiles(ev, "event_type", "value", [(0.5, "p50"), (0.9, "p90"), (0.99, "p99")])
+    pins: list[DataFrame] = []
+    qsel = _discrete_quantiles(
+        ev, "event_type", "value", [(0.5, "p50"), (0.9, "p90"), (0.99, "p99")], pins
+    )
     qb = F.lit(True)
     for i, name in enumerate(["p50", "p90", "p99"]):
         qb = qb & F.col("__q")[i].between(F.col(f"__{name}_lo"), F.col(f"__{name}_hi"))
-    return (
+    out = (
         prof.join(qsel, "event_type")
         .select(
             "event_type",
@@ -104,6 +112,7 @@ def approx_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+    return pin_on_first_action(out, pins, fill=False)
 
 
 ORACLE_APPROX_EVENTS_PROFILE = """
@@ -148,8 +157,9 @@ def approx_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("n_chars", rsd=RSD).alias("__al"),
         F.percentile_approx("n_chars", 0.5, PCT_ACC).alias("__m"),
     )
-    qsel = _discrete_quantiles(d, "lang", "n_chars", [(0.5, "median_len")])
-    return (
+    pins: list[DataFrame] = []
+    qsel = _discrete_quantiles(d, "lang", "n_chars", [(0.5, "median_len")], pins)
+    out = (
         prof.join(qsel, "lang")
         .select(
             "lang",
@@ -165,6 +175,7 @@ def approx_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
+    return pin_on_first_action(out, pins, fill=False)
 
 
 ORACLE_APPROX_CORPUS_PROFILE = """

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..operators.memo import pin_on_first_action
 from ..sources.catalog import load_table
 
 
@@ -655,16 +656,14 @@ def eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
     )
     frac = F.col("n_contaminated").cast("double") / F.col("n_shingles").cast("double")
-    return (
-        base.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce("n_contaminated", F.lit(0)).alias("n_contaminated"),
-            F.coalesce(frac, F.lit(0.0)).alias("contamination_frac"),
-            F.coalesce(frac > 0.05, F.lit(False)).alias("is_contaminated"),
-        )
+    out = base.join(hits, "doc_id", "left").select(
+        "doc_id",
+        "n_shingles",
+        F.coalesce("n_contaminated", F.lit(0)).alias("n_contaminated"),
+        F.coalesce(frac, F.lit(0.0)).alias("contamination_frac"),
+        F.coalesce(frac > 0.05, F.lit(False)).alias("is_contaminated"),
     )
+    return pin_on_first_action(out, [sh], fill=False)
 
 
 ORACLE_EVAL_CONTAMINATION = f"""
@@ -738,13 +737,14 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_boiler"))
     )
     frac = F.col("n_boiler").cast("double") / F.col("n_shingles").cast("double")
-    return base.join(hits, "doc_id", "left").select(
+    out = base.join(hits, "doc_id", "left").select(
         "doc_id",
         "n_shingles",
         F.coalesce("n_boiler", F.lit(0)).alias("n_boiler"),
         F.coalesce(frac, F.lit(0.0)).alias("boiler_frac"),
         F.coalesce(frac <= 0.5, F.lit(True)).alias("keep"),
     )
+    return pin_on_first_action(out, [sh], fill=False)
 
 
 ORACLE_BOILERPLATE_NGRAMS = f"""
@@ -1302,8 +1302,8 @@ def bigram_interpolated_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c_d"))
         .persist()
     )
-    bg = doc_bg.groupBy("bigram").agg(F.sum("c_d").alias("c_b")).persist()
-    bg = bg.withColumn("x", F.expr("split_part(bigram, ' ', 1)")).withColumn(
+    bg_agg = doc_bg.groupBy("bigram").agg(F.sum("c_d").alias("c_b")).persist()
+    bg = bg_agg.withColumn("x", F.expr("split_part(bigram, ' ', 1)")).withColumn(
         "y", F.expr("split_part(bigram, ' ', 2)")
     )
     ctx = bg.groupBy("x").agg(F.sum("c_b").alias("c_ctx"))
@@ -1342,16 +1342,15 @@ def bigram_interpolated_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fold = F.aggregate(F.col("ts"), F.lit(0.0), lambda acc, x: acc + x)
-    from ..operators.pinning import pin_on_first_action
-
     result = per_doc.select(
         "doc_id",
         "n_bigrams",
         F.round(fold / F.col("n_bigrams").cast("double"), 9).alias("avg_logprob10_interp"),
     ).orderBy("doc_id")
-    # upstream-first: doc_bg's fill runs the one corpus pass, bg's
-    # fill then aggregates from that cache
-    return pin_on_first_action(result, [doc_bg, bg])
+    # upstream-first: doc_bg's fill runs the one corpus pass, bg_agg's
+    # fill then aggregates from that cache. Pin the persisted frame
+    # itself: releasing the derived `bg` view would free nothing.
+    return pin_on_first_action(result, [doc_bg, bg_agg])
 
 
 ORACLE_BIGRAM_INTERPOLATED_SCORES = f"""
@@ -1928,9 +1927,7 @@ def bpe_rounds_on(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     so the per-round caches fill in dependency order AND release
     when the result is GC'd (the per-round persist()s otherwise
     accumulate in the session CacheManager for the process
-    lifetime — r8 review finding)."""
-    from ..operators.pinning import pin_on_first_action
-
+    lifetime)."""
     report, _, pins = _bpe_loop(docs, rounds)
     return pin_on_first_action(report, pins, fill=False)
 
@@ -2146,9 +2143,9 @@ def bpe_train_until_convergence(
         .persist()
     )
     merges: list[tuple] = []
-    # word states whose caches become unreachable once the NEXT
-    # round's collect has materialized their successor; seeded with
-    # the initial word table
+    # word states still cached, oldest first: a state becomes
+    # unreachable once the NEXT round's collect has materialized its
+    # successor; the last two are pinned on the returned word state
     stale: list = [words]
     for r in range(1, max_rounds + 1):
         best = (
@@ -2170,8 +2167,7 @@ def bpe_train_until_convergence(
         )
         # the collect above materialized the CURRENT word state's
         # cache, so anything two generations back is never read
-        # again — release it (the driver-iterated twin of the
-        # pin-on-GC lifecycle; persists otherwise outlive the query)
+        # again — release it
         while len(stale) > 1:
             stale.pop(0).unpersist()
         if not best or best[0]["n_occurrences"] < min_frequency:
@@ -2195,7 +2191,7 @@ def bpe_train_until_convergence(
     table = spark.createDataFrame(
         merges, "round int, s1 string, s2 string, merged string, n_occurrences bigint"
     )
-    return table, words
+    return table, pin_on_first_action(words, stale, fill=False)
 
 
 def _sql_str(s: str) -> str:
@@ -2233,8 +2229,6 @@ def bpe_apply_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the exploded corpus tokens onto that table (AQE broadcasts
     the vocabulary side when it fits) plus a per-doc hash aggregate
     — no per-doc re-segmentation, the fold ran once per word TYPE."""
-    from ..operators.pinning import pin_on_first_action
-
     docs = _docs(spark, sf_dir)
     _, words, pins = _bpe_loop(docs, BPE_ROUNDS)
     wsym = words.select("tok", F.size("syms").alias("n_sym"))

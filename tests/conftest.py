@@ -118,6 +118,8 @@ _SLOW_TESTS = {
     ("test_io_watermarks", "test_partition_scoped_upsert_leaves_other_partitions_untouched"),  # 4.2s
     ("test_graph", "test_graph_vs_oracle"),  # 4.2s over params
     ("test_zorder", "test_zorder_beats_linear_sort_on_second_column"),  # 4.2s
+    # every registered batch query in one session (several minutes)
+    ("test_cache_owners", "test_no_orphaned_cache_every_batch_query"),
 }
 
 

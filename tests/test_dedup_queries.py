@@ -46,7 +46,7 @@ def test_exact_tier_guards_refuse_corpus_sized_inputs(spark):
     # construction is job-free (asserted by
     # test_plan_lint.py::test_construction_launches_no_jobs); the
     # refuse fires on action
-    over_budget = exact_jaccard_pairs(big_sets)
+    over_budget = exact_jaccard_pairs(big_sets, pins=[])
     with pytest.raises(Exception, match="lsh_candidate_pairs"):
         over_budget.count()
     # candidate-driven branch (the scale path) has no row cap

@@ -30,7 +30,7 @@ def second_dataset(tmp_path):
 
 
 def test_lru_eviction_releases_first_datasets_storage(spark, second_dataset):
-    from fin_trade_craft_spark.operators.pinning import _SESSION_OWNED
+    from fin_trade_craft_spark.operators.memo import held_by_memo
     from fin_trade_craft_spark.queries.corpus_build import _ENRICHED_MEMO, _enriched
 
     old_cap = _ENRICHED_MEMO.max_datasets
@@ -40,13 +40,13 @@ def test_lru_eviction_releases_first_datasets_storage(spark, second_dataset):
         df_a = _enriched(spark, SF_SMOKE)
         df_a.count()  # materialize A's persisted cache
         assert df_a.storageLevel.useMemory
-        assert id(df_a) in _SESSION_OWNED
+        assert held_by_memo(df_a)
 
         df_b = _enriched(spark, second_dataset)
         df_b.count()
-        # B's arrival evicted A: cache released, pin registry clean
+        # B's arrival evicted A: cache released, no memo holds it
         assert not df_a.storageLevel.useMemory
-        assert id(df_a) not in _SESSION_OWNED
+        assert not held_by_memo(df_a)
         assert df_b.storageLevel.useMemory
         assert _ENRICHED_MEMO.datasets() == [second_dataset]
 
@@ -54,7 +54,7 @@ def test_lru_eviction_releases_first_datasets_storage(spark, second_dataset):
         df_a2 = _enriched(spark, SF_SMOKE)
         assert df_a2 is not df_a
         assert not df_b.storageLevel.useMemory
-        assert id(df_b) not in _SESSION_OWNED
+        assert not held_by_memo(df_b)
     finally:
         _ENRICHED_MEMO.max_datasets = old_cap
         _ENRICHED_MEMO.release_all()
@@ -118,18 +118,16 @@ def test_index_store_eviction_defers_rmtree(tmp_path, monkeypatch):
 
 
 def test_explicit_release_paths(spark):
-    from fin_trade_craft_spark.operators.memo import SessionMemo, release_all_memos
-    from fin_trade_craft_spark.operators.pinning import _SESSION_OWNED, mark_session_owned
+    from fin_trade_craft_spark.operators.memo import SessionMemo, held_by_memo, release_all_memos
 
     m = SessionMemo("x", max_datasets=4)
     df = spark.range(10).persist()
-    mark_session_owned(df)
     df.count()
     m.put(("k",), {"frame": df}, dataset="ds")
     assert df.storageLevel.useMemory
     m.release_dataset("ds")
     assert not df.storageLevel.useMemory
-    assert id(df) not in _SESSION_OWNED
+    assert not held_by_memo(df)
     # release_all_memos is a no-op on the already-empty memo
     release_all_memos()
     assert len(m) == 0

@@ -1,4 +1,4 @@
-"""pin-on-first-action wrapper (operators/pinning.py): construction
+"""pin-on-first-action wrapper (operators/memo.py): construction
 stays job-free, the first action fills the pinned caches exactly
 once, results are identical to the unwrapped frame, and dropping the
 wrapper releases the executor storage (ADVICE r07 cache-lifetime)."""
@@ -9,7 +9,7 @@ import gc
 
 from pyspark.sql import functions as F
 
-from fin_trade_craft_spark.operators.pinning import PinnedDataFrame, pin_on_first_action
+from fin_trade_craft_spark.operators.memo import PinnedDataFrame, pin_on_first_action
 
 
 def _njobs(spark):

@@ -205,10 +205,11 @@ CONSTRUCTION_JOBS_ALLOWED = {
     # --- sketch-then-verify: the freqItems candidate sweep is a
     # driver-side sketch whose output parameterizes the verify plan.
     "frequent_tokens": "freqItems sketch collect feeds the verify filter",
-    # --- measured materialization boundary: lazy persist lets the
-    # 11 strategy branches race the cache (13.8s vs 8.0s at sf0.1,
-    # see domain/trading_signals.all_signals).
-    "fin_signals_pipeline": "eager feature checkpoint (measured 1.7x)",
+    # --- measured materialization boundary: a lazy persist lets the
+    # strategy branches race the cache (13.8s vs 8.0s at sf0.1, see
+    # domain/trading_signals.all_signals), so the feature frame is
+    # persisted and filled by one count() at construction.
+    "fin_signals_pipeline": "eager feature persist + count (measured 1.7x)",
     # --- r12 optimization round: measured materialization
     # boundaries — a dozens-of-rows shared frame whose consumers
     # (broadcast builds + main branch) each re-ran the full panel /

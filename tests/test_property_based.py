@@ -499,7 +499,7 @@ def test_total_order_family_property(spark, vals, k):
     )
     got_rn = {
         (r.id, r.rn)
-        for r in TO.global_row_number(df, [F.col("v"), F.col("id")], "rn").collect()
+        for r in TO.global_row_number(df, [F.col("v"), F.col("id")], "rn", pins=[]).collect()
     }
     want_rn = {
         (r.id, r.rn)
@@ -507,7 +507,7 @@ def test_total_order_family_property(spark, vals, k):
     }
     assert got_rn == want_rn
 
-    got_pr = {(r.id, r.pr) for r in TO.global_percent_rank(df, "v", "pr").collect()}
+    got_pr = {(r.id, r.pr) for r in TO.global_percent_rank(df, "v", "pr", pins=[]).collect()}
     want_pr = {
         (r.id, r.pr)
         for r in df.withColumn("pr", F.percent_rank().over(Window.orderBy("v"))).collect()
@@ -516,7 +516,7 @@ def test_total_order_family_property(spark, vals, k):
 
     got_t = {
         (r.id, r.t)
-        for r in TO.global_ntile(df, k, [F.col("v"), F.col("id")], "t").collect()
+        for r in TO.global_ntile(df, k, [F.col("v"), F.col("id")], "t", pins=[]).collect()
     }
     want_t = {
         (r.id, r.t)

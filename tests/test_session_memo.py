@@ -7,7 +7,7 @@
    directly from the operators (restriction-equality guarantee the
    corpus_build stages rely on).
 4. Memo frames survive a consumer result's garbage collection (the
-   pin wrapper must not unpersist session-owned caches).
+   pin wrapper must not unpersist a frame a memo holds).
 5. A different sf_dir (different footer stamp) misses the memo.
 """
 
@@ -18,7 +18,7 @@ import gc
 from pyspark.sql import functions as F
 
 from fin_trade_craft_spark.operators import dedup as D
-from fin_trade_craft_spark.operators.pinning import _SESSION_OWNED
+from fin_trade_craft_spark.operators.memo import held_by_memo
 from fin_trade_craft_spark.queries import dedup as QD
 
 from conftest import SF_SMOKE
@@ -33,10 +33,10 @@ def test_lsh_memo_single_entry_and_reuse(spark):
     st1 = QD._lsh_state(spark, SF_SMOKE)
     st2 = QD._lsh_state(spark, SF_SMOKE)
     assert st1 is st2, "same (session, dataset) must hit the memo"
-    assert id(st1["sets"]) in _SESSION_OWNED
+    assert held_by_memo(st1["sets"])
     # the persisted frame is the threshold-free scored candidates;
     # `pairs` is a derived >= 0.5 view over it
-    assert id(st1["scored"]) in _SESSION_OWNED
+    assert held_by_memo(st1["scored"])
 
 
 def test_memoized_pairs_match_fresh_chain(spark):
@@ -122,23 +122,22 @@ def test_sem_memo_reuse_and_key_includes_quantizer_mode(spark):
         spark.conf.unset(SQ.QUANTIZER_CONF)
 
 
-def test_release_session_owned_evicts_and_unpersists(spark):
-    """ADVICE r09: the registry holds the frames themselves (strong
-    refs), and the eviction path both drops the entry and releases
-    the persisted storage — no bare-id aliasing, no monotonic
-    leak when a memo is regenerated."""
-    from fin_trade_craft_spark.operators.pinning import (
-        mark_session_owned,
-        release_session_owned,
-    )
+def test_memo_release_unpersists_and_pins_skip_memo_frames(spark):
+    """A frame counts as session-owned exactly while a memo holds it:
+    a pinned result's GC leaves it cached, and the memo's release
+    drops it from the memo and unpersists it."""
+    from fin_trade_craft_spark.operators.memo import SessionMemo, pin_on_first_action
 
-    df = spark.range(100).select(F.col("id").alias("k")).persist()
-    df.count()
-    mark_session_owned(df)
-    assert id(df) in _SESSION_OWNED
-    assert _SESSION_OWNED[id(df)] is df  # strong ref, not a bare id
-    release_session_owned(df)
-    assert id(df) not in _SESSION_OWNED
+    m = SessionMemo("owned", max_datasets=1)
+    df = m.put(("k",), spark.range(100).select(F.col("id").alias("k")).persist(), dataset="ds")
+    result = pin_on_first_action(df.select((F.col("k") * 2).alias("k2")), [df])
+    assert result.count() == 100
+    assert held_by_memo(df)
+    del result
+    gc.collect()
+    assert df.storageLevel.useMemory  # the memo still owns it
+    m.release_dataset("ds")
+    assert not held_by_memo(df)
     assert df.storageLevel.useMemory is False  # unpersisted
-    # releasing an unknown frame is a no-op
-    release_session_owned(df)
+    # releasing an unknown dataset is a no-op
+    m.release_dataset("ds")

@@ -13,6 +13,14 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from fin_trade_craft_spark.operators import total_order as TO  # noqa: E402
+from fin_trade_craft_spark.operators.memo import pin_on_first_action  # noqa: E402
+
+
+def _owned(op, *args, **kwargs):
+    """Call a total-order operator the way a query does: the result
+    owns the range-partitioned frame the operator persisted."""
+    pins = []
+    return pin_on_first_action(op(*args, pins=pins, **kwargs), pins, fill=False)
 
 
 def _fixture(spark, n=997):
@@ -37,7 +45,7 @@ def _no_unpartitioned_window(df):
 
 def test_global_row_number_matches_window(spark):
     df = _fixture(spark)
-    got = TO.global_row_number(df, [F.col("v"), F.col("id")], "rn")
+    got = _owned(TO.global_row_number, df, [F.col("v"), F.col("id")], "rn")
     want = df.withColumn("rn", F.row_number().over(Window.orderBy("v", "id")))
     g = {(r.id, r.rn) for r in got.collect()}
     w = {(r.id, r.rn) for r in want.collect()}
@@ -47,7 +55,7 @@ def test_global_row_number_matches_window(spark):
 
 def test_global_percent_rank_matches_window(spark):
     df = _fixture(spark)
-    got = TO.global_percent_rank(df, "v", "pr")
+    got = _owned(TO.global_percent_rank, df, "v", "pr")
     want = df.withColumn("pr", F.percent_rank().over(Window.orderBy("v")))
     g = {(r.id, r.pr) for r in got.collect()}
     w = {(r.id, r.pr) for r in want.collect()}
@@ -57,7 +65,7 @@ def test_global_percent_rank_matches_window(spark):
 
 def test_grouped_percent_rank_matches_window(spark):
     df = _fixture(spark)
-    got = TO.global_percent_rank(df, "v", "pr", group_cols=["g"])
+    got = _owned(TO.global_percent_rank, df, "v", "pr", group_cols=["g"])
     want = df.withColumn(
         "pr", F.percent_rank().over(Window.partitionBy("g").orderBy("v"))
     )
@@ -69,7 +77,7 @@ def test_grouped_percent_rank_matches_window(spark):
 def test_global_ntile_matches_window(spark):
     df = _fixture(spark)
     for k in (4, 7):
-        got = TO.global_ntile(df, k, [F.col("v"), F.col("id")], "t")
+        got = _owned(TO.global_ntile, df, k, [F.col("v"), F.col("id")], "t")
         want = df.withColumn("t", F.ntile(k).over(Window.orderBy("v", "id")))
         g = {(r.id, r.t) for r in got.collect()}
         w = {(r.id, r.t) for r in want.collect()}
@@ -79,7 +87,7 @@ def test_global_ntile_matches_window(spark):
 
 def test_grouped_ntile_and_tiny_groups(spark):
     df = _fixture(spark, n=200)
-    got = TO.global_ntile(df, 4, [F.col("v"), F.col("id")], "t", group_cols=["g"])
+    got = _owned(TO.global_ntile, df, 4, [F.col("v"), F.col("id")], "t", group_cols=["g"])
     want = df.withColumn(
         "t", F.ntile(4).over(Window.partitionBy("g").orderBy("v", "id"))
     )
@@ -88,14 +96,14 @@ def test_grouped_ntile_and_tiny_groups(spark):
     }
     # n < k edge: NTILE assigns tiles 1..n
     tiny = df.limit(3)
-    got = TO.global_ntile(tiny, 7, [F.col("id")], "t")
+    got = _owned(TO.global_ntile, tiny, 7, [F.col("id")], "t")
     assert sorted(r.t for r in got.collect()) == [1, 2, 3]
 
 
 def test_range_prefix_scan_max_matches_window(spark):
     df = _fixture(spark)
     order = [F.col("v").asc(), F.col("id").asc()]
-    got = TO.range_prefix_scan_max(df, order, "id", "rm")
+    got = _owned(TO.range_prefix_scan_max, df, order, "id", "rm")
     w = (
         Window.orderBy("v", "id")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -109,7 +117,7 @@ def test_range_prefix_scan_max_matches_window(spark):
 
 def test_global_prefix_sum_matches_window(spark):
     df = _fixture(spark)
-    got = TO.global_prefix_sum(df, [F.col("v").asc(), F.col("id").asc()], "id", "rs")
+    got = _owned(TO.global_prefix_sum, df, [F.col("v").asc(), F.col("id").asc()], "id", "rs")
     w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
     want = df.withColumn("rs", F.sum("id").over(w))
     g = {(r.id, r.rs) for r in got.collect()}
@@ -124,13 +132,13 @@ def test_null_group_keys_are_their_own_group(spark):
     vanishing through a null-rejecting equi-join (r05 review fix)."""
     rows = [(1, "en", 10), (2, "en", 20), (3, None, 5), (4, None, 7), (5, "fr", 9)]
     df = spark.createDataFrame(rows, "id long, g string, v long")
-    got = TO.global_ntile(df, 2, [F.col("v"), F.col("id")], "t", group_cols=["g"])
+    got = _owned(TO.global_ntile, df, 2, [F.col("v"), F.col("id")], "t", group_cols=["g"])
     want = df.withColumn(
         "t", F.ntile(2).over(Window.partitionBy("g").orderBy("v", "id"))
     )
     assert {(r.id, r.t) for r in got.collect()} == {(r.id, r.t) for r in want.collect()}
 
-    got_pr = TO.global_percent_rank(df, "v", "pr", group_cols=["g"])
+    got_pr = _owned(TO.global_percent_rank, df, "v", "pr", group_cols=["g"])
     want_pr = df.withColumn(
         "pr", F.percent_rank().over(Window.partitionBy("g").orderBy("v"))
     )
@@ -145,7 +153,7 @@ def test_prefix_scan_max_tolerates_all_null_partitions(spark):
     raise TypeError (r05 review fix)."""
     rows = [(i, float(i) if i % 7 else None) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, v double").repartition(8)
-    got = TO.range_prefix_scan_max(df, [F.col("id").asc()], "v", "rm")
+    got = _owned(TO.range_prefix_scan_max, df, [F.col("id").asc()], "v", "rm")
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
     want = df.withColumn("rm", F.max("v").over(w))
     assert {(r.id, r.rm) for r in got.collect()} == {
@@ -169,10 +177,10 @@ def test_construction_launches_no_job_and_single_source_scan(spark):
         return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
     for build in (
-        lambda: TO.global_row_number(src, [F.col("v"), F.col("id")], "rn"),
-        lambda: TO.global_percent_rank(src, "v", "pr"),
-        lambda: TO.global_ntile(src, 4, [F.col("v"), F.col("id")], "t"),
-        lambda: TO.range_prefix_scan_max(src, [F.col("v").asc(), F.col("id").asc()], "id", "rm"),
+        lambda: _owned(TO.global_row_number, src, [F.col("v"), F.col("id")], "rn"),
+        lambda: _owned(TO.global_percent_rank, src, "v", "pr"),
+        lambda: _owned(TO.global_ntile, src, 4, [F.col("v"), F.col("id")], "t"),
+        lambda: _owned(TO.range_prefix_scan_max, src, [F.col("v").asc(), F.col("id").asc()], "id", "rm"),
     ):
         before = njobs()
         df = build()
@@ -196,9 +204,35 @@ def test_percent_rank_consistent_on_nondeterministic_source(spark):
         (F.rand() * 40).cast("int").alias("v"),
         (F.rand() * 2).cast("int").cast("string").alias("g"),
     )
-    out = TO.global_percent_rank(nd, "v", "pr", group_cols=["g"])
+    out = _owned(TO.global_percent_rank, nd, "v", "pr", group_cols=["g"])
     agg = out.groupBy("g").agg(
         F.min("pr").alias("mn"), F.max("pr").alias("mx"), F.count(F.lit(1)).alias("n")
     )
     for r in agg.collect():
         assert 0.0 <= r.mn <= r.mx <= 1.0, r
+
+
+def test_range_cache_keeps_sampled_ranks_consistent(spark):
+    """The persisted range-partitioned frame is what makes the ranks
+    correct, not only fast: its two readers (the per-partition counts
+    and the rows themselves) are different exchange subtrees, and
+    with this many rows RangePartitioner samples its bounds, so two
+    computations of the range exchange can disagree. Two runs must
+    both equal the single-partition window reference. The second is
+    built while the first result is still referenced: its range frame
+    is a plan-equal twin, and dropping the first result must not evict
+    the cache entry they share. A frame derived from a result that is
+    not kept must hold the cache itself."""
+    df = spark.range(0, 60_000, 1, 8).select(
+        "id", ((F.col("id") * 7919) % 5003).alias("v"), (F.col("id") % 11).alias("pad")
+    )
+    want = {
+        (r.id, r.pr)
+        for r in df.withColumn("pr", F.percent_rank().over(Window.orderBy("v"))).collect()
+    }
+    for _ in range(2):
+        got = _owned(TO.global_percent_rank, df, "v", "pr")
+        assert {(r.id, r.pr) for r in got.collect()} == want
+    del got
+    derived = _owned(TO.global_percent_rank, df, "v", "pr").select("id", "pr")
+    assert {(r.id, r.pr) for r in derived.collect()} == want
