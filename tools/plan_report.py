@@ -11,6 +11,9 @@ CONSTRUCTION collects bounded driver scalars (column_profile's
 stats row, pagerank's |V|, IVF codebooks) execute those bounded
 jobs while being built; their returned frame's plan is what is
 reported. Streaming queries are excluded (building them drains).
+Each query is built on empty session memos and its result dropped
+before the next one, so a row never depends on which caches an
+earlier query filled.
 
 Usage: python tools/plan_report.py [sf_dir]   (default sf0.001)
 """
@@ -47,6 +50,7 @@ def plan_features(plan: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    from fin_trade_craft_spark.operators.memo import release_all_memos
     from fin_trade_craft_spark.queries import all_queries
     from fin_trade_craft_spark.session import get_spark
 
@@ -62,6 +66,8 @@ def main() -> None:
         # initial plan without executing anything
         plan = df._jdf.queryExecution().executedPlan().toString()
         rows.append((name, plan_features(plan)))
+        del df
+        release_all_memos()
 
     out = Path(__file__).resolve().parent.parent / "PLANS.md"
     with out.open("w") as f:
