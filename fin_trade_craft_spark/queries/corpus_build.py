@@ -1,8 +1,8 @@
-"""corpus_build — the end-to-end training-corpus curation capstone
-(r07 verdict task 4): every document flows through the full dedup /
-quality ladder and comes out with a keep-decision and, if kept, its
-sampling weight and shard assignment — the manifest a pretraining
-data pipeline actually materializes.
+"""corpus_build — the end-to-end training-corpus curation capstone:
+every document flows through the full dedup / quality ladder and
+comes out with a keep-decision and, if kept, its sampling weight
+and shard assignment — the manifest a pretraining data pipeline
+actually materializes.
 
 Stage ladder (each stage operates on the SURVIVORS of the previous
 one — a doc removed as an exact dup never participates in near-dup
@@ -38,7 +38,7 @@ writes.
 
 Scale shape: stages 1/4/5/6 are hash aggregates and one per-lang
 window over survivor token counts; stage 2's quadratic work is
-confined to LSH band collisions; stage 3's to IVF cells. r09: the
+confined to LSH band collisions; stage 3's to IVF cells. The
 expensive shared state — LSH signatures/verified pairs/components
 and the semantic cell-pair edge set — comes from the SESSION MEMOS
 (queries/dedup._LSH_MEMO, queries/similarity._SEM_MEMO), so the
@@ -507,10 +507,10 @@ def _even_prior_state(spark: SparkSession, sf_dir: str) -> dict:
 
 def corpus_build_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus curation — the 100-TB OPERATIONAL shape of
-    ``corpus_build`` (r08 verdict task 2): a NEW batch of documents
-    (odd doc_ids) flows the full ladder AGAINST the EXISTING corpus
-    (even doc_ids, whose manifest/ indexes are already built) without
-    the batch ever re-clustering the historical corpus. Composes the
+    ``corpus_build``: a NEW batch of documents (odd doc_ids) flows
+    the full ladder AGAINST the EXISTING corpus (even doc_ids, whose
+    manifest/ indexes are already built) without the batch ever
+    re-clustering the historical corpus. Composes the
     incremental family's probe shapes: hash-index probe (stage 1),
     banded-signature probe against the retained canonicals (stage 2,
     the ``incremental_dedup_ingest`` shape), per-cell cosine probe
@@ -631,8 +631,36 @@ def corpus_build_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_alive.filter(~quality_ok).select("doc_id").localCheckpoint(eager=True)
     )
     b_kept = b_alive.filter(quality_ok).select("doc_id", "source", "lang", "n_tokens")
+    drops = {
+        "exact_drop": b_exact_drop,
+        "near_drop": b_near_drop,
+        "sem_drop": b_sem_drop,
+        "low_drop": b_low_drop,
+    }
+    return _ingest_manifest(e_kept, b_kept, _drop_rows(enriched, drops))
 
-    # stage 5: mixture over COMBINED kept masses
+
+def _drop_rows(rows: DataFrame, lad: dict) -> DataFrame:
+    """(doc_id, source, lang, n_tokens, reason) of every batch doc a
+    ladder stage dropped — ``lad`` holds the four stage drop frames,
+    ``rows`` the batch docs' manifest columns."""
+    drops = (
+        lad["exact_drop"].withColumn("reason", F.lit("exact_dup"))
+        .unionByName(lad["near_drop"].withColumn("reason", F.lit("near_dup")))
+        .unionByName(lad["sem_drop"].withColumn("reason", F.lit("semantic_dup")))
+        .unionByName(lad["low_drop"].withColumn("reason", F.lit("low_quality")))
+    )
+    return rows.join(drops, "doc_id").select("doc_id", "source", "lang", "n_tokens", "reason")
+
+
+def _ingest_manifest(e_kept: DataFrame, b_kept: DataFrame, drop_rows: DataFrame) -> DataFrame:
+    """The batch manifest of an ingest — stages 5/6 over the batch's
+    kept rows plus its drop rows (:func:`_drop_rows`). ``e_kept``
+    (doc_id, source, lang, n_tokens) is the existing corpus's kept
+    mass: the mixture weighs the COMBINED kept masses, and each
+    language's shards continue after the existing kept tokens (the
+    existing shard sequence is never repacked)."""
+    # stage 5: mixture over the COMBINED kept masses
     comb = e_kept.select("source", "n_tokens").unionByName(
         b_kept.select("source", "n_tokens")
     )
@@ -641,8 +669,7 @@ def corpus_build_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mixw = _with_mix_weight_quota(per_src).select("source", "mix_weight")
 
-    # stage 6: append-mode shards — batch continues each language's
-    # running token count after the existing corpus's kept mass
+    # stage 6: append-mode shards after the existing kept mass
     base_lang = e_kept.groupBy("lang").agg(F.sum("n_tokens").alias("__base"))
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
@@ -668,13 +695,7 @@ def corpus_build_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("shard_id"),
         )
     )
-    b_drops = (
-        b_exact_drop.withColumn("reason", F.lit("exact_dup"))
-        .unionByName(b_near_drop.withColumn("reason", F.lit("near_dup")))
-        .unionByName(b_sem_drop.withColumn("reason", F.lit("semantic_dup")))
-        .unionByName(b_low_drop.withColumn("reason", F.lit("low_quality")))
-    )
-    b_drop_m = enriched.join(b_drops, "doc_id").select(
+    b_drop_m = drop_rows.select(
         "doc_id",
         "source",
         "lang",
@@ -688,7 +709,7 @@ def corpus_build_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def publish_corpus_index_tables(spark: SparkSession, sf_dir: str, io) -> None:
-    """corpus_build's WRITE side (r09 verdict task 1): persist the
+    """corpus_build's WRITE side: persist the
     curation ladder's manifest + index tables for the EXISTING
     corpus (the incremental family's even half) via TableIO — the
     tables a production build materializes so every later ingest
@@ -704,10 +725,12 @@ def publish_corpus_index_tables(spark: SparkSession, sf_dir: str, io) -> None:
       their fresh signatures against it.
     - ``cell_index``     (vec_id, embedding, cell) for the stage-3
       survivors (the retained semantic representatives), cells from
-      the corpus-trained quantizer.
-    - ``codebook``       (cid, i, cv) — the trained coarse-quantizer
-      codebook (:func:`queries.similarity.kmeans_centroids` layout),
-      so batch vectors are assigned WITHOUT retraining.
+      the quantizer tier the corpus size selects
+      (``_even_trained_cells``).
+    - ``codebook``       (cid, i, cv) — the trained flat
+      coarse-quantizer codebook
+      (:func:`queries.similarity.kmeans_centroids` layout), so
+      flat-tier batch vectors are assigned WITHOUT retraining.
 
     Deriving the tables runs the ladder once — this IS the initial
     corpus build; the point is that no subsequent ingest re-runs it.
@@ -719,7 +742,7 @@ def publish_corpus_index_tables(spark: SparkSession, sf_dir: str, io) -> None:
 
     prior = _even_prior_state(spark, sf_dir)
     enriched = _enriched(spark, sf_dir)
-    # Size-adaptive output files on every index table (r13, guide §6
+    # Size-adaptive output files on every index table (guide §6
     # "small files hurt twice"): these frames arrive at the write in
     # session-parallelism partitioning (32 locally), so each KB-scale
     # index table landed as 32 tiny part files — 129 files across the
@@ -763,7 +786,7 @@ def publish_corpus_index_tables(spark: SparkSession, sf_dir: str, io) -> None:
 # publish once — the initial corpus build — then every ingest call
 # (bench attempt 2, the oracle run, repeated batches) reads parquet.
 #
-# Eviction DEFERS the tempdir removal to process exit (ADVICE r11):
+# Eviction DEFERS the tempdir removal to process exit:
 # unlike unpersist-on-evict — which leaves frames recomputable — an
 # immediate rmtree is unrecoverable for any still-live lazy DataFrame
 # or TableIO handle obtained from a prior _index_store() call, which
@@ -804,12 +827,15 @@ def _index_store(spark: SparkSession, sf_dir: str):
 
     from ..sources.catalog import path_stamp
     from ..sources.io import TableIO
+    from .similarity import QUANTIZER_CONF
 
+    # the tier is part of the key: cell_index holds that tier's cells
     key = (
         spark.sparkContext.applicationId,
         os.path.abspath(sf_dir),
         path_stamp(os.path.join(sf_dir, "documents.parquet")),
         path_stamp(os.path.join(sf_dir, "embeddings.parquet")),
+        spark.conf.get(QUANTIZER_CONF, "auto"),
     )
     wh = _INDEX_STORE_MEMO.get(key, dataset=key[1])
     if wh is None:
@@ -820,19 +846,32 @@ def _index_store(spark: SparkSession, sf_dir: str):
 
 
 def _stored_ingest_ladder(
-    spark: SparkSession, io, docs_b: DataFrame, emb_b_all: DataFrame
+    spark: SparkSession, sf_dir: str, io, docs_b: DataFrame, emb_b_all: DataFrame
 ) -> dict:
     """Stages 1–4 of the stored-index probe ladder for ONE arriving
-    batch frame — the reusable refresh step: every prior-state read
-    is a TableIO table (hash_index / sig_index / cell_index /
-    codebook), every computation is ∝ batch. Returns the stage drop
-    frames, the kept rows, and the store-append frames a committing
-    refresh persists (:func:`commit_ingest_batch`) so the NEXT batch
-    probes this one through the same tables — the loop
-    ``streaming_corpus_ingest`` runs per micro-batch, here in batch
-    form. First-wins within the batch: partners are stored survivors
-    or smaller surviving batch ids."""
-    from .similarity import cell_probe_new_vs_prior, cells_from_codebook
+    batch frame — THE ingest ladder: ``corpus_build_ingest_stored``
+    runs it once over the whole batch, ``streaming_corpus_ingest``
+    once per micro-batch followed by :func:`commit_ingest_batch`.
+    Every prior-state read is a TableIO table (hash_index /
+    sig_index / cell_index / codebook), every computation is ∝ batch.
+    Returns the stage drop frames, the kept rows, and the
+    store-append frames a committing refresh persists so the NEXT
+    batch probes this one through the same tables. First-wins within
+    the batch: partners are stored survivors or smaller surviving
+    batch ids.
+
+    Batch cells come from the quantizer that built ``cell_index``:
+    the stored flat codebook, or — when the corpus size (or
+    ``spark.fin_trade_craft.quantizer``) selects the hierarchical
+    tier — the batch rows of ``_even_trained_cells``, whose
+    assignment covers every vector. ``sf_dir`` names the corpus."""
+    from ..sources.catalog import table_row_count
+    from .similarity import (
+        _even_trained_cells,
+        _quantizer_mode,
+        cell_probe_new_vs_prior,
+        cells_from_codebook,
+    )
 
     quality_ok = F.col("quality").isNull() | (F.col("quality") >= F.lit(CB_QUALITY_MIN))
 
@@ -855,7 +894,7 @@ def _stored_ingest_ladder(
     s1b = be.join(b_exact_drop, "doc_id", "left_anti").localCheckpoint(eager=True)
 
     # ---- stage 2: fresh batch signatures band-join sig_index ----
-    # probe shape (r10 perf pass at sf5): candidates from the
+    # probe shape (measured at sf5): candidates from the
     # (store ∪ batch) ⋈ batch band join — never store ⋈ store — and
     # the Jaccard verify reads ONLY candidate-touching shingle rows
     # (semi-join restriction) instead of shuffling the whole store's
@@ -896,11 +935,14 @@ def _stored_ingest_ladder(
     b_near_drop = drop_hi.unionByName(drop_lo).distinct().localCheckpoint(eager=True)
     s2b = s1b.join(b_near_drop, "doc_id", "left_anti").localCheckpoint(eager=True)
 
-    # ---- stage 3: codebook assignment + probe against cell_index ----
+    # ---- stage 3: batch cells + probe against cell_index ----
     emb_b = emb_b_all.select("vec_id", "embedding").join(
         s2b.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
-    b_cells = cells_from_codebook(io.read("codebook"), emb_b)
+    if _quantizer_mode(spark, table_row_count(sf_dir, "embeddings")) == "hierarchical":
+        b_cells = _even_trained_cells(spark, sf_dir).join(emb_b, "vec_id", "left_semi")
+    else:
+        b_cells = cells_from_codebook(io.read("codebook"), emb_b)
     bv = emb_b.join(b_cells, "vec_id").select("vec_id", "embedding", "cell").localCheckpoint(
         eager=True
     )
@@ -931,8 +973,8 @@ def _stored_ingest_ladder(
         "sem_drop": b_sem_drop,
         "low_drop": b_low_drop,
         "kept": b_kept,
-        # store-append frames (the streaming twin's per-batch appends):
-        # hash rows for EVERY batch doc, signature rows for stage-1
+        # store-append frames (:func:`commit_ingest_batch`): hash
+        # rows for EVERY batch doc, signature rows for stage-1
         # survivors, (vector, cell) rows for stage-2 survivors —
         # exactly the partner sets later batches probe.
         "append_hash": be.select("doc_id", "h"),
@@ -945,10 +987,10 @@ def commit_ingest_batch(io, ladder: dict) -> None:
     """Persist a refresh step: append the batch's partner-set rows to
     the probe indexes and its kept rows to the manifest — after
     this, a subsequent :func:`_stored_ingest_ladder` call probes the
-    committed batch exactly as it probes the original corpus (the
-    production refresh LOOP; proven equivalent to a one-shot ingest
-    over the concatenated batches in
-    tests/test_corpus_build_ingest.py::test_sequential_committed_refreshes)."""
+    committed batch exactly as it probes the original corpus. This
+    is the refresh LOOP ``streaming_corpus_ingest`` runs per
+    micro-batch; tests/test_corpus_build_ingest.py proves the loop
+    equal to the one-shot ingest over the concatenated batches."""
     io.append(ladder["append_hash"], "hash_index")
     io.append(ladder["append_sig"], "sig_index")
     io.append(ladder["append_cell"], "cell_index")
@@ -957,15 +999,15 @@ def commit_ingest_batch(io, ladder: dict) -> None:
 
 def corpus_build_ingest_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``corpus_build_ingest`` with the prior ladder read from the
-    PERSISTED index tables (r09 verdict task 1) — the production
-    refresh shape end to end: the plan touches ONLY the stored
-    kept_manifest / hash_index / sig_index / cell_index / codebook
-    tables plus the arriving batch (odd docs + their vectors). No
-    stage recomputes, re-hashes, re-signs, re-trains, or re-clusters
-    the historical corpus — where the memo twin leans on session
-    state rebuilt per process, this one reads parquet a previous
-    build committed (:func:`publish_corpus_index_tables`, run once
-    per (session, dataset) here as the initial build).
+    PERSISTED index tables — the production refresh shape end to
+    end: the plan touches ONLY the stored kept_manifest / hash_index
+    / sig_index / cell_index / codebook tables plus the arriving
+    batch (odd docs + their vectors). No stage recomputes,
+    re-hashes, re-signs, re-trains, or re-clusters the historical
+    corpus — where the memo twin leans on session state rebuilt per
+    process, this one reads parquet a previous build committed
+    (:func:`publish_corpus_index_tables`, run once per (session,
+    dataset, quantizer tier) here as the initial build).
 
     Per-stage probe shapes against the stores
     (:func:`_stored_ingest_ladder`):
@@ -978,21 +1020,20 @@ def corpus_build_ingest_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
        would — band keys are per-doc); exact-Jaccard verify confined
        to those candidates; a batch doc drops on a stored canonical
        partner or a smaller surviving batch id (first-wins).
-    3. semantic — batch vectors assigned from the stored ``codebook``
-       (:func:`queries.similarity.cells_from_codebook`, bit-exact
-       twin of the trainer-side assignment), then the shared
-       per-cell probe kernel against ``cell_index`` members + earlier
-       batch survivors.
+    3. semantic — batch vectors assigned by the tier that built
+       ``cell_index`` (the stored ``codebook`` through
+       :func:`queries.similarity.cells_from_codebook`, bit-exact twin
+       of the trainer-side assignment, or the hierarchical
+       assignment), then the shared per-cell probe kernel against
+       ``cell_index`` members + earlier batch survivors.
     4–6. quality / mixture / append-shards — batch-side expressions;
-       base masses from ``kept_manifest``.
+       base masses from ``kept_manifest`` (:func:`_ingest_manifest`).
 
     Output and oracle: IDENTICAL to ``corpus_build_ingest`` — it
     registers ORACLE_CORPUS_BUILD_INGEST verbatim, and
     tests/test_corpus_build_ingest.py proves the two manifests
     byte-equal. Probe cost ∝ batch at any corpus size. This query is
-    a read-only refresh (no store commit); the committing LOOP —
-    ladder, :func:`commit_ingest_batch`, next batch probes the last
-    — is pytest-proven equivalent to the one-shot ingest.
+    a read-only refresh (no store commit).
 
     Reference parity: transformation_watermark_manager.py:198-270's
     stored-watermark discovery (process only what the ledger says is
@@ -1003,60 +1044,8 @@ def corpus_build_ingest_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs_b = load_table(spark, sf_dir, "documents").filter(odd)
     emb_b_all = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 1)
-    lad = _stored_ingest_ladder(spark, io, docs_b, emb_b_all)
-    be = lad["be"]
-    b_exact_drop, b_near_drop = lad["exact_drop"], lad["near_drop"]
-    b_sem_drop, b_low_drop, b_kept = lad["sem_drop"], lad["low_drop"], lad["kept"]
-
-    # ---- stage 5: mixture over kept_manifest + batch kept ----
-    e_kept = io.read("kept_manifest")
-    comb = e_kept.select("source", "n_tokens").unionByName(b_kept.select("source", "n_tokens"))
-    per_src = comb.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
-    )
-    mixw = _with_mix_weight_quota(per_src).select("source", "mix_weight")
-
-    # ---- stage 6: append-mode shards after the stored kept mass ----
-    base_lang = e_kept.groupBy("lang").agg(F.sum("n_tokens").alias("__base"))
-    w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
-    before_batch = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint")
-    b_kept_m = (
-        b_kept.join(F.broadcast(base_lang), "lang", "left")
-        .withColumn(
-            "__before",
-            F.coalesce(F.col("__base"), F.lit(0)).cast("bigint") + before_batch,
-        )
-        .join(F.broadcast(mixw), "source")
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            F.lit("kept").alias("keep_reason"),
-            F.lit(True).alias("kept"),
-            "mix_weight",
-            F.floor(F.col("__before") / F.lit(SHARD_TOKEN_BUDGET))
-            .cast("bigint")
-            .alias("shard_id"),
-        )
-    )
-    b_drops = (
-        b_exact_drop.withColumn("reason", F.lit("exact_dup"))
-        .unionByName(b_near_drop.withColumn("reason", F.lit("near_dup")))
-        .unionByName(b_sem_drop.withColumn("reason", F.lit("semantic_dup")))
-        .unionByName(b_low_drop.withColumn("reason", F.lit("low_quality")))
-    )
-    b_drop_m = be.join(b_drops, "doc_id").select(
-        "doc_id",
-        "source",
-        "lang",
-        "n_tokens",
-        F.col("reason").alias("keep_reason"),
-        F.lit(False).alias("kept"),
-        F.lit(None).cast("double").alias("mix_weight"),
-        F.lit(None).cast("bigint").alias("shard_id"),
-    )
-    return b_kept_m.unionByName(b_drop_m).orderBy("doc_id")
+    lad = _stored_ingest_ladder(spark, sf_dir, io, docs_b, emb_b_all)
+    return _ingest_manifest(io.read("kept_manifest"), lad["kept"], _drop_rows(lad["be"], lad))
 
 
 _SEM_DOT_SQL = (

@@ -1,17 +1,27 @@
 """Driver queries for the Structured Streaming operators (§2.9) —
 each runs the REAL streaming job (``readStream`` file source,
-event-time watermark, ``Trigger.AvailableNow`` drain into a memory
-sink) and returns the sink as a DataFrame, so the driver's DuckDB
-oracle verifies STREAMING output against batch SQL semantics. This
-upgrades §2.9 from pytest-only evidence to full value-oracle rows:
-an AvailableNow drain over a static parquet directory is
-deterministic (same files, same watermark trajectory), which is what
-makes a bit-exact oracle legitimate here.
+event-time watermark, ``Trigger.AvailableNow`` drain) and returns
+the sink as a DataFrame, so the driver's DuckDB oracle verifies
+STREAMING output against batch SQL semantics. An AvailableNow drain
+over a static parquet directory is deterministic (same files, same
+watermark trajectory), which is what makes a bit-exact oracle
+legitimate here.
 
 Per-call hygiene: fresh checkpoint dir + unique memory-sink name, so
-repeated driver invocations in one session never collide; the events
-file is staged into a temp dir because a file-source stream reads a
-DIRECTORY (symlinks only — no data copied).
+repeated driver invocations in one session never collide. A
+file-source stream reads a DIRECTORY, so the source table is staged
+into a temp dir: symlinked as-is (``_stage_dir``), or re-written as
+N key-ordered files with pinned mtimes (``_stage_ordered``) when the
+query needs N ordered micro-batches. Every drain goes through
+``_await_drain``.
+
+The two ingest twins hold no stage logic of their own: each
+micro-batch runs the batch code — ``streaming_corpus_ingest`` the
+stored-index ladder and its commit
+(``corpus_build._stored_ingest_ladder`` /
+``commit_ingest_batch``), ``streaming_semdedup_ingest`` the per-cell
+probe kernel (``similarity.cell_probe_new_vs_prior``) — against a
+store that grows by each batch.
 
 Scale notes: these are the same jobs a cluster would run against an
 object-store landing zone; AvailableNow gives incremental
@@ -24,6 +34,7 @@ parquet/foreachBatch upsert sinks in streaming/stream_agg.py.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from pathlib import Path
@@ -63,58 +74,81 @@ def _stage_dir(sf_dir: str, name: str) -> tuple[str, int]:
     return str(d), n
 
 
+def _stage_ordered(df: DataFrame, key_sql: str, n_batches: int) -> str:
+    """Write ``df`` as ``n_batches`` parquet files split at the
+    quantiles of the SQL expression ``key_sql`` — file i holds the
+    i-th contiguous key range — into a fresh directory, with strictly
+    increasing pinned mtimes so a file source delivers them in key
+    order, one file per trigger at ``maxFilesPerTrigger=1``. Returns
+    the directory. One scalar-row job computes every split point
+    (the driver never collects keys); the scratch write dir is
+    removed. Raises FileNotFoundError when nothing is staged."""
+    key = F.expr(key_sql)
+    qs = [i / n_batches for i in range(1, n_batches)]
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.expr(f"percentile({key_sql}, {q})").alias(f"c{i}") for i, q in enumerate(qs)],
+    ).collect()[0]
+    if stats["n"] == 0:
+        raise FileNotFoundError("ordered staging of an empty frame produced no files")
+    bounds = [None, *[stats[f"c{i}"] for i in range(len(qs))], None]
+    scratch = Path(tempfile.mkdtemp(prefix="stage_scratch_"))
+    stage = Path(tempfile.mkdtemp(prefix="stage_ordered_"))
+    try:
+        for i in range(n_batches):
+            part = df
+            if bounds[i] is not None:
+                part = part.filter(key >= F.lit(bounds[i]))
+            if bounds[i + 1] is not None:
+                part = part.filter(key < F.lit(bounds[i + 1]))
+            part.coalesce(1).write.parquet(str(scratch / f"b{i}"))
+            src = next((scratch / f"b{i}").glob("*.parquet"), None)
+            if src is None:
+                raise FileNotFoundError(f"ordered staging wrote no file for batch {i}")
+            dst = stage / f"batch_{i}.parquet"
+            # MOVE (not symlink): Java lastModified follows symlinks,
+            # so only a moved file's own pinned mtime controls order
+            os.rename(src, dst)
+            os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return str(stage)
+
+
+def _ordered_stream(df: DataFrame, key_sql: str, n_batches: int = 2) -> DataFrame:
+    """``df`` as a file-source stream of ``n_batches`` key-ordered
+    micro-batches (:func:`_stage_ordered`)."""
+    stage = _stage_ordered(df, key_sql, n_batches)
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+
+
 def _events_stream_time_ordered(
     spark: SparkSession, sf_dir: str, n_batches: int = 2
 ) -> DataFrame:
-    """Stage the events table as ``n_batches`` TIME-ORDERED parquet
-    files — a global split at ts quantiles, mtimes pinned so the
-    file source delivers them oldest-first — and stream them ONE
-    file per trigger. Each micro-batch then holds a contiguous time
-    slice (every bar in batch k precedes every bar in batch k+1, per
-    key and globally), so a stateful query exercises cross-batch
-    state carriage INSIDE the value-oracled path (r09 verdict task
-    4: the zone machine's oracle previously held only for a
-    single-batch drain) while the ordered-replay oracle stays
+    """The events table as ``n_batches`` TIME-ORDERED micro-batches
+    (:func:`_ordered_stream` split at ts quantiles). Each micro-batch
+    holds a contiguous time slice (every bar in batch k precedes
+    every bar in batch k+1, per key and globally), so a stateful
+    query exercises cross-batch state carriage INSIDE the
+    value-oracled path while the ordered-replay oracle stays
     bit-exact: per-key fold order is identical to the one-batch
-    sort. Same staging discipline as streaming_corpus_ingest's
-    id-ordered arrivals, with time as the arrival axis."""
+    sort."""
+    from ..sources.catalog import normalize_event_ts
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    df = spark.read.parquet(src)
-    schema = df.schema
-    # one scalar-row job computes every split point; ts may be
-    # INT64-nanos (already numeric) or a timestamp flavor
+    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    # ts may be INT64-nanos (already numeric) or a timestamp flavor
     # (TIMESTAMP/TIMESTAMP_NTZ reject a direct double cast — go
     # through unix_micros, monotone either way)
-    if isinstance(schema["ts"].dataType, (T_LongType, T_IntegerType)):
+    if isinstance(df.schema["ts"].dataType, (T_LongType, T_IntegerType)):
         key_sql = "CAST(ts AS DOUBLE)"
     else:
         key_sql = "CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS DOUBLE)"
-    key = F.expr(key_sql)
-    qs = [i / n_batches for i in range(1, n_batches)]
-    cuts = df.agg(
-        *[F.expr(f"percentile({key_sql}, {q})").alias(f"c{i}") for i, q in enumerate(qs)]
-    ).collect()[0]
-    bounds = [None, *[cuts[f"c{i}"] for i in range(len(qs))], None]
-    out = Path(tempfile.mkdtemp(prefix="stream_events_scratch_"))
-    stage = Path(tempfile.mkdtemp(prefix="stream_events_ordered_"))
-    for i in range(n_batches):
-        part = df
-        if bounds[i] is not None:
-            part = part.filter(key >= F.lit(bounds[i]))
-        if bounds[i + 1] is not None:
-            part = part.filter(key < F.lit(bounds[i + 1]))
-        part.coalesce(1).write.parquet(str(out / f"b{i}"))
-        src_part = next((out / f"b{i}").glob("*.parquet"))
-        dst = stage / f"batch_{i}.parquet"
-        # MOVE (not symlink): Java lastModified follows symlinks, so
-        # only a moved file's own pinned mtime controls batch order
-        os.rename(src_part, dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-    staged = sorted(stage.glob("*.parquet"))
-    if len(staged) != n_batches or not all(p.exists() for p in staged):
-        raise FileNotFoundError(f"time-ordered staging produced {staged}")
-    return read_events_stream(spark, str(stage), schema, max_files_per_trigger=1)
+    return normalize_event_ts(_ordered_stream(df, key_sql, n_batches))
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,16 +161,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events_stream(spark, staged, schema, max_files_per_trigger=n_files)
 
 
-def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
-    """AvailableNow drain into a uniquely-named memory sink; returns
-    the sink table (NOT collected — the driver does that)."""
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+def _await_drain(writer, what: str) -> None:
+    """Run ``writer`` as an AvailableNow query over a fresh checkpoint
+    dir and block until the source is drained."""
     q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
+        writer.option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -144,7 +173,16 @@ def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
         # awaitTermination returns False on timeout without raising —
         # reading the sink now would silently return PARTIAL results
         q.stop()
-        raise TimeoutError(f"streaming drain into {name} exceeded 300s")
+        raise TimeoutError(f"streaming drain into {what} exceeded 300s")
+
+
+def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
+    """AvailableNow drain into a uniquely-named memory sink; returns
+    the sink table (NOT collected — the driver does that)."""
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    _await_drain(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(mode), name
+    )
     return stream_df.sparkSession.table(name)
 
 
@@ -357,9 +395,9 @@ def streaming_zone_signals_stateful(spark: SparkSession, sf_dir: str) -> DataFra
     unix_micros(ts)`` as the (unique per user — verified) event-time
     sort key, so per-batch folding is deterministic.
 
-    Value-oracled since r9; since r10 the oracle covers CROSS-BATCH
-    state carriage too. The state machine itself is not SQL, but its
-    OUTPUT is — the de-stating proof for the batch twin
+    The oracle covers CROSS-BATCH state carriage. The state machine
+    itself is not SQL, but its OUTPUT is — the de-stating proof for
+    the batch twin
     (operators/signals.zone_confirmation_signals: a fire requires
     ``prev_rsi <= 30``, which itself forces the zone flag at the
     previous row, so the flags carry no information the lag doesn't)
@@ -369,7 +407,7 @@ def streaming_zone_signals_stateful(spark: SparkSession, sf_dir: str) -> DataFra
     entered in batch 0 must SURVIVE the state store to fire in
     batch 1 — and because per-key fold order across the two batches
     equals the one-batch sort, the LAG-based SQL below remains a
-    bit-exact oracle of the multi-batch run (r09 verdict task 4).
+    bit-exact oracle of the multi-batch run.
     tests/test_streaming_stateful.py additionally drives the fold
     file-by-file with golden series."""
     from ..streaming.stateful_signals import zone_signals_stateful
@@ -506,421 +544,95 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous semantic-dedup ingest as a REAL streaming job —
     the production form of ``incremental_semdedup_ingest``: the new
     (odd-id) vectors ARRIVE as a file-source stream in TWO id-ordered
-    micro-batches (maxFilesPerTrigger=1; file mtimes pin the order),
-    and each ``foreachBatch`` probes a GROWING probe store — the
-    even-id corpus pre-assigned to its k-means cells plus every
-    previously-arrived odd vector — then appends its own batch to
-    the store. State genuinely crosses micro-batches: a batch-2
+    micro-batches, and each ``foreachBatch`` runs the shared per-cell
+    probe kernel (``cell_probe_new_vs_prior``) over the store rows in
+    the batch's cells plus the batch — the store being the even-id
+    corpus in its even-trained cells plus every previously-arrived
+    odd vector — keeps the batch's own rows, and appends the batch
+    to the store. State genuinely crosses micro-batches: a batch-2
     vector's duplicates include batch-1 arrivals.
 
-    Because the files are split at the median odd id,
-    "arrived in an earlier batch" coincides with "smaller id", so
+    Because the batches are id-ordered, "arrived in an earlier batch"
+    coincides with "smaller id" — the kernel's first-wins rule — so
     the result is VALUE-IDENTICAL to the batch incremental query and
-    verifies against the SAME DuckDB oracle — bit-exact streaming
-    evidence, not just a rows-only drain. Exact fixed-point cosines
-    make the equality independent of partitioning inside each batch.
+    verifies against the SAME DuckDB oracle.
 
     Scale shape: the store is a TableIO parquet table (at 100 TB:
     partitioned by cell → each micro-batch's probe is partition
-    pruning + per-cell joins); probe cost per batch ∝ batch × cell
-    population, the same contract the batch query pins in tests."""
-    import numpy as np
-
-    from ..operators import similarity as S
-    from ..sources.catalog import load_table
+    pruning + per-cell kernels); probe cost per batch ∝ the batch's
+    cell footprint."""
     from ..sources.io import TableIO
-    from .similarity import SEMDEDUP_THETA, _cell_assignments
+    from .similarity import SEMDEDUP_THETA, _emb, _even_trained_cells, cell_probe_new_vs_prior
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    # cell contract from the active quantizer tier, trained on the
-    # existing (even-id) half only — same as the batch twin
-    cells = _cell_assignments(spark, sf_dir, where=F.col("vec_id") % 2 == 0)
-    with_cells = emb.select("vec_id", "embedding").join(cells, "vec_id")
+    odd = F.col("vec_id") % 2 == 1
+    v = _emb(spark, sf_dir).select("vec_id", "embedding").join(
+        _even_trained_cells(spark, sf_dir), "vec_id"
+    )
+    io = TableIO(spark, tempfile.mkdtemp(prefix="stream_semdedup_"))
+    io.overwrite(v.filter(~odd), "probe_store")
 
-    wh = tempfile.mkdtemp(prefix="stream_semdedup_")
-    io = TableIO(spark, wh)
-    # seed the probe store with the existing (even-id) corpus
-    io.overwrite(with_cells.filter(F.col("vec_id") % 2 == 0), "probe_store")
-
-    # stage the arriving batch as two id-ordered parquet files. The
-    # split point is ONE scalar aggregate — any deterministic id
-    # boundary preserves the "arrived earlier ⟺ smaller id"
-    # invariant the oracle equality rests on, so the driver never
-    # collects the batch's ids (the r05 verdict's staging nit: at
-    # real batch sizes the old id-list collect was corpus-sized).
-    odd = with_cells.filter(F.col("vec_id") % 2 == 1).localCheckpoint(eager=True)
-    median = odd.agg(F.expr("percentile(vec_id, 0.5)").alias("m")).collect()[0]["m"]
-    arrivals = Path(tempfile.mkdtemp(prefix="stream_semdedup_arrivals_"))
-    odd.filter(F.col("vec_id") < median).coalesce(1).write.parquet(str(arrivals / "b0"))
-    odd.filter(F.col("vec_id") >= median).coalesce(1).write.parquet(str(arrivals / "b1"))
-    stage = Path(tempfile.mkdtemp(prefix="stream_semdedup_src_"))
-    for i, sub in enumerate(("b0", "b1")):
-        part = next((arrivals / sub).glob("*.parquet"))
-        dst = stage / f"batch_{i}.parquet"
-        # MOVE (not symlink) so the utime below lands on the file the
-        # stream source actually stats — Java lastModified FOLLOWS
-        # symlinks, so pinning a link's own mtime would leave batch
-        # order to the incidental (possibly tied) write timestamps
-        os.rename(part, dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    cos = S.cosine(S.dot_exact("e1", "e2"), S.norm2_exact("e1"), S.norm2_exact("e2"))
-
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        store = io.read("probe_store")
-        new_side = b.select(
-            F.col("vec_id").alias("d2"), F.col("embedding").alias("e2"), "cell"
+    def probe_batch(b: DataFrame, batch_id: int) -> None:
+        store = io.read("probe_store").join(b.select("cell").distinct(), "cell", "left_semi")
+        probed = cell_probe_new_vs_prior(store.unionByName(b), SEMDEDUP_THETA).join(
+            b.select("vec_id"), "vec_id", "left_semi"
         )
-        prior = store.select(
-            F.col("vec_id").alias("d1"), F.col("embedding").alias("e1"), "cell"
-        )
-        # store members (even ids + earlier batches) + same-batch
-        # earlier ids — together exactly "even OR smaller odd id"
-        cand = prior.join(new_side, "cell").filter(
-            (F.col("d1") % 2 == 0) | (F.col("d1") < F.col("d2"))
-        )
-        same = (
-            b.select(F.col("vec_id").alias("d1"), F.col("embedding").alias("e1"), "cell")
-            .join(new_side, "cell")
-            .filter(F.col("d1") < F.col("d2"))
-        )
-        pairs = cand.unionByName(same)
-        matches = (
-            pairs.filter(cos >= F.lit(SEMDEDUP_THETA))
-            .groupBy("d2")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        out = (
-            b.join(matches, b.vec_id == matches.d2, "left")
-            .select(
-                "vec_id",
-                "cell",
-                F.coalesce("n", F.lit(0)).alias("n_dup_matches"),
-                (F.coalesce("n", F.lit(0)) == 0).alias("ingested"),
-            )
-        )
-        io.append(out, "results")
+        io.append(probed.withColumn("ingested", F.col("n_dup_matches") == 0), "results")
         io.append(b, "probe_store")  # later batches probe this one
 
-    schema = odd.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
+    _await_drain(
+        _ordered_stream(v.filter(odd), "vec_id").writeStream.foreachBatch(probe_batch),
+        "streaming_semdedup_ingest",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_semdedup_")
-    q = (
-        stream.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_semdedup_ingest drain timed out")
     return io.read("results").orderBy("vec_id")
 
 
 def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous corpus CURATION as a real streaming job — the
-    streaming form of the ``corpus_build_ingest`` capstone: new
-    documents (odd ids) ARRIVE as a file-source stream in TWO
-    id-ordered micro-batches; each ``foreachBatch`` runs the full
-    probe ladder against GROWING stores —
-
-    - hash_store: content hashes of every doc seen (exact tier);
-    - sig_store: shingle sets + MinHash signatures of the stage-2
-      partner set (existing near-dup canonicals + arrived batch
-      stage-1 survivors);
-    - sem_store: (vector, even-trained cell) of the stage-3 partner
-      set (existing semantic representatives + arrived batch
-      stage-2 survivors);
-
-    — appends its own survivors to each store, and records the
-    keep decision. After the drain, the manifest FINALIZE step
-    computes the combined-mass mixture weights and append-mode
-    shards over all recorded decisions — exactly the batch
-    capstone's stages 5/6.
+    streaming form of ``corpus_build_ingest_stored``: new documents
+    (odd ids) ARRIVE as a file-source stream in TWO id-ordered
+    micro-batches. The existing corpus's index tables are published
+    once into a private store (``publish_corpus_index_tables``);
+    each ``foreachBatch`` runs THE ingest ladder
+    (``_stored_ingest_ladder``) against it, records the batch's drop
+    rows, and commits the batch (``commit_ingest_batch``) so the
+    next micro-batch probes it through the same tables. After the
+    drain the manifest tail (``_ingest_manifest``) weighs and shards
+    the committed kept rows over the published base.
 
     Because micro-batches are id-ordered, "arrived earlier ⟺
     smaller id", so every probe reproduces the batch query's
     deterministic first-wins contracts and the result is
     VALUE-IDENTICAL to ``corpus_build_ingest`` — it registers the
-    SAME DuckDB oracle verbatim: bit-exact streaming evidence for
-    the whole curation ladder, not a rows-only drain. (Exact
-    fixed-point cosines and integer Jaccard make the equality
-    independent of partitioning within each batch.)
-
-    Scale shape: the stores are TableIO parquet tables (at 100 TB:
-    hash/signature stores partitioned by key prefix, the vector
-    store by cell → each batch's probes are partition pruning +
-    per-key joins); per-batch probe cost ∝ batch, the historical
-    corpus is never re-hashed, re-signed, or re-scored."""
-    import numpy as np  # noqa: F401  (parity with the semdedup twin's env probe)
-
-    from ..functions import text as T
-    from ..operators import dedup as D
-    from ..operators import similarity as S
+    SAME DuckDB oracle verbatim."""
     from ..sources.catalog import load_table
     from ..sources.io import TableIO
-    from .corpus_build import CB_QUALITY_MIN, _even_prior_state
-    from .corpus_mix import _with_mix_weight_quota
-    from .dedup import _lsh_state
-    from .similarity import SEMDEDUP_THETA, _emb, _even_trained_cells
-    from .text import SHARD_TOKEN_BUDGET, quality_score_expr
+    from .corpus_build import (
+        _drop_rows,
+        _ingest_manifest,
+        _stored_ingest_ladder,
+        commit_ingest_batch,
+        publish_corpus_index_tables,
+    )
 
-    prior = _even_prior_state(spark, sf_dir)
-    lsh = _lsh_state(spark, sf_dir)
-    cells = _even_trained_cells(spark, sf_dir)
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    docs = load_table(spark, sf_dir, "documents")
+    io = TableIO(spark, tempfile.mkdtemp(prefix="stream_corpus_"))
+    publish_corpus_index_tables(spark, sf_dir, io)
+    odd = F.col("doc_id") % 2 == 1
+    emb_b = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 1)
 
-    wh = tempfile.mkdtemp(prefix="stream_corpus_")
-    io = TableIO(spark, wh)
-    even_h = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", T.content_hash(F.col("text")).alias("h")
-    )
-    io.overwrite(even_h, "hash_store")
-    # stage-2 partner seed: the existing corpus's retained near-dup
-    # canonicals, with shingles + signatures (the production
-    # signature table); sets come from the session-memoized chain
-    e_s2_sets = lsh["sets"].join(prior["e_s2"], "doc_id", "left_semi")
-    e_s2_sigs = D.minhash_signatures(e_s2_sets, num_perm=8)
-    io.overwrite(e_s2_sets.join(e_s2_sigs, "doc_id"), "sig_store")
-    # stage-3 partner seed: existing semantic representatives
-    sem_seed = (
-        emb.join(cells, "vec_id")
-        .join(
-            prior["e_s3"].select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-        )
-    )
-    io.overwrite(sem_seed, "sem_store")
+    def refresh(b: DataFrame, batch_id: int) -> None:
+        lad = _stored_ingest_ladder(spark, sf_dir, io, b, emb_b)
+        io.append(_drop_rows(lad["be"], lad), "drop_rows")
+        commit_ingest_batch(io, lad)
 
-    # stage the arriving batch as two id-ordered parquet files (the
-    # split point is one scalar aggregate — same staging discipline
-    # as streaming_semdedup_ingest)
-    odd_docs = docs.filter(F.col("doc_id") % 2 == 1).localCheckpoint(eager=True)
-    median = odd_docs.agg(F.expr("percentile(doc_id, 0.5)").alias("m")).collect()[0]["m"]
-    arrivals = Path(tempfile.mkdtemp(prefix="stream_corpus_arrivals_"))
-    odd_docs.filter(F.col("doc_id") < median).coalesce(1).write.parquet(
-        str(arrivals / "b0")
+    docs_b = load_table(spark, sf_dir, "documents").filter(odd)
+    _await_drain(
+        _ordered_stream(docs_b, "doc_id").writeStream.foreachBatch(refresh),
+        "streaming_corpus_ingest",
     )
-    odd_docs.filter(F.col("doc_id") >= median).coalesce(1).write.parquet(
-        str(arrivals / "b1")
-    )
-    stage = Path(tempfile.mkdtemp(prefix="stream_corpus_src_"))
-    for i, sub in enumerate(("b0", "b1")):
-        part = next((arrivals / sub).glob("*.parquet"))
-        dst = stage / f"batch_{i}.parquet"
-        os.rename(part, dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    cos = S.cosine(S.dot_exact("e1", "e2"), S.norm2_exact("e1"), S.norm2_exact("e2"))
-
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        be = (
-            b.select(
-                "doc_id", "source", "lang", "text", T.tokens(F.col("text")).alias("toks")
-            )
-            .select(
-                "doc_id",
-                "source",
-                "lang",
-                "text",
-                F.expr("CASE WHEN toks IS NULL THEN NULL ELSE size(toks) END")
-                .cast("bigint")
-                .alias("n_tokens"),
-                T.content_hash(F.col("text")).alias("h"),
-                quality_score_expr().alias("quality"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # ---- stage 1: exact probe (store = evens + earlier odds;
-        # same-batch = smaller id) ----
-        hs = io.read("hash_store").select(
-            F.col("doc_id").alias("o_id"), F.col("h").alias("o_h")
-        )
-        m_store = be.select("doc_id", "h").join(
-            hs, (F.col("h") == F.col("o_h")), "left_semi"
-        )
-        bh = be.select(F.col("doc_id").alias("o_id"), F.col("h").alias("o_h"))
-        m_same = be.select("doc_id", "h").join(
-            bh,
-            (F.col("h") == F.col("o_h")) & (F.col("o_id") < F.col("doc_id")),
-            "left_semi",
-        )
-        b_exact_drop = (
-            m_store.select("doc_id")
-            .unionByName(m_same.select("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        io.append(be.select("doc_id", "h"), "hash_store")
-        s1b = be.join(b_exact_drop, "doc_id", "left_anti").localCheckpoint(eager=True)
-        # ---- stage 2: MinHash-LSH probe ----
-        bsets = D.with_shingle_sets(
-            s1b.select("doc_id", "text")
-        ).localCheckpoint(eager=True)
-        bsigs = D.minhash_signatures(bsets, num_perm=8)
-        store_sigs = io.read("sig_store")
-        union_sigs = store_sigs.select(bsigs.columns).unionByName(bsigs)
-        cands = D.lsh_candidate_pairs(union_sigs, num_perm=8, rows_per_band=2)
-        bids1 = bsets.select("doc_id")
-        cands = (
-            cands.join(bids1.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
-            .unionByName(
-                cands.join(bids1.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
-            )
-            .distinct()
-        )
-        comb_sets = store_sigs.select("doc_id", "shingles").unionByName(
-            bsets.select("doc_id", "shingles")
-        )
-        verified = D.exact_jaccard_pairs(comb_sets, min_jaccard=0.5, candidates=cands)
-        in_batch = lambda c: F.col(c) % 2 == 1  # noqa: E731
-        # partner rule per verified pair (a < b): b (odd, this batch)
-        # drops on ANY partner a; a (odd, this batch) drops only on
-        # an EVEN b (a larger odd is not a valid partner for a)
-        drop_hi = verified.join(
-            bids1.withColumnRenamed("doc_id", "d2"), "d2", "left_semi"
-        ).select(F.col("d2").alias("doc_id"))
-        drop_lo = (
-            verified.filter(F.col("d2") % 2 == 0)
-            .join(bids1.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
-            .select(F.col("d1").alias("doc_id"))
-        )
-        b_near_drop = (
-            drop_hi.unionByName(drop_lo).distinct().localCheckpoint(eager=True)
-        )
-        s2b = s1b.join(b_near_drop, "doc_id", "left_anti").localCheckpoint(eager=True)
-        io.append(bsets.join(bsigs, "doc_id"), "sig_store")
-        # ---- stage 3: semantic probe in even-trained cells ----
-        bv = (
-            emb.join(cells, "vec_id")
-            .join(
-                s2b.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-            )
-            .localCheckpoint(eager=True)
-        )
-        store_v = io.read("sem_store")
-        new_side = bv.select(
-            F.col("vec_id").alias("d2"), F.col("embedding").alias("e2"), "cell"
-        )
-        prior_side = store_v.select(
-            F.col("vec_id").alias("d1"), F.col("embedding").alias("e1"), "cell"
-        )
-        cand_sem = prior_side.join(new_side, "cell")
-        same_sem = (
-            bv.select(F.col("vec_id").alias("d1"), F.col("embedding").alias("e1"), "cell")
-            .join(new_side, "cell")
-            .filter(F.col("d1") < F.col("d2"))
-        )
-        sem_matches = (
-            cand_sem.unionByName(same_sem)
-            .filter(cos >= F.lit(SEMDEDUP_THETA))
-            .select(F.col("d2").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        s3b = s2b.join(sem_matches, "doc_id", "left_anti")
-        io.append(bv, "sem_store")
-        # ---- stage 4 + decision record ----
-        quality_ok = F.col("quality").isNull() | (
-            F.col("quality") >= F.lit(CB_QUALITY_MIN)
-        )
-        b_low_drop = s3b.filter(~quality_ok).select("doc_id")
-        dec = (
-            be.select("doc_id", "source", "lang", "n_tokens")
-            .join(b_exact_drop.withColumn("r1", F.lit(1)), "doc_id", "left")
-            .join(b_near_drop.withColumn("r2", F.lit(1)), "doc_id", "left")
-            .join(sem_matches.withColumn("r3", F.lit(1)), "doc_id", "left")
-            .join(b_low_drop.withColumn("r4", F.lit(1)), "doc_id", "left")
-            .select(
-                "doc_id",
-                "source",
-                "lang",
-                "n_tokens",
-                F.when(F.col("r1").isNotNull(), F.lit("exact_dup"))
-                .when(F.col("r2").isNotNull(), F.lit("near_dup"))
-                .when(F.col("r3").isNotNull(), F.lit("semantic_dup"))
-                .when(F.col("r4").isNotNull(), F.lit("low_quality"))
-                .otherwise(F.lit("kept"))
-                .alias("keep_reason"),
-            )
-        )
-        io.append(dec, "decisions")
-
-    schema = odd_docs.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_corpus_ingest_")
-    q = (
-        stream.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_corpus_ingest drain timed out")
-
-    # ---- manifest finalize: combined-mass mixture + append shards
-    # over ALL recorded decisions (the batch capstone's stages 5/6)
-    d = io.read("decisions")
-    kept_b = d.filter(F.col("keep_reason") == "kept").select(
-        "doc_id", "source", "lang", "n_tokens"
-    )
-    e_kept = prior["e_kept"]
-    comb = e_kept.select("source", "n_tokens").unionByName(
-        kept_b.select("source", "n_tokens")
-    )
-    per_src = comb.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
-    )
-    mixw = _with_mix_weight_quota(per_src).select("source", "mix_weight")
-    base_lang = e_kept.groupBy("lang").agg(F.sum("n_tokens").alias("__base"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    before_batch = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint")
-    kept_m = (
-        kept_b.join(F.broadcast(base_lang), "lang", "left")
-        .withColumn(
-            "__before",
-            F.coalesce(F.col("__base"), F.lit(0)).cast("bigint") + before_batch,
-        )
-        .join(F.broadcast(mixw), "source")
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            F.lit("kept").alias("keep_reason"),
-            F.lit(True).alias("kept"),
-            "mix_weight",
-            F.floor(F.col("__before") / F.lit(SHARD_TOKEN_BUDGET))
-            .cast("bigint")
-            .alias("shard_id"),
-        )
-    )
-    drop_m = d.filter(F.col("keep_reason") != "kept").select(
-        "doc_id",
-        "source",
-        "lang",
-        "n_tokens",
-        "keep_reason",
-        F.lit(False).alias("kept"),
-        F.lit(None).cast("double").alias("mix_weight"),
-        F.lit(None).cast("bigint").alias("shard_id"),
-    )
-    return kept_m.unionByName(drop_m).orderBy("doc_id")
+    # the committed manifest = the published (even) base + every
+    # batch's kept rows
+    kept = io.read("kept_manifest")
+    return _ingest_manifest(kept.filter(~odd), kept.filter(odd), io.read("drop_rows"))
 
 
 def streaming_vpin_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,13 +795,13 @@ ORACLES = {
     "streaming_dedup_hashes": ORACLE_STREAMING_DEDUP_HASHES,
     "streaming_click_attribution": ORACLE_STREAMING_CLICK_ATTRIBUTION,
     "streaming_sliding_rollup": ORACLE_STREAMING_SLIDING_ROLLUP,
-    # r9: flipped from rows-only — the de-stating proof makes the
-    # stateful fold's OUTPUT SQL-expressible (see its docstring)
+    # the de-stating proof makes the stateful fold's OUTPUT
+    # SQL-expressible (see its docstring)
     "streaming_zone_signals_stateful": ORACLE_STREAMING_ZONE_SIGNALS_STATEFUL,
-    # r10: completed-bucket VPIN — the batch SQL restricted to
+    # completed-bucket VPIN — the batch SQL restricted to
     # bucket < max(bucket) per series (see the query docstring)
     "streaming_vpin_stateful": _streaming_vpin_oracle(),
-    # r10: imbalance bars close ON their threshold tick, so the
+    # imbalance bars close ON their threshold tick, so the
     # batch walk's recursive oracle applies verbatim
     "streaming_tick_bars_stateful": _tick_bars_oracle(),
 }

@@ -120,6 +120,8 @@ _SLOW_TESTS = {
     ("test_zorder", "test_zorder_beats_linear_sort_on_second_column"),  # 4.2s
     # every registered batch query in one session (several minutes)
     ("test_cache_owners", "test_no_orphaned_cache_every_batch_query"),
+    ("test_corpus_build_ingest", "test_streaming_ingest_equals_stored_on_planted_fixture"),
+    ("test_corpus_build_ingest", "test_ingest_twins_agree_under_hierarchical_tier"),
 }
 
 

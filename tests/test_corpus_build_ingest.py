@@ -267,7 +267,7 @@ def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
     for lo, hi in ((101, 110), (110, 200)):  # id-ordered batches
         cond_d = odd_doc & (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         cond_v = odd_vec & (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        lad = _stored_ingest_ladder(spark, io, docs.filter(cond_d), embs.filter(cond_v))
+        lad = _stored_ingest_ladder(spark, full, io, docs.filter(cond_d), embs.filter(cond_v))
         seq.update(reasons(lad))
         commit_ingest_batch(io, lad)
 
@@ -287,6 +287,47 @@ def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
         if r["doc_id"] % 2 == 0 and r["kept"]
     }
     assert committed_kept == expect_kept
+
+
+def test_streaming_ingest_equals_stored_on_planted_fixture(spark, ingest_dirs):
+    """The streaming twin runs the stored-index ladder per
+    micro-batch and commits each batch; on the planted fixture —
+    every reason path, first-wins across the two micro-batches
+    (111 and 113 lose to 109 in the earlier batch) — its manifest
+    must equal the one-shot stored ingest exactly."""
+    from fin_trade_craft_spark.queries.streaming import streaming_corpus_ingest
+
+    full, _ = ingest_dirs
+    stored = corpus_build_ingest_stored(spark, full).toPandas()
+    streamed = streaming_corpus_ingest(spark, full).toPandas()
+    pd.testing.assert_frame_equal(streamed, stored, check_exact=True)
+
+
+def test_ingest_twins_agree_under_hierarchical_tier(spark):
+    """With the hierarchical quantizer forced, ``cell_index`` holds
+    hierarchical cells, so the stored ladder must assign batch
+    vectors through the same tier (a flat codebook assignment would
+    compare flat cids against hierarchical cell ids). All three
+    corpus ingests and both semantic ingests must agree."""
+    from fin_trade_craft_spark.queries import similarity as SQ
+    from fin_trade_craft_spark.queries.streaming import (
+        streaming_corpus_ingest,
+        streaming_semdedup_ingest,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    spark.conf.set(SQ.QUANTIZER_CONF, "hierarchical")
+    try:
+        memo = corpus_build_ingest(spark, sf).toPandas()
+        stored = corpus_build_ingest_stored(spark, sf).toPandas()
+        streamed = streaming_corpus_ingest(spark, sf).toPandas()
+        pd.testing.assert_frame_equal(stored, memo, check_exact=True)
+        pd.testing.assert_frame_equal(streamed, memo, check_exact=True)
+        batch = SQ.incremental_semdedup_ingest(spark, sf).toPandas()
+        streamed_sem = streaming_semdedup_ingest(spark, sf).toPandas()
+        pd.testing.assert_frame_equal(streamed_sem, batch, check_exact=True)
+    finally:
+        spark.conf.unset(SQ.QUANTIZER_CONF)
 
 
 def test_append_leaves_existing_manifest_stable(spark, ingest_dirs):

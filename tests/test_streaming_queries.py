@@ -85,3 +85,28 @@ def test_time_ordered_staging_delivers_two_ordered_batches(spark):
     assert hi0 < lo1, f"batch slices overlap: {seen}"
     total = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
     assert n0 + n1 == total and n0 > 0 and n1 > 0
+
+
+def test_stage_ordered_writes_contiguous_ordered_files(spark, tmp_path, monkeypatch):
+    """The one ordered-arrival stager: N files with strictly
+    increasing pinned mtimes, file i holding the i-th contiguous key
+    range, every row exactly once, no scratch dir left behind, and an
+    input that stages nothing raises."""
+    import tempfile
+
+    df = spark.createDataFrame([(k, f"r{k}") for k in range(40)], "k long, v string")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stage = Path(streaming._stage_ordered(df, "k", 4))
+    assert list(tmp_path.iterdir()) == [stage]  # scratch write dir removed
+    files = sorted(stage.glob("*.parquet"))
+    assert [p.name for p in files] == [f"batch_{i}.parquet" for i in range(4)]
+    mtimes = [p.stat().st_mtime for p in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    keys = [sorted(r["k"] for r in spark.read.parquet(str(p)).collect()) for p in files]
+    assert all(ks for ks in keys)
+    assert all(a[-1] < b[0] for a, b in zip(keys, keys[1:])), keys
+    assert all(ks == list(range(ks[0], ks[-1] + 1)) for ks in keys), keys
+    assert sorted(k for ks in keys for k in ks) == list(range(40))
+
+    with pytest.raises(FileNotFoundError):
+        streaming._stage_ordered(df.filter("k < 0"), "k", 2)
