@@ -292,9 +292,10 @@ def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
 def test_streaming_ingest_equals_stored_on_planted_fixture(spark, ingest_dirs):
     """The streaming twin runs the stored-index ladder per
     micro-batch and commits each batch; on the planted fixture —
-    every reason path, first-wins across the two micro-batches
-    (111 and 113 lose to 109 in the earlier batch) — its manifest
-    must equal the one-shot stored ingest exactly."""
+    every reason path, split at the median batch id into micro-batches
+    101..107 and 109..117, so 111 and 113 lose to 109 first-wins
+    inside the second one — its manifest must equal the one-shot
+    stored ingest exactly."""
     from fin_trade_craft_spark.queries.streaming import streaming_corpus_ingest
 
     full, _ = ingest_dirs
