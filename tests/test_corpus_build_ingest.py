@@ -310,13 +310,14 @@ def test_ingest_twins_agree_under_hierarchical_tier(spark):
     vectors through the same tier (a flat codebook assignment would
     compare flat cids against hierarchical cell ids). All three
     corpus ingests and both semantic ingests must agree."""
+    from conftest import SF_CORRECT as sf
+
     from fin_trade_craft_spark.queries import similarity as SQ
     from fin_trade_craft_spark.queries.streaming import (
         streaming_corpus_ingest,
         streaming_semdedup_ingest,
     )
 
-    sf = "/root/testdata/sf0.01"
     spark.conf.set(SQ.QUANTIZER_CONF, "hierarchical")
     try:
         memo = corpus_build_ingest(spark, sf).toPandas()
