@@ -1,15 +1,15 @@
 """Driver queries for the Structured Streaming operators (§2.9) —
 each runs the REAL streaming job (``readStream`` file source,
 event-time watermark, ``Trigger.AvailableNow`` drain) and returns
-the sink as a DataFrame, so the driver's DuckDB oracle verifies
-STREAMING output against batch SQL semantics. An AvailableNow drain
-over a static parquet directory is deterministic (same files, same
+the sink as a DataFrame, so a DuckDB oracle verifies STREAMING
+output against batch SQL semantics. An AvailableNow drain over a
+static parquet directory is deterministic (same files, same
 watermark trajectory), which is what makes a bit-exact oracle
 legitimate here.
 
 Per-call hygiene: fresh checkpoint dir + unique memory-sink name, so
-repeated driver invocations in one session never collide. A
-file-source stream reads a DIRECTORY, so the source table is staged
+repeated invocations in one session never collide. A file-source
+stream reads a DIRECTORY, so the source table is staged
 into a temp dir: symlinked as-is (``_stage_dir``), or re-written as
 N key-ordered files with pinned mtimes (``_stage_ordered``) when the
 query needs N ordered micro-batches. Every drain goes through
@@ -81,7 +81,7 @@ def _stage_ordered(df: DataFrame, key_sql: str, n_batches: int) -> str:
     increasing pinned mtimes so a file source delivers them in key
     order, one file per trigger at ``maxFilesPerTrigger=1``. Returns
     the directory. One scalar-row job computes every split point
-    (the driver never collects keys); the scratch write dir is
+    (no key is collected); the scratch write dir is
     removed. Raises FileNotFoundError when nothing is staged."""
     key = F.expr(key_sql)
     qs = [i / n_batches for i in range(1, n_batches)]
@@ -178,7 +178,7 @@ def _await_drain(writer, what: str) -> None:
 
 def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
     """AvailableNow drain into a uniquely-named memory sink; returns
-    the sink table (NOT collected — the driver does that)."""
+    the sink table (NOT collected — the caller does that)."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
     _await_drain(
         stream_df.writeStream.format("memory").queryName(name).outputMode(mode), name
