@@ -308,11 +308,13 @@ def test_ingest_twins_agree_under_hierarchical_tier(spark):
     """With the hierarchical quantizer forced, ``cell_index`` holds
     hierarchical cells, so the stored ladder must assign batch
     vectors through the same tier (a flat codebook assignment would
-    compare flat cids against hierarchical cell ids). All three
-    corpus ingests and both semantic ingests must agree."""
+    compare flat cids against hierarchical cell ids), and no flat
+    codebook is trained or published for it. All three corpus
+    ingests and both semantic ingests must agree."""
     from conftest import SF_CORRECT as sf
 
     from fin_trade_craft_spark.queries import similarity as SQ
+    from fin_trade_craft_spark.queries.corpus_build import _index_store
     from fin_trade_craft_spark.queries.streaming import (
         streaming_corpus_ingest,
         streaming_semdedup_ingest,
@@ -322,6 +324,8 @@ def test_ingest_twins_agree_under_hierarchical_tier(spark):
     try:
         memo = corpus_build_ingest(spark, sf).toPandas()
         stored = corpus_build_ingest_stored(spark, sf).toPandas()
+        io = _index_store(spark, sf)
+        assert io.exists("cell_index") and not io.exists("codebook")
         streamed = streaming_corpus_ingest(spark, sf).toPandas()
         pd.testing.assert_frame_equal(stored, memo, check_exact=True)
         pd.testing.assert_frame_equal(streamed, memo, check_exact=True)
