@@ -13,7 +13,11 @@ stream reads a DIRECTORY, so the source table is staged
 into a temp dir: symlinked as-is (``_stage_dir``), or re-written as
 N key-ordered files with pinned mtimes (``_stage_ordered``) when the
 query needs N ordered micro-batches. Every drain goes through
-``_await_drain``.
+``_await_drain``, which removes the staged and checkpoint dirs once
+the drain returns: the memory sink and the twins' stores hold
+everything the result reads. The twins' stores back their lazy
+results, so they are removed at process exit
+(``corpus_build.retire_at_exit``).
 
 The two ingest twins hold no stage logic of their own: each
 micro-batch runs the batch code — ``streaming_corpus_ingest`` the
@@ -36,6 +40,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from pathlib import Path
 
@@ -45,6 +50,19 @@ from pyspark.sql.types import IntegerType as T_IntegerType
 from pyspark.sql.types import LongType as T_LongType
 
 from ..streaming.stream_agg import read_events_stream
+
+# temp dirs the calling thread's next drain reads: staged sources and
+# the checkpoint. Per thread, so queries drained concurrently never
+# remove each other's inputs.
+_PENDING = threading.local()
+
+
+def _scratch_dir(prefix: str) -> Path:
+    """A fresh temp dir that the calling thread's next
+    :func:`_await_drain` removes once the drain returns."""
+    d = Path(tempfile.mkdtemp(prefix=prefix))
+    _PENDING.__dict__.setdefault("dirs", []).append(d)
+    return d
 
 
 def _stage_dir(sf_dir: str, name: str) -> tuple[str, int]:
@@ -59,7 +77,7 @@ def _stage_dir(sf_dir: str, name: str) -> tuple[str, int]:
     # over dangling links SILENTLY yields zero rows (caught by the
     # sf5 replica sweep, which passes ".testdata/sf5")
     src = (Path(sf_dir.rstrip("/")) / f"{name}.parquet").resolve()
-    d = Path(tempfile.mkdtemp(prefix=f"stream_{name}_"))
+    d = _scratch_dir(f"stream_{name}_")
     if src.is_dir():
         parts = sorted(src.glob("*.parquet"))
         for i, part in enumerate(parts):
@@ -93,7 +111,7 @@ def _stage_ordered(df: DataFrame, key_sql: str, n_batches: int) -> str:
         raise FileNotFoundError("ordered staging of an empty frame produced no files")
     bounds = [None, *[stats[f"c{i}"] for i in range(len(qs))], None]
     scratch = Path(tempfile.mkdtemp(prefix="stage_scratch_"))
-    stage = Path(tempfile.mkdtemp(prefix="stage_ordered_"))
+    stage = _scratch_dir("stage_ordered_")
     try:
         for i in range(n_batches):
             part = df
@@ -163,17 +181,22 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _await_drain(writer, what: str) -> None:
     """Run ``writer`` as an AvailableNow query over a fresh checkpoint
-    dir and block until the source is drained."""
-    q = (
-        writer.option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        # awaitTermination returns False on timeout without raising —
-        # reading the sink now would silently return PARTIAL results
-        q.stop()
-        raise TimeoutError(f"streaming drain into {what} exceeded 300s")
+    dir and block until the source is drained; then remove the
+    checkpoint and every dir staged for it (:func:`_scratch_dir`)."""
+    try:
+        q = (
+            writer.option("checkpointLocation", str(_scratch_dir("ckpt_")))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            # awaitTermination returns False on timeout without raising —
+            # reading the sink now would silently return PARTIAL results
+            q.stop()
+            raise TimeoutError(f"streaming drain into {what} exceeded 300s")
+    finally:
+        for d in _PENDING.__dict__.pop("dirs", []):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
@@ -562,13 +585,14 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning + per-cell kernels); probe cost per batch ∝ the batch's
     cell footprint."""
     from ..sources.io import TableIO
+    from .corpus_build import retire_at_exit
     from .similarity import SEMDEDUP_THETA, _emb, _even_trained_cells, cell_probe_new_vs_prior
 
     odd = F.col("vec_id") % 2 == 1
     v = _emb(spark, sf_dir).select("vec_id", "embedding").join(
         _even_trained_cells(spark, sf_dir), "vec_id"
     )
-    io = TableIO(spark, tempfile.mkdtemp(prefix="stream_semdedup_"))
+    io = TableIO(spark, retire_at_exit(tempfile.mkdtemp(prefix="stream_semdedup_")))
     io.overwrite(v.filter(~odd), "probe_store")
 
     def probe_batch(b: DataFrame, batch_id: int) -> None:
@@ -612,9 +636,10 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stored_ingest_ladder,
         commit_ingest_batch,
         publish_corpus_index_tables,
+        retire_at_exit,
     )
 
-    io = TableIO(spark, tempfile.mkdtemp(prefix="stream_corpus_"))
+    io = TableIO(spark, retire_at_exit(tempfile.mkdtemp(prefix="stream_corpus_")))
     publish_corpus_index_tables(spark, sf_dir, io)
     odd = F.col("doc_id") % 2 == 1
     emb_b = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 1)

@@ -57,8 +57,6 @@ def test_time_ordered_staging_delivers_two_ordered_batches(spark):
     foreachBatch and pins (a) exactly n_batches batches, (b) every
     ts in batch k strictly before every ts in batch k+1, (c) no
     rows lost."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     ev = streaming._events_stream_time_ordered(spark, SF_SMOKE, n_batches=2)
@@ -72,13 +70,7 @@ def test_time_ordered_staging_delivers_two_ordered_batches(spark):
         ).collect()[0]
         seen.append((bid, r["n"], r["lo"], r["hi"]))
 
-    q = (
-        ev.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ordered_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    streaming._await_drain(ev.writeStream.foreachBatch(fb), "time-ordered staging")
     assert len(seen) == 2, seen
     (b0, n0, lo0, hi0), (b1, n1, lo1, hi1) = sorted(seen)
     assert (b0, b1) == (0, 1)
@@ -110,3 +102,23 @@ def test_stage_ordered_writes_contiguous_ordered_files(spark, tmp_path, monkeypa
 
     with pytest.raises(FileNotFoundError):
         streaming._stage_ordered(df.filter("k < 0"), "k", 2)
+
+
+def test_streaming_queries_leave_only_their_stores(spark, tmp_path, monkeypatch):
+    """A drain removes the dirs it staged and its checkpoint once it
+    returns; an ingest twin's store backs its lazy result, so it stays
+    until the exit sweep removes it."""
+    import tempfile
+
+    from fin_trade_craft_spark.queries import corpus_build
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(corpus_build, "_RETIRED_STORES", [])  # sweep only this test's
+    assert streaming.streaming_hourly_rollup(spark, SF_SMOKE).collect()
+    assert list(tmp_path.iterdir()) == []
+    assert streaming.streaming_semdedup_ingest(spark, SF_SMOKE).collect()
+    left = list(tmp_path.iterdir())
+    assert [p.name[: len("stream_semdedup_")] for p in left] == ["stream_semdedup_"]
+    assert corpus_build._RETIRED_STORES == [str(left[0])]
+    corpus_build._sweep_retired_stores()
+    assert list(tmp_path.iterdir()) == []
