@@ -28,10 +28,8 @@ def main() -> None:
 
     import bench
     from fin_trade_craft_spark.queries import all_queries
-    from fin_trade_craft_spark.session import get_spark
 
-    spark = get_spark("capture-plans", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.open_session("capture-plans")
     queries = all_queries()
     if not names:
         names = bench.bench_query_names()

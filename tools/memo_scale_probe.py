@@ -1,17 +1,16 @@
-"""Memo-LRU storage-bound measurement (r11 verdict, Next round #5).
+"""Memo storage-bound measurement.
 
-One long-lived session touches the corpus family at THREE dataset
-scales in sequence (sf0.1 → sf1 → sf5 of the local replicas). The
-session memos (enriched docs, LSH state, semantic state, k-means
-codebooks, ladder survivors) are grouped per dataset and LRU-evicted
-beyond capacity 2 (`operators/memo.py`), so executor storage after
-the third dataset must be ≈ the TWO most recent datasets' footprint
-— not the monotone sum an unbounded memo would accumulate.
+One long-lived session runs the corpus family at several dataset
+scales in sequence (default sf0.1, then the local sf1 and sf5
+replicas). The session memos (enriched docs, LSH state, semantic
+state, k-means codebooks, ladder survivors) are grouped per dataset
+and LRU-evicted beyond capacity 2 (`operators/memo.py`), so executor
+storage after the third dataset must be about the two most recent
+datasets' footprint, not the sum an unbounded memo would hold.
 
-Prints a markdown table for SCALING.md: per dataset, the cached
-executor storage (memory + disk bytes of every persisted RDD) sampled
-AFTER that dataset's queries run, the per-memo dataset-group lists,
-and the counterfactual unbounded sum.
+Prints a markdown table for SCALING.md: per dataset, the memo
+residency (cached RDDs and their memory plus disk storage) after that
+dataset's queries ran, and the per-memo dataset-group lists.
 
 Usage: python tools/memo_scale_probe.py [sf_dir ...]
        (defaults: /root/testdata/sf0.1 .testdata/sf1 .testdata/sf5)
@@ -22,18 +21,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import memo_residency, open_session, run_attempts  # noqa: E402
 
 QUERIES = ["minhash_near_dupes", "semdedup", "corpus_build_ingest"]
-
-
-def storage_bytes(spark) -> tuple[int, int, int]:
-    """(n_cached_rdds, mem_bytes, disk_bytes) of everything currently
-    persisted in the session (DataFrame caches + localCheckpoints)."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    mem = sum(i.memSize() for i in infos)
-    disk = sum(i.diskSize() for i in infos)
-    return len(infos), mem, disk
 
 
 def memo_groups() -> dict[str, list[str]]:
@@ -49,40 +42,29 @@ def memo_groups() -> dict[str, list[str]]:
 def main() -> None:
     dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".testdata/sf1"),
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".testdata/sf5"),
+        os.path.join(ROOT, ".testdata/sf1"),
+        os.path.join(ROOT, ".testdata/sf5"),
     ]
-    from fin_trade_craft_spark.queries import all_queries
-    from fin_trade_craft_spark.session import get_spark
-
-    spark = get_spark("memo-scale-probe", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
+    spark = open_session("memo-scale-probe")
 
     rows = []
     for d in dirs:
         for q in QUERIES:
-            qs[q](spark, d).write.format("noop").mode("overwrite").save()
-        n, mem, disk = storage_bytes(spark)
-        rows.append((os.path.basename(d.rstrip("/")), n, mem, disk, memo_groups()))
+            run_attempts(spark, q, d, 1)
+        rows.append((os.path.basename(d.rstrip("/")), memo_residency(spark), memo_groups()))
 
-    print("| after dataset | cached RDDs | storage mem | storage disk | live memo dataset-groups |")
-    print("|---|---|---|---|---|")
-    for name, n, mem, disk, groups in rows:
+    print("| after dataset | cached RDDs | storage | live memo dataset-groups |")
+    print("|---|---|---|---|")
+    for name, res, groups in rows:
         gs = "; ".join(f"{k}: {v}" for k, v in sorted(groups.items()))
-        print(f"| {name} | {n} | {mem/1e6:.1f} MB | {disk/1e6:.1f} MB | {gs} |")
+        print(f"| {name} | {res['cached_rdds']} | {res['storage_mb']:.1f} MB | {gs} |")
 
-    # counterfactual: what an UNBOUNDED memo would hold after the
-    # third dataset = sum of each dataset's own steady-state footprint
-    # (approximated by its sampled value when it was most recent —
-    # the first row is exactly dataset-1-alone; later rows mix two).
     if len(rows) >= 3:
-        last = rows[-1]
+        first, last = rows[0], rows[-1]
         print(
-            f"\nbound check: after {rows[-1][0]} the session holds {last[2]/1e6:.1f} MB"
+            f"\nbound check: after {last[0]} the session holds {last[1]['storage_mb']:.1f} MB"
             f" (capacity-2 window = the two most recent datasets);"
-            f" {rows[0][0]}-era groups evicted: "
-            f"{rows[0][0] not in str(last[4])}"
+            f" {first[0]}-era groups evicted: {first[0] not in str(last[2])}"
         )
 
 
