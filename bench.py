@@ -1,13 +1,13 @@
 """Benchmark harness, and the query instrument every tool runs on.
 
 ``python bench.py`` runs the bench queries at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and
-prints ONE compact JSON line:
+(default: the sf0.1 test data, ``sources.catalog.DEFAULT_SF_DIR``) on
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE compact JSON line:
     {"metric": "headline_queries_total_wall", "value": <total sec>,
      "unit": "sec", "sf": <sf>, "n_queries": <n>, "cpus": <cores>,
      "steal_pct": <%>, "queries": {name: sec, ...},
      "queries_omitted": <n>}
-The driver tail-captures only the last 2,000 chars of stdout, and the
+Its consumer captures only the last 2,000 chars of stdout, and the
 88 query names alone weigh 1,999 bytes as JSON keys, so no complete
 per-query map fits. The ``queries`` map carries the fixed ``HEADLINE``
 names (the multi-second queries and one or more per family), sized so
@@ -21,7 +21,7 @@ The shared pieces, used by ``tools/qbench.py`` and
 ``tools/memo_scale_probe.py`` too:
 
 - ``open_session``: ``get_spark`` with the console progress bar off
-  (its stage spam would evict the headline from the driver's window)
+  (its stage spam would evict the headline from the captured window)
   and log level ``ERROR``.
 - ``warm_up``: JVM, parquet footers, the Python/Arrow worker pool and
   one discarded end-to-end query, so the first timed query measures
@@ -47,8 +47,8 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 from instrument import Tracer, cpu_times, memo_residency, steal_pct  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SMOKE_DIR = "/root/testdata/sf0.001"
+from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
+from fin_trade_craft_spark.sources.catalog import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
 # The headline map's fixed membership, in bench order. With every value
 # at 999.99 the line is 1,865 bytes (tests/test_bench_contract.py).
@@ -211,7 +211,8 @@ def warm_up(spark, sf_dir: str) -> None:
     spark.read.parquet(f"{sf_dir.rstrip('/')}/region.parquet").count()
     warm = spark.createDataFrame([(1, 1.0)], "k int, v double")
     warm.groupBy("k").applyInPandas(lambda p: p, "k int, v double").count()
-    run_attempts(spark, "pricing_summary", SMOKE_DIR if os.path.isdir(SMOKE_DIR) else sf_dir, 1)
+    smoke = SMOKE_SF_DIR if os.path.isdir(SMOKE_SF_DIR) else sf_dir
+    run_attempts(spark, "pricing_summary", smoke, 1)
 
 
 def run_attempts(spark, name: str, sf_dir: str, n: int = 2, tracer=None) -> list[dict]:
@@ -281,7 +282,7 @@ def main() -> None:
 
 def headline_line(total: float, sf: float, timings: dict[str, float],
                   attempts: dict[str, list[float]], cpus: int, steal: float) -> str:
-    """The ONE stdout line the driver tail-captures: scalars plus the
+    """The ONE stdout line the consumer tail-captures: scalars plus the
     ``HEADLINE`` entries of ``timings``. The complete per-query maps go
     to the ``BENCH_ATTEMPTS.json`` sidecar; a read-only checkout only
     loses the sidecar."""

@@ -1,11 +1,11 @@
-"""The bench stdout contract the grading driver depends on, and the
-attempt loop every bench tool shares.
+"""The bench stdout contract its consumer depends on, and the attempt
+loop every bench tool shares.
 
-The driver captures only the LAST 2,000 characters of bench.py's
+The consumer captures only the LAST 2,000 characters of bench.py's
 stdout and ``json.loads`` the final line. A line carrying the
 COMPLETE per-query map outgrows that window (2,705 bytes at 88
 queries; the names alone are 1,999 bytes of JSON keys), and a
-scalar-only line starves the driver's per-query comparator. So the
+scalar-only line starves a per-query comparator. So the
 line carries the fixed ``bench.HEADLINE`` subset of the map plus the
 ``cpus`` and ``steal_pct`` scalars within a 1,900-byte budget; the
 complete maps stay in the ``BENCH_ATTEMPTS.json`` sidecar. These
@@ -42,7 +42,7 @@ def test_headline_line_fits_driver_tail_capture(tmp_path, monkeypatch):
     _, timings, attempts = _fake_run(names, 999.99)
     line = bench.headline_line(99999.999, 0.001, timings, attempts, 128, 100.0)
     assert "\n" not in line
-    # The driver tail window is 2,000 chars; the line must fit with
+    # The tail window is 2,000 chars; the line must fit with
     # headroom for the trailing newline / stray stderr.
     assert len(line.encode("utf-8")) <= 1900
 
