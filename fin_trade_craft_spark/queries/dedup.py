@@ -778,13 +778,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize: the signature build feeds BOTH sides of the band
     # self-join — without this the md5 hashing runs twice
     sigs = D.minhash_signatures(sets, num_perm=8).persist()
-    bands = F.array(
-        *[
-            F.concat_ws("|", F.lit(str(b)), F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-            for b in range(4)
-        ]
-    )
-    banded = sigs.select("doc_id", F.explode(bands).alias("band"))
+    banded = D._banded(sigs, "doc_id", 8, 2)
     new_side = banded.filter(F.col("doc_id") % 2 == 1).select(
         F.col("doc_id").alias("d2"), "band"
     )

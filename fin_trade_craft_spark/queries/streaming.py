@@ -31,8 +31,10 @@ Scale notes: these are the same jobs a cluster would run against an
 object-store landing zone; AvailableNow gives incremental
 exactly-once file progress (the Spark-native form of the reference's
 staleness polling), watermarks bound aggregation/join/dedup state,
-and the memory sink is test-only — production sinks are the
-parquet/foreachBatch upsert sinks in streaming/stream_agg.py.
+and the memory sink stands in for a live stream's sink (the
+foreachBatch upsert of streaming/stream_agg.upsert_stream, or the
+ingest twins' stores): every query here drains through the same
+runner, ``stream_agg.await_available_now``.
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType as T_IntegerType
 from pyspark.sql.types import LongType as T_LongType
 
-from ..streaming.stream_agg import read_events_stream
+from ..streaming import stream_agg as SA
 
 # temp dirs the calling thread's next drain reads: staged sources and
 # the checkpoint. Per thread, so queries drained concurrently never
@@ -176,24 +178,15 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{sf_dir.rstrip('/')}/events.parquet"
     schema = spark.read.parquet(src).schema
     staged, n_files = _stage_dir(sf_dir, "events")
-    return read_events_stream(spark, staged, schema, max_files_per_trigger=n_files)
+    return SA.read_events_stream(spark, staged, schema, max_files_per_trigger=n_files)
 
 
 def _await_drain(writer, what: str) -> None:
-    """Run ``writer`` as an AvailableNow query over a fresh checkpoint
-    dir and block until the source is drained; then remove the
-    checkpoint and every dir staged for it (:func:`_scratch_dir`)."""
+    """Drain ``writer`` through ``stream_agg.await_available_now`` over
+    a fresh checkpoint dir; then remove the checkpoint and every dir
+    staged for it (:func:`_scratch_dir`)."""
     try:
-        q = (
-            writer.option("checkpointLocation", str(_scratch_dir("ckpt_")))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # awaitTermination returns False on timeout without raising —
-            # reading the sink now would silently return PARTIAL results
-            q.stop()
-            raise TimeoutError(f"streaming drain into {what} exceeded 300s")
+        SA.await_available_now(writer, str(_scratch_dir("ckpt_")), what)
     finally:
         for d in _PENDING.__dict__.pop("dirs", []):
             shutil.rmtree(d, ignore_errors=True)
@@ -215,16 +208,7 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is plain batch GROUP BY date_trunc('hour'). Streaming twin
     of queries/windows.hourly_event_rollup (reference analog:
     transform_trading_signals.py incremental daily rollups)."""
-    ev = _events_stream(spark, sf_dir)
-    rolled = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(F.col("win.start").alias("hour"), "event_type", "n", "total_value")
-    )
+    rolled = SA.hourly_rollup_stream(_events_stream(spark, sf_dir))
     return _drain(rolled, "complete").orderBy("hour", "event_type")
 
 
@@ -244,27 +228,10 @@ def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     — dynamic merging session state per user — verified against the
     INDEPENDENT batch formulation (lag-based island sessionizer) as
     SQL: session_start = first event, session_end = last event + gap.
-    The two agree whenever no inter-event gap is exactly the 30-min
-    boundary (session_window's end is exclusive; the lag sessionizer
-    keeps `diff == gap` together) — true for this data's microsecond
-    timestamps, and the kind of boundary contract the docstring of
-    streaming/stream_agg.session_stats_stream spells out."""
-    ev = _events_stream(spark, sf_dir)
-    sess = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sess"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    The two agree whenever no inter-event gap is exactly the gap
+    (streaming/stream_agg.session_stats_stream) — true for this data's
+    microsecond timestamps."""
+    sess = SA.session_stats_stream(_events_stream(spark, sf_dir))
     return _drain(sess, "complete").orderBy("user_id", "session_start")
 
 
@@ -299,21 +266,15 @@ def streaming_dedup_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     per hash is a first-arrival race, so the driver-compared output
     is the surviving HASH SET (deterministic ≡ batch DISTINCT md5),
     not the arbitrary winner rows."""
-    from ..functions.text import content_hash
-
     docs_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet").schema
     staged, n_files = _stage_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(docs_schema)
         .option("maxFilesPerTrigger", n_files)
         .parquet(staged)
-        .withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-        .withColumn("content_md5", content_hash(F.col("text")))
+        .withColumn(SA.DEDUP_TS_COL, F.lit("2024-01-01 00:00:00").cast("timestamp"))
     )
-    deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        ["content_md5"]
-    )
-    out = _drain(deduped.select("content_md5"), "append")
+    out = _drain(SA.dedup_stream(stream).select("content_md5"), "append")
     return out.orderBy("content_md5")
 
 
@@ -331,22 +292,7 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the buffered state). Drained AvailableNow; oracle is the
     identical interval join in batch SQL — the inner join's result
     set is order-free and exactly reproducible."""
-    ev = _events_stream(spark, sf_dir)
-    v = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("ts").alias("view_ts"), F.col("event_id").alias("view_id")
-    ).withWatermark("view_ts", "2 hours")
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    ).withWatermark("click_ts", "2 hours")
-    joined = v.join(
-        c,
-        (v["user_id"] == c["c_user_id"])
-        & (c["click_ts"] >= v["view_ts"])
-        & (c["click_ts"] <= v["view_ts"] + F.expr("INTERVAL 1 hour")),
-        "inner",
-    ).select("user_id", "view_id", "view_ts", "click_id", "click_ts")
+    joined = SA.click_attribution_stream(_events_stream(spark, sf_dir))
     return _drain(joined, "append").orderBy("user_id", "view_id", "click_id")
 
 
@@ -373,22 +319,7 @@ def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently in SQL: the k-th containing window starts at
     time_bucket(15min, ts) − k·15min, k ∈ 0..3 (both engines align
     the 15-minute grid to the epoch midnight)."""
-    ev = _events_stream(spark, sf_dir)
-    rolled = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    rolled = SA.sliding_rollup_stream(_events_stream(spark, sf_dir))
     return _drain(rolled, "complete").orderBy("win_start", "event_type")
 
 
@@ -482,8 +413,8 @@ def streaming_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     rolled = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+        ev.withWatermark("ts", SA.WATERMARK)
+        .groupBy(F.window("ts", SA.WINDOW).alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("win.start").alias("hour"), "event_type", "c")
     )

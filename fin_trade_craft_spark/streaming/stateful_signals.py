@@ -21,7 +21,6 @@ from typing import Any, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -93,35 +92,3 @@ def zone_signals_stateful(bars: DataFrame) -> DataFrame:
         fn, OUTPUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
     )
 
-
-class ZoneSignalProcessor(StatefulProcessor):
-    """Spark-4-native form of the zone state machine:
-    ``transformWithState`` (the successor API to
-    ``applyInPandasWithState``) with an explicit named ValueState —
-    the shape that also unlocks TTL, timers, and state-schema
-    evolution on a production stream. Same fold, same state tuple,
-    same output schema as ``zone_signals_stateful``; the processor
-    is differentially tested against the golden series by driving
-    its StatefulProcessor contract directly with an in-memory
-    ValueState (tests/test_streaming_stateful.py). No stream is
-    wired to it: ``transformWithStateInPandas`` needs
-    ``google.protobuf`` in the Python worker, so
-    ``zone_signals_stateful`` is the production path."""
-
-    def init(self, handle) -> None:
-        self.state = handle.getValueState("zone", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self.state.exists():
-            in_low, in_high, prev_rsi = self.state.get()
-        else:
-            in_low, in_high, prev_rsi = False, False, None
-        batch = pd.concat(list(rows), ignore_index=True).sort_values("bar")
-        out, in_low, in_high, prev_rsi = _fold(batch, in_low, in_high, prev_rsi)
-        self.state.update(
-            (bool(in_low), bool(in_high), None if prev_rsi is None else float(prev_rsi))
-        )
-        yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
-
-    def close(self) -> None:
-        pass

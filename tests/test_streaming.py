@@ -10,11 +10,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from fin_trade_craft_spark.queries.streaming import _drain  # noqa: E402
 from fin_trade_craft_spark.sources.catalog import load_table  # noqa: E402
 from fin_trade_craft_spark.streaming.stream_agg import (  # noqa: E402
     hourly_rollup_stream,
     read_events_stream,
-    run_available_now,
 )
 
 from conftest import SF_SMOKE  # noqa: E402
@@ -29,8 +29,7 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     src_dir.mkdir()
     (src_dir / "events.parquet").symlink_to(f"{SF_SMOKE}/events.parquet")
     stream = read_events_stream(spark, str(src_dir), schema)
-    rolled = hourly_rollup_stream(stream, watermark="2 hours")
-    rows = run_available_now(rolled, str(tmp_path / "ckpt"))
+    rows = _drain(hourly_rollup_stream(stream), "complete").collect()
     got = {(r.hour, r.event_type): (r.n, r.total_value) for r in rows}
 
     ev = load_table(spark, SF_SMOKE, "events")
@@ -56,9 +55,7 @@ def test_sliding_stream_matches_batch_window_expr(spark, tmp_path):
     src_dir.mkdir()
     (src_dir / "events.parquet").symlink_to(f"{SF_SMOKE}/events.parquet")
     stream = read_events_stream(spark, str(src_dir), schema)
-    rows = run_available_now(
-        sliding_rollup_stream(stream), str(tmp_path / "ckpt"), out_table="sliding"
-    )
+    rows = _drain(sliding_rollup_stream(stream), "complete").collect()
     got = {(r.win_start, r.win_end, r.event_type): (r.n, r.total_value) for r in rows}
 
     ev = load_table(spark, SF_SMOKE, "events")
@@ -97,9 +94,7 @@ def test_session_stream_matches_batch_lag_sessionizer(spark, tmp_path):
     src_dir.mkdir()
     (src_dir / "events.parquet").symlink_to(f"{SF_SMOKE}/events.parquet")
     stream = read_events_stream(spark, str(src_dir), schema)
-    rows = run_available_now(
-        session_stats_stream(stream), str(tmp_path / "ckpt"), out_table="sessions"
-    )
+    rows = _drain(session_stats_stream(stream), "complete").collect()
     # stream session end = last event + gap; batch duration = max-min
     def _us(td):  # exact integer microseconds (total_seconds() is float)
         return (td.days * 86_400 + td.seconds) * 1_000_000 + td.microseconds
@@ -138,9 +133,7 @@ def test_stream_static_dim_join(spark, tmp_path):
     joined = stream.join(dim, "event_type").withColumn(
         "weighted", F.col("value") * F.col("weight")
     )
-    rows = run_available_now(
-        joined.groupBy("event_type").count(), str(tmp_path / "ck"), out_table="ss_join"
-    )
+    rows = _drain(joined.groupBy("event_type").count(), "complete").collect()
     got = {r.event_type: r["count"] for r in rows}
     want = {
         r.event_type: r["count"]
@@ -208,10 +201,7 @@ def test_stream_dedup_state_spans_batches(spark, tmp_path):
     dedup answer."""
     from datetime import datetime
 
-    from fin_trade_craft_spark.streaming.stream_agg import (
-        dedup_stream,
-        run_available_now_append,
-    )
+    from fin_trade_craft_spark.streaming.stream_agg import dedup_stream
 
     t = datetime(2024, 5, 1, 10, 0, 0)
     schema = "doc_id long, text string, ts timestamp"
@@ -240,9 +230,7 @@ def test_stream_dedup_state_spans_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)  # force one file per micro-batch
         .parquet(str(src))
     )
-    rows = run_available_now_append(
-        dedup_stream(stream, watermark="1 hour"), str(tmp_path / "ckpt"), "deduped"
-    )
+    rows = _drain(dedup_stream(stream), "append").collect()
 
     # 3 distinct contents -> 3 emitted rows, one per hash
     hashes = [r.content_md5 for r in rows]
@@ -265,10 +253,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Stream-stream click-attribution join (watermarked both sides,
     time-range predicate) must produce exactly the batch join's
     matches on the same data."""
-    from fin_trade_craft_spark.streaming.stream_agg import (
-        click_attribution_stream,
-        run_available_now_append,
-    )
+    from fin_trade_craft_spark.streaming.stream_agg import click_attribution_stream
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{SF_SMOKE}/events.parquet").schema
@@ -283,10 +268,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
         )
 
     stream = read_events_stream(spark, str(src_dir), schema)
-    sv, sc = views_clicks(stream)
-    rows = run_available_now_append(
-        click_attribution_stream(sv, sc), str(tmp_path / "ckpt"), "attributed"
-    )
+    rows = _drain(click_attribution_stream(stream), "append").collect()
     got = sorted((r.user_id, r.view_id, r.click_id) for r in rows)
     assert len(got) > 0
 
@@ -340,8 +322,7 @@ def test_stream_rollup_multi_microbatch_matches_batch(spark, tmp_path):
     ev_raw.repartition(3, "event_id").write.parquet(str(src_dir))
     schema = spark.read.parquet(str(src_dir)).schema
     stream = read_events_stream(spark, str(src_dir), schema, max_files_per_trigger=1)
-    rolled = hourly_rollup_stream(stream, watermark="2 hours")
-    rows = run_available_now(rolled, str(tmp_path / "ckpt"))
+    rows = _drain(hourly_rollup_stream(stream), "complete").collect()
     got = {(r.hour, r.event_type): (r.n, r.total_value) for r in rows}
 
     ev = load_table(spark, SF_SMOKE, "events")
@@ -355,3 +336,18 @@ def test_stream_rollup_multi_microbatch_matches_batch(spark, tmp_path):
     )
     want = {(r.hour, r.event_type): (r.n, r.total_value) for r in batch}
     assert got == want
+
+
+def test_drain_timeout_stops_query_and_raises(spark, monkeypatch):
+    """A drain still running at the runner's timeout is stopped and
+    raises instead of handing back a partially filled sink."""
+    import pytest
+
+    from fin_trade_craft_spark.queries.streaming import _events_stream
+    from fin_trade_craft_spark.streaming import stream_agg
+
+    stream = _events_stream(spark, SF_SMOKE)
+    monkeypatch.setattr(stream_agg, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="exceeded 0.001s"):
+        _drain(hourly_rollup_stream(stream), "complete")
+    assert spark.streams.active == []

@@ -122,3 +122,36 @@ def test_streaming_queries_leave_only_their_stores(spark, tmp_path, monkeypatch)
     assert corpus_build._RETIRED_STORES == [str(left[0])]
     corpus_build._sweep_retired_stores()
     assert list(tmp_path.iterdir()) == []
+
+
+def test_only_the_runner_starts_or_awaits_a_stream():
+    """Every AvailableNow drain in the package goes through
+    ``stream_agg.await_available_now``: the trigger and the wait
+    appear nowhere else, so no drain can skip its timeout check."""
+    import ast
+    import re
+
+    pkg = Path(__file__).resolve().parent.parent / "fin_trade_craft_spark"
+    runner_file = pkg / "streaming" / "stream_agg.py"
+    runner = next(
+        n
+        for n in ast.parse(runner_file.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "await_available_now"
+    )
+    # the bracketed letters keep this file out of its own search
+    pat = re.compile(r"available[N]ow|await[T]ermination")
+    hits = [
+        (path, i)
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    outside = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p, i in hits
+        if p != runner_file or not runner.lineno <= i <= runner.end_lineno
+    ]
+    assert hits and not outside, outside
+    # the runner itself holds both the trigger and the wait
+    found = {m for p, i in hits for m in pat.findall(p.read_text().splitlines()[i - 1])}
+    assert len(found) == 2, found

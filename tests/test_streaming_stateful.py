@@ -7,7 +7,6 @@ dwell, so losing state would suppress the SELL)."""
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 import pandas as pd
@@ -15,22 +14,20 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from fin_trade_craft_spark.streaming.stateful_signals import zone_signals_stateful  # noqa: E402
+from fin_trade_craft_spark.streaming.stream_agg import await_available_now  # noqa: E402
 
 GOLDEN = [35, 31, 30, 28, 22, 28, 29, 31, 40, 68, 72, 73, 74, 70, 65]
 
 
 def _run_batch(spark, src_dir, ckpt, out_dir):
     stream = spark.readStream.schema("symbol_id long, bar long, rsi double").parquet(str(src_dir))
-    q = (
+    writer = (
         zone_signals_stateful(stream)
         .writeStream.format("parquet")
         .option("path", str(out_dir))
         .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    await_available_now(writer, str(ckpt), "zone signals")
     return spark.read.parquet(str(out_dir)).collect()
 
 
@@ -65,72 +62,6 @@ def test_state_survives_microbatch_boundary(spark, tmp_path):
         (14, False, True)
     ]
     assert abs(out2[0].signal_strength - 35.0) < 1e-9
-
-
-class _FakeValueState:
-    """In-memory stand-in for the transformWithState ValueState
-    handle (exists/get/update contract)."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self) -> bool:
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v) -> None:
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_transformwithstate_processor_matches_golden():
-    """The Spark-4 ZoneSignalProcessor twin, driven directly through
-    its StatefulProcessor contract (init → handleInputRows per
-    micro-batch) with an in-memory ValueState: the same two-batch
-    golden split must reproduce the applyInPandasWithState result
-    (BUY@7 in batch 1, SELL@14 in batch 2, state carried between).
-
-    The full transformWithStateInPandas runtime wire-up needs a
-    working ``google.protobuf`` in the Python worker, which this
-    container does not ship (and installs are off-limits) — but the
-    twin's only code beyond that wire-up is this processor, so
-    driving it through the same contract the runtime uses keeps the
-    twin fully covered without an environment-conditional skip."""
-    from fin_trade_craft_spark.streaming.stateful_signals import ZoneSignalProcessor
-
-    proc = ZoneSignalProcessor()
-    proc.init(_FakeHandle())
-
-    def batch(bars):
-        pdf = pd.DataFrame(
-            [(1, i, float(v)) for i, v in bars], columns=["symbol_id", "bar", "rsi"]
-        )
-        outs = list(proc.handleInputRows((1,), iter([pdf]), None))
-        return pd.concat(outs, ignore_index=True)
-
-    out1 = batch(list(enumerate(GOLDEN[:10])))
-    assert [tuple(r) for r in out1[["bar", "buy_signal", "sell_signal"]].itertuples(index=False)] == [
-        (7, True, False)
-    ]
-    assert abs(out1["signal_strength"].iloc[0] - 31.0) < 1e-9
-
-    # state must have carried: batch 2 starts inside the overbought
-    # dwell; losing prev_rsi/in_high would suppress the SELL
-    out2 = batch(list(enumerate(GOLDEN))[10:])
-    assert [tuple(r) for r in out2[["bar", "buy_signal", "sell_signal"]].itertuples(index=False)] == [
-        (14, False, True)
-    ]
-    assert abs(out2["signal_strength"].iloc[0] - 35.0) < 1e-9
-    proc.close()
 
 
 def test_vpin_fold_cross_batch_carriage_matches_one_shot():

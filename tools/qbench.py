@@ -16,7 +16,9 @@ input, shuffle read and write, spill and peak execution memory
 (``build.*``, ``exec.*``); ``memo.storage_mb`` and ``memo.cached_rdds``
 after the attempt; the host steal over the attempt. After each
 query's last attempt, one line per Spark job it ran (layer, wall,
-tasks) with one line per stage under it. The last line sums up:
+tasks, the SQL execution it ran under and that execution's
+description, then the job's own name) with one line per stage under
+it. The last line sums up:
 ``{"sf_dir", "cpus", "queries": {name: min wall}, "attempts":
 {name: [wall, ...]}}``.
 
@@ -34,10 +36,27 @@ import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from bench import SF_DIR, open_session, run_attempts, warm_up  # noqa: E402
 from instrument import MB, Tracer, _ts  # noqa: E402
+
+
+def job_executions(tracer) -> dict[int, tuple[int, str]]:
+    """Job id -> (SQL execution id, description) from the status REST
+    API. Spark names the jobs AQE launches to materialize query stages
+    after a ``CompletableFuture`` frame, whatever call built the plan;
+    the execution they run under is described by the action that
+    started it."""
+    # the endpoint pages 20 executions by default
+    execs = tracer._get("/sql?details=false&length=1000000")
+    return {
+        j: (e["id"], e.get("description", ""))
+        for e in execs
+        for key in ("successJobIds", "failedJobIds", "runningJobIds")
+        for j in e.get(key, [])
+    }
 
 
 def job_lines(tracer, job_range) -> list[str]:
@@ -46,6 +65,7 @@ def job_lines(tracer, job_range) -> list[str]:
     only stages submitted within the job are printed."""
     j0, j1 = job_range
     jobs = [j for j in tracer._get("/jobs") if j0 <= j["jobId"] < j1]
+    execs = job_executions(tracer)
     stages: dict[int, dict] = {}
     for s in tracer._get("/stages"):
         if s.get("status") == "COMPLETE":
@@ -57,9 +77,12 @@ def job_lines(tracer, job_range) -> list[str]:
         t0 = _ts(j["submissionTime"])
         wall = _ts(j["completionTime"]) - t0 if j.get("completionTime") else float("nan")
         layer = "build" if j["jobId"] in build else "exec"
+        sql_id, desc = execs.get(j["jobId"], ("-", ""))
+        # call sites are absolute paths; the checkout prefix says nothing
+        desc, name = (t.replace(f"{ROOT}/", "") for t in (desc, j.get("name", "")))
         lines.append(
             f"job {j['jobId']:>5} {layer:<5} {wall:6.2f}s tasks={j.get('numCompletedTasks', 0):>4}"
-            f"  {j.get('name', '')[:70]}"
+            f"  sql={sql_id} {desc[:60]!r}  {name[:70]}"
         )
         for sid in sorted(j.get("stageIds", [])):
             s = stages.get(sid)
