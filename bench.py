@@ -51,7 +51,7 @@ from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
 from fin_trade_craft_spark.sources.catalog import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
 # The headline map's fixed membership, in bench order. With every value
-# at 999.99 the line is 1,865 bytes (tests/test_bench_contract.py).
+# at 999.99 the line is 1,829 bytes (tests/test_bench_contract.py).
 HEADLINE = [
     "pricing_summary", "conditional_pivot_agg", "top_revenue_customers",
     "regional_revenue", "rolling_user_features", "rsi_zone_signals",
@@ -67,13 +67,12 @@ HEADLINE = [
     "bigram_interpolated_scores", "backtest_sma_events", "bm25_retrieval",
     "bpe_merge_rounds", "corpus_build", "hybrid_retrieval_rrf",
     "ivf_pq_search", "mmr_diversified_retrieval", "corpus_build_ingest",
-    "corpus_build_ingest_stored", "duplicate_span_removal",
-    "label_propagation_communities", "robust_outlier_mad",
-    "triple_barrier_labels", "frac_diff_features", "label_uniqueness_weights",
-    "microstructure_liquidity", "meta_labels", "cusum_event_filter",
-    "volatility_estimators", "bet_sizing_expanding", "cusum_sampled_labels",
-    "feature_mi_ranking", "triple_barrier_dynamic", "tick_imbalance_bars",
-    "pairs_spread_zscore",
+    "duplicate_span_removal", "label_propagation_communities",
+    "robust_outlier_mad", "triple_barrier_labels", "frac_diff_features",
+    "label_uniqueness_weights", "microstructure_liquidity", "meta_labels",
+    "cusum_event_filter", "volatility_estimators", "bet_sizing_expanding",
+    "cusum_sampled_labels", "feature_mi_ranking", "triple_barrier_dynamic",
+    "tick_imbalance_bars", "pairs_spread_zscore",
 ]
 
 
@@ -154,7 +153,6 @@ def bench_query_names() -> list[str]:
         "mmr_diversified_retrieval",
         "leakage_safe_split",
         "corpus_build_ingest",
-        "corpus_build_ingest_stored",
         "duplicate_span_removal",
         "label_propagation_communities",
         "asof_nearest_match",
@@ -230,29 +228,40 @@ def run_attempts(spark, name: str, sf_dir: str, n: int = 2, tracer=None) -> list
     are released between attempts by ``del df`` plus ``gc.collect()``:
     pinned results and checkpoint RDDs are freed by Python finalizers,
     so without it earlier attempts' executor storage would inflate
-    later ones (operators/memo.py)."""
+    later ones (operators/memo.py).
+
+    Every job an attempt starts carries the Spark job description
+    ``"<name> #<attempt> build"`` or ``"... run"`` (the noop write),
+    which also describes the SQL executions it runs under; the loop
+    clears the description when it returns."""
     from fin_trade_craft_spark.queries import all_queries
 
     query = all_queries()[name]
     tracer = tracer or Tracer(spark, False)
+    sc = spark.sparkContext
     records = []
-    for _ in range(n):
+    try:
+        for i in range(1, n + 1):
 
-        def attempt():
-            with tracer.building():
-                df = query(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return df
+            def attempt(i=i):
+                sc.setJobDescription(f"{name} #{i} build")
+                with tracer.building():
+                    df = query(spark, sf_dir)
+                sc.setJobDescription(f"{name} #{i} run")
+                df.write.format("noop").mode("overwrite").save()
+                return df
 
-        j0, cpu0 = tracer.next_job_id(), cpu_times()
-        df, rec = tracer.op(attempt)
-        if tracer.enabled:
-            rec.update({f"memo.{k}": v for k, v in memo_residency(spark).items()})
-            rec["steal_pct"] = steal_pct(cpu0, cpu_times())
-            rec["job_range"] = [j0, tracer.next_job_id()]
-        del df
-        gc.collect()
-        records.append(rec)
+            j0, cpu0 = tracer.next_job_id(), cpu_times()
+            df, rec = tracer.op(attempt)
+            if tracer.enabled:
+                rec.update({f"memo.{k}": v for k, v in memo_residency(spark).items()})
+                rec["steal_pct"] = steal_pct(cpu0, cpu_times())
+                rec["job_range"] = [j0, tracer.next_job_id()]
+            del df
+            gc.collect()
+            records.append(rec)
+    finally:
+        sc.setJobDescription(None)
     return records
 
 

@@ -169,10 +169,10 @@ _QV_EXPR = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) 
 # identical dedup clusters on separable data, recall within a pinned
 # bound of the flat tier, and a closure-size assertion).
 #
-#   spark.fin_trade_craft.quantizer   = auto | flat | hierarchical
-#   spark.fin_trade_craft.hierMinRows = corpus-size threshold for auto
+#   spark.fin_trade_craft.quantizer = auto | flat | hierarchical
+#   HIER_MIN_ROWS                   = corpus-size threshold for auto
 #
-# Every DuckDB-oracle'd query replays the FLAT build, so the default
+# Every DuckDB-oracle'd query replays the FLAT build, so the
 # threshold sits above any oracle fixture (the oracle gate runs at
 # sf0.01–sf1, ≤ 20k vectors); "auto" therefore means "flat at
 # verification scale, hierarchical at corpus scale". An oracle sweep
@@ -188,7 +188,6 @@ _QV_EXPR = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) 
 # 5×10⁴, not the r05 guess of 10⁶.
 # ------------------------------------------------------------------
 QUANTIZER_CONF = "spark.fin_trade_craft.quantizer"
-HIER_MIN_ROWS_CONF = "spark.fin_trade_craft.hierMinRows"
 HIER_MIN_ROWS = 50_000
 
 
@@ -198,8 +197,7 @@ def _quantizer_mode(spark: SparkSession, n_rows: int) -> str:
         raise ValueError(f"{QUANTIZER_CONF} must be auto|flat|hierarchical, got {mode!r}")
     if mode != "auto":
         return mode
-    thresh = int(spark.conf.get(HIER_MIN_ROWS_CONF, str(HIER_MIN_ROWS)))
-    return "hierarchical" if n_rows >= thresh else "flat"
+    return "hierarchical" if n_rows >= HIER_MIN_ROWS else "flat"
 
 
 def _hash16(salt: str, cast_str: str) -> str:
@@ -2541,8 +2539,10 @@ def hierarchical_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Session memo of the EVEN-trained cell assignment (the index the
 # "existing corpus" of the incremental family was built with) —
-# shared by incremental_semdedup_ingest and corpus_build_ingest,
-# which otherwise each re-run the full assignment kernel per call.
+# shared by incremental_semdedup_ingest and the corpus index store
+# (its publish, and the stored ingest ladder's batch cells under the
+# hierarchical tier), which otherwise each re-run the full assignment
+# kernel per call.
 _EVEN_CELLS_MEMO = SessionMemo("even_cells")
 
 

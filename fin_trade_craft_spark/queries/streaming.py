@@ -543,16 +543,17 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous corpus CURATION as a real streaming job — the
-    streaming form of ``corpus_build_ingest_stored``: new documents
+    streaming form of ``corpus_build_ingest``: new documents
     (odd ids) ARRIVE as a file-source stream in TWO id-ordered
-    micro-batches. The existing corpus's index tables are published
-    once into a private store (``publish_corpus_index_tables``);
-    each ``foreachBatch`` runs THE ingest ladder
+    micro-batches. The existing corpus's published index store (the
+    one ``corpus_build_ingest`` probes, see ``_index_store``) is
+    copied into a private store, which the commits extend; each
+    ``foreachBatch`` runs THE ingest ladder
     (``_stored_ingest_ladder``) against it, records the batch's drop
     rows, and commits the batch (``commit_ingest_batch``) so the
     next micro-batch probes it through the same tables. After the
     drain the manifest tail (``_ingest_manifest``) weighs and shards
-    the committed kept rows over the published base.
+    the committed kept rows over the copied base.
 
     Because micro-batches are id-ordered, "arrived earlier ⟺
     smaller id", so every probe reproduces the batch query's
@@ -564,14 +565,14 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .corpus_build import (
         _drop_rows,
         _ingest_manifest,
+        _index_store,
         _stored_ingest_ladder,
         commit_ingest_batch,
-        publish_corpus_index_tables,
         retire_at_exit,
     )
 
     io = TableIO(spark, retire_at_exit(tempfile.mkdtemp(prefix="stream_corpus_")))
-    publish_corpus_index_tables(spark, sf_dir, io)
+    shutil.copytree(_index_store(spark, sf_dir).warehouse, io.warehouse, dirs_exist_ok=True)
     odd = F.col("doc_id") % 2 == 1
     emb_b = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 1)
 
@@ -585,7 +586,7 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ordered_stream(docs_b, "doc_id").writeStream.foreachBatch(refresh),
         "streaming_corpus_ingest",
     )
-    # the committed manifest = the published (even) base + every
+    # the committed manifest = the copied (even) base + every
     # batch's kept rows
     kept = io.read("kept_manifest")
     return _ingest_manifest(kept.filter(~odd), kept.filter(odd), io.read("drop_rows"))

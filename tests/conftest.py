@@ -122,6 +122,7 @@ _SLOW_TESTS = {
     ("test_cache_owners", "test_no_orphaned_cache_every_batch_query"),
     ("test_corpus_build_ingest", "test_streaming_ingest_equals_stored_on_planted_fixture"),
     ("test_corpus_build_ingest", "test_ingest_twins_agree_under_hierarchical_tier"),
+    ("test_corpus_build_ingest", "test_prior_ladder_runs_once_per_store"),
 }
 
 

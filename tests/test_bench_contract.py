@@ -128,3 +128,5 @@ def test_attempt_loop_records(spark):
     untraced = bench.run_attempts(spark, "pricing_summary", SF_SMOKE, 1)
     assert len(untraced) == 1
     assert set(untraced[0]) == {"wall_s", "build_s", "exec_s"}
+    # the attempts' job descriptions do not outlive the loop
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

@@ -6,7 +6,14 @@ batch manifest produced incrementally must EQUAL the from-scratch
 corpus's own manifest must be untouched by the append (keep
 decisions and shard ids stable; only the mixture re-balances, by
 design). Also pins the first-wins-within-batch contract and the
-no-embedding / NULL-text pass-throughs."""
+no-embedding / NULL-text pass-throughs.
+
+The query probes the published index store. ``_reference_ingest``
+below replays the same stage contracts from the session memos
+instead (the full-corpus verified pairs and the even-trained cells),
+so it is an independent check of the stored ladder at every
+quantizer tier — under the hierarchical tier the DuckDB oracle
+replays the flat build and cannot be one."""
 
 from __future__ import annotations
 
@@ -18,11 +25,23 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from fin_trade_craft_spark.queries.corpus_build import (
+    CB_QUALITY_MIN,
+    _drop_rows,
+    _enriched,
+    _even_prior_state,
+    _ingest_manifest,
     corpus_build,
     corpus_build_ingest,
-    corpus_build_ingest_stored,
+)
+from fin_trade_craft_spark.queries.dedup import _lsh_state
+from fin_trade_craft_spark.queries.similarity import (
+    SEMDEDUP_THETA,
+    _emb,
+    _even_trained_cells,
+    cell_probe_new_vs_prior,
 )
 
 K_A = (
@@ -60,6 +79,80 @@ K_G = (
     "humidity while volunteers transcribed marginal annotations into "
     "a searchable provenance database spanning four centuries"
 )
+
+
+def _reference_ingest(spark, sf_dir):
+    """The batch manifest ``corpus_build_ingest`` must produce,
+    replayed from the session memos: the even-only prior ladder
+    (``_even_prior_state``), the full-corpus verified LSH pairs and
+    the even-trained cells, probed by the odd batch in one pass."""
+    enriched = _enriched(spark, sf_dir)
+    odd = F.col("doc_id") % 2 == 1
+    quality_ok = F.col("quality").isNull() | (F.col("quality") >= F.lit(CB_QUALITY_MIN))
+
+    prior = _even_prior_state(spark, sf_dir)
+    e_s2, e_s3, e_kept = prior["e_s2"], prior["e_s3"], prior["e_kept"]
+    pairs = _lsh_state(spark, sf_dir)["pairs"]
+    cells = _even_trained_cells(spark, sf_dir)
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+
+    # ---- batch ladder (odds) ----
+    b = enriched.filter(odd)
+    others = enriched.select(F.col("doc_id").alias("o_id"), F.col("h").alias("o_h"))
+    b_exact_drop = (
+        b.select("doc_id", "h")
+        .join(
+            others,
+            (F.col("h") == F.col("o_h"))
+            & ((F.col("o_id") % 2 == 0) | (F.col("o_id") < F.col("doc_id"))),
+            "left_semi",
+        )
+        .select("doc_id")
+        .localCheckpoint(eager=True)
+    )
+    b_s1 = b.select("doc_id").join(b_exact_drop, "doc_id", "left_anti").localCheckpoint(
+        eager=True
+    )
+    # stage 2 probe: both orientations of the memoized verified pairs
+    und = pairs.select("d1", "d2").unionByName(
+        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
+    )
+    x_side = und.join(b_s1.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
+    m_e = x_side.join(e_s2.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
+    m_b = x_side.filter(F.col("d2") < F.col("d1")).join(
+        b_s1.withColumnRenamed("doc_id", "d2"), "d2", "left_semi"
+    )
+    b_near_drop = (
+        m_e.unionByName(m_b)
+        .select(F.col("d1").alias("doc_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    b_s2 = b_s1.join(b_near_drop, "doc_id", "left_anti").localCheckpoint(eager=True)
+    # stage 3 probe: cells restricted to existing stage-3 survivors ∪
+    # batch stage-2 survivors — the shared incremental kernel then
+    # scores each odd member against even members + earlier odds
+    probe_ids = e_s3.unionByName(b_s2).select(F.col("doc_id").alias("vec_id"))
+    v_probe = emb.join(cells, "vec_id").join(probe_ids, "vec_id", "left_semi")
+    b_sem_drop = (
+        cell_probe_new_vs_prior(v_probe, SEMDEDUP_THETA)
+        .filter(F.col("n_dup_matches") > 0)
+        .select(F.col("vec_id").alias("doc_id"))
+        .localCheckpoint(eager=True)
+    )
+    b_s3 = b_s2.join(b_sem_drop, "doc_id", "left_anti")
+    b_alive = enriched.join(b_s3, "doc_id", "left_semi")
+    b_low_drop = (
+        b_alive.filter(~quality_ok).select("doc_id").localCheckpoint(eager=True)
+    )
+    b_kept = b_alive.filter(quality_ok).select("doc_id", "source", "lang", "n_tokens")
+    drops = {
+        "exact_drop": b_exact_drop,
+        "near_drop": b_near_drop,
+        "sem_drop": b_sem_drop,
+        "low_drop": b_low_drop,
+    }
+    return _ingest_manifest(e_kept, b_kept, _drop_rows(enriched, drops))
 
 
 def _write(dirpath, docs, embs):
@@ -185,7 +278,7 @@ def test_stored_index_ingest_byte_equal_manifest(spark, ingest_dirs):
     ladder read from the TableIO-published index tables
     (kept_manifest / hash_index / sig_index / cell_index /
     codebook) — must produce a manifest BYTE-EQUAL to the
-    session-memo twin, every column including the float
+    session-memo reference, every column including the float
     mix_weight (same exact arithmetic on both paths). Also proves
     the write side actually committed the five tables."""
     import os
@@ -193,9 +286,9 @@ def test_stored_index_ingest_byte_equal_manifest(spark, ingest_dirs):
     from fin_trade_craft_spark.queries.corpus_build import _index_store
 
     full, _ = ingest_dirs
-    memo = corpus_build_ingest(spark, full).toPandas()
-    stored = corpus_build_ingest_stored(spark, full).toPandas()
-    pd.testing.assert_frame_equal(memo, stored, check_exact=True)
+    ref = _reference_ingest(spark, full).toPandas()
+    stored = corpus_build_ingest(spark, full).toPandas()
+    pd.testing.assert_frame_equal(ref, stored, check_exact=True)
 
     io = _index_store(spark, full)
     for t in ("kept_manifest", "hash_index", "sig_index", "cell_index", "codebook"):
@@ -211,15 +304,16 @@ def test_stored_index_ingest_matches_on_testdata(spark):
     """Byte-equality on the real sf0.001 fixture corpus too — the
     planted fixture exercises every reason path, this one exercises
     fixture-scale cell layouts and multi-source mixtures."""
-    sf = "/root/testdata/sf0.001"
-    memo = corpus_build_ingest(spark, sf).toPandas()
-    stored = corpus_build_ingest_stored(spark, sf).toPandas()
-    pd.testing.assert_frame_equal(memo, stored, check_exact=True)
+    from conftest import SF_SMOKE as sf
+
+    ref = _reference_ingest(spark, sf).toPandas()
+    stored = corpus_build_ingest(spark, sf).toPandas()
+    pd.testing.assert_frame_equal(ref, stored, check_exact=True)
 
 
-def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
-    """The production refresh LOOP (r10): publish the index tables
-    once, then run TWO id-ordered batches through the stored-index
+def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs, tmp_path):
+    """The production refresh LOOP (r10): copy the published index
+    store, then run TWO id-ordered batches through the stored-index
     ladder, COMMITTING each (appending its partner rows to
     hash/sig/cell stores and its kept rows to the manifest) so batch
     2 probes batch 1 through the same parquet tables it probes the
@@ -228,21 +322,19 @@ def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
     concatenated batch — the same cross-batch equivalence
     streaming_corpus_ingest proves for its micro-batches, here for
     the batch TableIO path."""
-    import tempfile
-
-    from pyspark.sql import functions as F
+    import shutil
 
     from fin_trade_craft_spark.queries.corpus_build import (
+        _index_store,
         _stored_ingest_ladder,
         commit_ingest_batch,
-        publish_corpus_index_tables,
     )
     from fin_trade_craft_spark.sources.catalog import load_table
     from fin_trade_craft_spark.sources.io import TableIO
 
     full, _ = ingest_dirs
-    io = TableIO(spark, tempfile.mkdtemp(prefix="seq_refresh_"))
-    publish_corpus_index_tables(spark, full, io)
+    io = TableIO(spark, str(tmp_path / "store"))
+    shutil.copytree(_index_store(spark, full).warehouse, io.warehouse)
 
     docs = load_table(spark, full, "documents")
     embs = load_table(spark, full, "embeddings")
@@ -273,7 +365,7 @@ def test_sequential_committed_refreshes_match_one_shot(spark, ingest_dirs):
 
     one_shot = {
         r["doc_id"]: r["keep_reason"]
-        for r in corpus_build_ingest_stored(spark, full).collect()
+        for r in corpus_build_ingest(spark, full).collect()
     }
     assert seq == one_shot
     # the committed manifest now holds existing + both batches' kept
@@ -295,13 +387,42 @@ def test_streaming_ingest_equals_stored_on_planted_fixture(spark, ingest_dirs):
     every reason path, split at the median batch id into micro-batches
     101..107 and 109..117, so 111 and 113 lose to 109 first-wins
     inside the second one — its manifest must equal the one-shot
-    stored ingest exactly."""
+    reference exactly."""
     from fin_trade_craft_spark.queries.streaming import streaming_corpus_ingest
 
     full, _ = ingest_dirs
-    stored = corpus_build_ingest_stored(spark, full).toPandas()
+    ref = _reference_ingest(spark, full).toPandas()
     streamed = streaming_corpus_ingest(spark, full).toPandas()
-    pd.testing.assert_frame_equal(streamed, stored, check_exact=True)
+    pd.testing.assert_frame_equal(streamed, ref, check_exact=True)
+
+
+def test_prior_ladder_runs_once_per_store(spark, ingest_dirs, tmp_path, monkeypatch):
+    """The existing corpus's ladder runs when its index store is
+    published, once per (session, dataset, tier): the batch ingest
+    and the streaming ingest of one dataset in one session share
+    that store — the streaming ingest starts from a copy of it."""
+    import shutil
+
+    from fin_trade_craft_spark.queries import corpus_build as CB
+    from fin_trade_craft_spark.queries.streaming import streaming_corpus_ingest
+
+    full, _ = ingest_dirs
+    # a dataset path no earlier test published a store for
+    sf = tmp_path / "cbi_spy"
+    shutil.copytree(full, sf)
+    orig, calls = CB._even_prior_state, []
+
+    def counted(spark_, sf_dir):
+        calls.append(sf_dir)
+        return orig(spark_, sf_dir)
+
+    monkeypatch.setattr(CB, "_even_prior_state", counted)
+    batch = corpus_build_ingest(spark, str(sf)).toPandas()
+    streamed = streaming_corpus_ingest(spark, str(sf)).toPandas()
+    again = corpus_build_ingest(spark, str(sf)).toPandas()
+    assert calls == [str(sf)]
+    pd.testing.assert_frame_equal(streamed, batch, check_exact=True)
+    pd.testing.assert_frame_equal(again, batch, check_exact=True)
 
 
 def test_ingest_twins_agree_under_hierarchical_tier(spark):
@@ -309,8 +430,9 @@ def test_ingest_twins_agree_under_hierarchical_tier(spark):
     hierarchical cells, so the stored ladder must assign batch
     vectors through the same tier (a flat codebook assignment would
     compare flat cids against hierarchical cell ids), and no flat
-    codebook is trained or published for it. All three corpus
-    ingests and both semantic ingests must agree."""
+    codebook is trained or published for it. The batch and streaming
+    corpus ingests must equal the session-memo reference, and both
+    semantic ingests must agree."""
     from conftest import SF_CORRECT as sf
 
     from fin_trade_craft_spark.queries import similarity as SQ
@@ -322,13 +444,13 @@ def test_ingest_twins_agree_under_hierarchical_tier(spark):
 
     spark.conf.set(SQ.QUANTIZER_CONF, "hierarchical")
     try:
-        memo = corpus_build_ingest(spark, sf).toPandas()
-        stored = corpus_build_ingest_stored(spark, sf).toPandas()
+        ref = _reference_ingest(spark, sf).toPandas()
+        stored = corpus_build_ingest(spark, sf).toPandas()
+        streamed = streaming_corpus_ingest(spark, sf).toPandas()
+        pd.testing.assert_frame_equal(stored, ref, check_exact=True)
+        pd.testing.assert_frame_equal(streamed, ref, check_exact=True)
         io = _index_store(spark, sf)
         assert io.exists("cell_index") and not io.exists("codebook")
-        streamed = streaming_corpus_ingest(spark, sf).toPandas()
-        pd.testing.assert_frame_equal(stored, memo, check_exact=True)
-        pd.testing.assert_frame_equal(streamed, memo, check_exact=True)
         batch = SQ.incremental_semdedup_ingest(spark, sf).toPandas()
         streamed_sem = streaming_semdedup_ingest(spark, sf).toPandas()
         pd.testing.assert_frame_equal(streamed_sem, batch, check_exact=True)

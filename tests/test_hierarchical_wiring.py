@@ -12,7 +12,7 @@ via the session conf and pin the swap's contract:
   only distributed training run is the k1 = ceil(sqrt(k)) level-1
   build (the closure-size claim, asserted on the actual train
   calls, not inferred);
-- auto mode switches on the conf'd row threshold.
+- auto mode switches on the ``HIER_MIN_ROWS`` row threshold.
 """
 
 from __future__ import annotations
@@ -37,10 +37,6 @@ def force_mode(spark):
 
     yield _set
     spark.conf.unset(SQ.QUANTIZER_CONF)
-    try:
-        spark.conf.unset(SQ.HIER_MIN_ROWS_CONF)
-    except Exception:
-        pass
 
 
 def _separable_fixture(spark, tmp_path, n_groups=24, per_group=5, dims=16):
@@ -153,11 +149,11 @@ def test_hierarchical_consumers_never_train_flat_codebook(spark, force_mode, mon
     assert C.shape[0] == k1
 
 
-def test_auto_mode_threshold_switches_tier(spark, force_mode):
-    """auto + hierMinRows below the fixture size -> the assignment
+def test_auto_mode_threshold_switches_tier(spark, force_mode, monkeypatch):
+    """auto + HIER_MIN_ROWS below the fixture size -> the assignment
     IS the hierarchical build's; above -> the flat build's."""
     force_mode("auto")
-    spark.conf.set(SQ.HIER_MIN_ROWS_CONF, "100")  # fixture is 500 rows
+    monkeypatch.setattr(SQ, "HIER_MIN_ROWS", 100)  # fixture is 500 rows
     got_h = {
         (r.vec_id, r.cell) for r in SQ._cell_assignments(spark, SF_SMOKE).collect()
     }
@@ -166,7 +162,7 @@ def test_auto_mode_threshold_switches_tier(spark, force_mode):
         for r in SQ.hierarchical_cells(spark, SF_SMOKE).collect()
     }
     assert got_h == want_h
-    spark.conf.set(SQ.HIER_MIN_ROWS_CONF, "1000000")
+    monkeypatch.setattr(SQ, "HIER_MIN_ROWS", 1_000_000)
     got_f = {
         (r.vec_id, r.cell) for r in SQ._cell_assignments(spark, SF_SMOKE).collect()
     }

@@ -100,7 +100,7 @@ def test_index_store_eviction_defers_rmtree(tmp_path, monkeypatch):
     """ADVICE r11: evicting a stored-index memo must NOT delete the
     published tempdir while the process lives — still-live lazy
     frames from a prior _index_store() call would fail with
-    path-not-found. Retirement parks the path; the atexit sweep
+    path-not-found. Publishing parks the path; the atexit sweep
     removes it."""
     from fin_trade_craft_spark.queries import corpus_build as CB
 
@@ -109,7 +109,9 @@ def test_index_store_eviction_defers_rmtree(tmp_path, monkeypatch):
     d = tmp_path / "corpus_index_store_test"
     d.mkdir()
     (d / "marker").write_text("x")
-    CB._release_index_store(str(d))
+    wh = CB.retire_at_exit(str(d))  # as _index_store does on publish
+    CB._INDEX_STORE_MEMO.put(("test", wh), wh, dataset=wh)
+    CB._INDEX_STORE_MEMO.release_dataset(wh)
     assert str(d) in CB._RETIRED_STORES
     assert d.exists(), "eviction must defer deletion, not rmtree now"
     CB._sweep_retired_stores()

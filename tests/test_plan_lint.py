@@ -195,8 +195,7 @@ CONSTRUCTION_JOBS_ALLOWED = {
     "source_mixture_weights": "per-source totals collect (pow chain on driver)",
     "mixture_epoch_expansion": "per-source totals collect (pow chain on driver)",
     "corpus_build": "dedup-ladder capstone: two component edge checkpoints + driver edge fetches + codebook training",
-    "corpus_build_ingest": "prior-manifest component loops + probe-kernel stage checkpoints",
-    "corpus_build_ingest_stored": "one-time index publish (the initial build) + batch stage checkpoints + codebook load",
+    "corpus_build_ingest": "one-time index publish (the initial build) + batch stage checkpoints + codebook load",
     "pagerank_copurchase": "per-iteration lineage cut (localCheckpoint)",
     "label_propagation_communities": "per-iteration lineage cut (localCheckpoint)",
     # quality_classifier_filter left this list in r09: it now applies
