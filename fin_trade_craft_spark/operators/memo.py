@@ -43,8 +43,7 @@ Memo capacity is 2 datasets by default: the scale-curve pattern
 dataset warm while the one before that releases. Evicting a value
 unpersists every DataFrame nested in it (dict / list / tuple);
 driver-side values (numpy codebooks, params) are simply dropped, and
-a memo may pass its own ``releaser`` (the corpus index store parks
-its tempdir).
+a memo may pass its own ``releaser``.
 
 Pin on first action: several sibling branches of ONE query reading a
 lazily persisted frame race to compute it before the cache fills,
